@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * substitute for the 5 layout shapes, no resident format built —
   * disk-frugal large-SF refreshes; publishes
   * `headline_total_12q_classic` and mirrors to `.classic`-suffixed
-  * files), SPARK_GRAFT_SHUFFLE_PARTITIONS (override the size-driven
-  * partition count for A/B experiments).
+  * files). The session is `GraftSession.builder`, the same one Verify
+  * checks against the oracle.
   *
   * Headline set = the 12 measured shapes in BASELINE.md, named identically
   * so BENCH_r{N}.json compares 1:1 against the DuckDB baseline, and
@@ -93,7 +93,7 @@ object Bench {
     * strategy AND q3's plan dispatch so retuning the threshold cannot
     * desynchronize them. */
   private def ordersBroadcastRegime(dir: String): Boolean =
-    layouts.LayoutUtil.pathBytes(s"$dir/orders.parquet") < (16L << 20)
+    layouts.LayoutUtil.pathBytes(s"$dir/orders.parquet") < GraftSession.BroadcastBytes
 
   private def sizedOrders(df: DataFrame, dir: String): DataFrame =
     if (ordersBroadcastRegime(dir)) broadcast(df)
@@ -281,7 +281,7 @@ object Bench {
   /** Keyed on the EVENTS file (the table this query reads), not orders:
     * event-heavy corpora scale the two independently. */
   private def eventsSmallRegime(dir: String): Boolean =
-    layouts.LayoutUtil.pathBytes(s"$dir/events.parquet") < (16L << 20)
+    layouts.LayoutUtil.pathBytes(s"$dir/events.parquet") < GraftSession.BroadcastBytes
 
   private[graft] def sessionize(s: SparkSession, dir: String): DataFrame =
     if (eventsSmallRegime(dir)) sessionizeClassic(s, dir)
@@ -375,74 +375,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions sized to DATA, not cores: at sf0.1 (~tens of MB)
-    // 32 partitions is pure task-scheduling overhead; one partition per
-    // ~32 MB, floored at 4 (the BASELINE.md comparator spec) and capped
-    // at the core count in the STATIC (small-SF) regime.
-    val dataBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.map(_.length).sum).getOrElse(0L)
-    // r8 NEGATIVE RESULTS, measured at sf24 and kept so nobody re-tries
-    // them: (a) uncapping the count at the data-driven 168 fixed asof's
-    // SMJ sort spill (12.2–15.3 → 9.5 s) but regressed five other shapes
-    // (q5 2.2 → 5.6 s: its 25 k-group partial-agg exchange wants FEW
-    // partitions) for a WORSE total (29.7 → 32.3 s); (b) AQE with a
-    // generous initial count (the "let the runtime size each exchange"
-    // posture) was worse still (39.5 s) — its re-planning barriers and
-    // the bucketed-scan interaction cost more than the coalescing saves
-    // at these run lengths. The static core-capped count stays; asof's
-    // sf24 spill is a known residual that both engines pay on this shape
-    // (DuckDB 2.7 → 17.9 s over the same doubling).
-    // The core cap holds in the CLASSIC (layout-free) regime too — r16
-    // re-asked r8's question there, at sf96, because the hypothesis was
-    // plausible (the r8 negative was measured with the LAYOUT q5, whose
-    // 25 k-group partial agg off an exchange-free SMJ wants few
-    // partitions; the classic twins are raw shuffle joins whose 32-way
-    // hash builds hit the unspillable "Can't acquire" wall at 24 GB
-    // heap). Measured A/B, one JVM per config, same warm corpus:
-    // data-driven 171 partitions bought q5_classic 72.6 → 66.1 s but
-    // cost every other row (q3_classic +5.2 s, each sub-3 s shape
-    // +0.3–1.1 s of task-scheduling) — total 137.9 → 144.0 s. The cap
-    // stays in both regimes; the 24 GB hash-build wall is a heap-sizing
-    // note (clean at 48 GB), not a partitioning bug. A real cluster
-    // gets its parallelism from executors×cores feeding the same
-    // formula, not from oversplitting one node.
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for A/B experiments.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val classicOnly = sys.env.contains("SPARK_GRAFT_CLASSIC_ONLY")
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt).getOrElse(
-        math.max(4, math.min(cpus.toInt, (dataBytes / (32L << 20)).toInt)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // NOTE: the testdata files are single-row-group parquet, so smaller
-      // file splits cannot parallelize the scan (measured: only overhead)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Sub-second queries at sf0.1 are dominated by AQE's per-shuffle
-      // re-planning barriers; with 4 static partitions there is nothing to
-      // adapt (and see the r8 negative result above for the large-SF case).
-      .config("spark.sql.adaptive.enabled", "false")
-      // size-driven join strategy: sides under 16 MB broadcast (orders at
-      // sf0.1 does, at sf1 it does not); above that, shuffled HASH join
-      // beats sort-merge at these scales (measured: 0.96 vs 1.40 s at sf1)
-      .config("spark.sql.autoBroadcastJoinThreshold", (16 * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // trust the bucketBy+sortBy order of the one-file-per-bucket layouts
-      // (Bucketed.ensure guarantees it; Spark re-verifies the file count):
-      // without this every co-located SMJ pays a per-query re-sort of both
-      // fact sides — measured 5+ s of SortExec at sf12 (jstack, r7)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // bucket PRUNING needs the bucketed scan to stay bucketed: the
-      // auto-bucketed-scan planner rule reads a bucketed table as plain
-      // files whenever no join/agg exploits the partitioning. (The
-      // MinHashIndex probe no longer depends on this — its r9 pruning
-      // selects bucket FILES driver-side and reads them as plain
-      // parquet — but the co-located SMJ family still does.) All
-      // bucketed layouts here are join-exploited, so the auto rule has
-      // nothing to win.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // the q5 headline reads the bucketed layouts — build them BEFORE the

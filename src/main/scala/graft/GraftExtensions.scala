@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   // or programmatically:
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   GraftSession.builder(cpus, dataDir).withExtensions(new GraftExtensions) ...
   *
   * A session built this way has the native SQL functions (`cosine_fast`,
   * `minhash_sig`, ...), both optimizer rules (RewriteCosine,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,26 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet  // optional: restrict to named queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same bucketed-scan ordering trust as the bench session, so the
-      // verified plan is the benched plan (safe: Bucketed.ensure writes
-      // one file per bucket and Spark re-checks the count at planning)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // bucket PRUNING needs the bucketed scan to stay bucketed: the
-      // auto-bucketed-scan planner rule reads a bucketed table as plain
-      // files whenever no join/agg exploits the partitioning. (The
-      // MinHashIndex probe no longer depends on this — its r9 pruning
-      // selects bucket FILES driver-side and reads them as plain
-      // parquet — but the co-located SMJ family still does.) All
-      // bucketed layouts here are join-exploited, so the auto rule has
-      // nothing to win.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the bench session (GraftSession), so the verified plan is the
+    // benched plan
+    val spark = GraftSession.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>

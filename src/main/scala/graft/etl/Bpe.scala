@@ -124,8 +124,8 @@ object Bpe {
     * collected, frequency-weighted type table. Same argmax and tie-break
     * (count desc, then (a, b) ascending in UTF-8 byte order) as the
     * distributed delta path — BpeSpec pins both against one reference. */
-  private[etl] def trainLocal(wf: Array[(String, Long)], nMerges: Int,
-      onRound: (Int, Double) => Unit): Seq[(String, String)] = {
+  private[etl] def trainLocal(wf: Array[(String, Long)],
+      nMerges: Int): Seq[(String, String)] = {
     // same symbol atomization as chars(): split-between-characters with
     // empties dropped (Java and Spark both split on the empty regex
     // without breaking surrogate pairs)
@@ -134,8 +134,7 @@ object Bpe {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val pairOrd = Ordering.Tuple2(utf8Ord, utf8Ord)
     var exhausted = false
-    for (round <- 1 to nMerges if !exhausted) {
-      val roundStart = System.nanoTime()
+    for (_ <- 1 to nMerges if !exhausted) {
       val counts = new java.util.HashMap[(String, String), Long]()
       segs.foreach { case (syms, c) =>
         var i = 0
@@ -155,14 +154,12 @@ object Bpe {
         merges += ((a, b))
         segs = segs.map { case (syms, c) => (mergeGreedy(syms, a, b), c) }
       }
-      onRound(round, (System.nanoTime() - roundStart) / 1e9)
     }
     merges.toSeq
   }
 
   def train(wordFreq: DataFrame, nMerges: Int,
-      deltaThreshold: Long = 100000L,
-      onRound: (Int, Double) => Unit = (_, _) => ()): Seq[(String, String)] = {
+      deltaThreshold: Long = 100000L): Seq[(String, String)] = {
     // size probe doubling as the small-table collect: ≤ threshold rows
     // come back whole (train on them driver-side), one row more proves
     // the table is delta-sized and the probe rows are discarded
@@ -171,7 +168,7 @@ object Bpe {
       .limit(probeCap + 1).collect()
     if (probe.length <= probeCap)
       return trainLocal(
-        probe.map(r => (r.getString(0), r.getLong(1))), nMerges, onRound)
+        probe.map(r => (r.getString(0), r.getLong(1))), nMerges)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var words = wordFreq.select(chars(col("w")).as("syms"), col("cnt")).localCheckpoint()
     // keep-width for the per-round union: filter(!hit) ∪ rewritten would
@@ -180,8 +177,7 @@ object Bpe {
     val width = words.rdd.getNumPartitions
     var counts = pairCounts(words, 1).localCheckpoint()
     var exhausted = false
-    for (round <- 1 to nMerges if !exhausted) {
-      val roundStart = System.nanoTime()
+    for (_ <- 1 to nMerges if !exhausted) {
       val best = counts
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
@@ -211,9 +207,6 @@ object Bpe {
             .unionByName(rewritten).coalesce(width).localCheckpoint()
         }
       }
-      // per-round wall clock to the observer (the endurance probe's hook —
-      // tools/BpeEndurance; a no-op by default)
-      onRound(round, (System.nanoTime() - roundStart) / 1e9)
     }
     merges.toSeq
   }

@@ -20,6 +20,12 @@ import org.apache.spark.sql.DataFrame
   * byte-identical to the pre-r18 `localCheckpoint` (StageCheckpointSpec
   * pins both paths and value equality).
   *
+  * Reliable checkpoint files are removed only when their DataFrame is
+  * garbage-collected AND the session sets
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, as
+  * `GraftSession.builder` does; a session built any other way must set
+  * it too, or every stage of every run stays in the checkpoint dir.
+  *
   * NEGATIVE RESULT (r18, recorded so it is not retried): a size-ESTIMATE
   * gate (`optimizedPlan.stats.sizeInBytes` under a threshold →
   * localCheckpoint, over → reliable/DISK_ONLY_2) was built first and

@@ -87,7 +87,7 @@ object IncrementalPrep {
 
     // 2. quality filter — the oracled formula, map-side
     val scored = b1.withColumn("q", TextOps.qualityFeatures(col("text")))
-    val b2 = scored.filter(col("q.quality") >= qualityMin).stageCheckpoint(eager = false)
+    val b2 = scored.filter(col("q.quality_raw") >= qualityMin).stageCheckpoint(eager = false)
 
     // 3. near-dup vs the corpus through the persisted index. probe()
     // checkpoints the candidate set itself; `pairs` feeds both the drop
@@ -165,7 +165,7 @@ object IncrementalPrep {
     val dropped =
       batch.join(exactKept, Seq("id"), "left_anti")
         .select(col("id"), lit("batch_exact_dup").as("stage"))
-      .unionByName(scored.filter(col("q.quality") < qualityMin)
+      .unionByName(scored.filter(col("q.quality_raw") < qualityMin)
         .select(col("id"), lit("low_quality").as("stage")))
       .unionByName(corpusDupIds
         .select(col("id"), lit("corpus_near_dup").as("stage")))

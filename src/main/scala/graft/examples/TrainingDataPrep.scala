@@ -70,8 +70,7 @@ object TrainingDataPrep {
       qualityMin: Double = 0.45, neardupThreshold: Double = 0.8,
       chunkDupMax: Double = 0.6,
       evalNgrams: Option[DataFrame] = None,
-      chunkContamMin: Double = 0.5,
-      onStage: (String, Double) => Unit = (_, _) => ()): Outputs = {
+      chunkContamMin: Double = 0.5): Outputs = {
     // The input is scanned by four consumers (exact-dedup groupBy, the s1
     // join, the corpus count, the dropped report) — cache it once, and
     // count it HERE so the fixture-construction joins a caller passes in
@@ -113,7 +112,7 @@ object TrainingDataPrep {
 
     // 2. quality filter — the oracled formula, map-side
     val scored = s1.withColumn("q", TextOps.qualityFeatures(col("text")))
-    val s2 = scored.filter(col("q.quality") >= qualityMin).stageCheckpoint(eager = false)
+    val s2 = scored.filter(col("q.quality_raw") >= qualityMin).stageCheckpoint(eager = false)
 
     // 3. near-dup removal on survivors: LSH candidates + exact Jaccard,
     // drop the larger id of each verified pair. A threshold past 1.0
@@ -201,15 +200,7 @@ object TrainingDataPrep {
     // exactly once; this is the op-60 materialization point made explicit,
     // and at 100 TB it is where a real pipeline would checkpoint stage
     // outputs to storage anyway.
-    // (`onStage` reports each stage's wall clock — the default is a no-op;
-    // tools.PrepProbe uses it to attribute the composite row's cost)
-    Seq("1_exact_dedup" -> s1, "2_quality" -> s2, "3_neardup_lsh" -> s3,
-      "4_chunk_boilerplate" -> s4, "5_decontaminate" -> s5).foreach {
-      case (name, df) =>
-        val t0 = System.nanoTime()
-        df.count()
-        onStage(name, (System.nanoTime() - t0) / 1e9)
-    }
+    Seq(s1, s2, s3, s4, s5).foreach(_.count())
 
     // 6. token accounting
     val kept = s5.select(
@@ -220,7 +211,7 @@ object TrainingDataPrep {
     val dropped =
       docs.join(exactKept, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), lit("exact_dup").as("stage"))
-      .unionByName(scored.filter(col("q.quality") < qualityMin)
+      .unionByName(scored.filter(col("q.quality_raw") < qualityMin)
         .select(col("doc_id"), lit("low_quality").as("stage")))
       .unionByName(s2.join(dupIds, "doc_id")
         .select(col("doc_id"), lit("near_dup").as("stage")))

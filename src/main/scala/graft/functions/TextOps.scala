@@ -27,7 +27,11 @@ object TextOps {
     * registry row (`llm_quality_score`) and the composed corpus-prep job
     * (`examples.TrainingDataPrep`), so the filter a pipeline applies is
     * bit-identical to the one the driver verifies. Returns a struct
-    * (n_tokens, stop_ratio, digit_ratio, quality); map-side only. */
+    * (n_tokens, stop_ratio, digit_ratio, quality, quality_raw); map-side
+    * only. `quality` is rounded to 6 places for reports; a threshold
+    * filter must compare `quality_raw`, the unrounded score the oracle
+    * filters on (rounding lifts scores in [0.4499995, 0.45) over a 0.45
+    * floor). */
   def qualityFeatures(text: Column): Column = {
     val stop = Seq("the", "a", "of", "and", "in", "to", "is")
     val words = split(normalize(text), " ")
@@ -36,13 +40,14 @@ object TextOps {
       size(filter(words, w => w.isin(stop.map(x => x: Any): _*))).cast("double") / nTok
     val digitRatio =
       regexp_count(text, lit("[0-9]")).cast("double") / length(text).cast("double")
+    val quality = lit(0.4) * stopRatio + lit(0.3) * least(nTok / 100.0, lit(1.0)) +
+      lit(0.3) * (lit(1.0) - digitRatio)
     struct(
       size(words).as("n_tokens"),
       round(stopRatio, 6).as("stop_ratio"),
       round(digitRatio, 6).as("digit_ratio"),
-      round(
-        lit(0.4) * stopRatio + lit(0.3) * least(nTok / 100.0, lit(1.0)) +
-          lit(0.3) * (lit(1.0) - digitRatio), 6).as("quality"))
+      round(quality, 6).as("quality"),
+      quality.as("quality_raw"))
   }
 
   /** lower + collapse whitespace + trim: the canonical dedup normalization. */

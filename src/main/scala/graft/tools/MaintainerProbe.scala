@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.layouts.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,12 +56,9 @@ object MaintainerProbe {
 
   private val specName = "mprobe"
 
-  private def session(root: String, staleMs: Long): SparkSession =
-    SparkSession.builder()
+  private def session(root: String, sfDir: String, staleMs: Long): SparkSession =
+    GraftSession.builder(4, sfDir)
       .appName(s"graft-maintainer-probe-${ProcessHandle.current().pid()}")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
       .config("spark.graft.layout.root", root)
       .config("spark.graft.layout.leaseStaleMs", staleMs.toString)
       // MPROBE_WAIT_MS > 0 turns lease contention into parking (the
@@ -94,7 +91,7 @@ object MaintainerProbe {
     val root = args(1)
     val sfDir = args(2)
     val staleMs = sys.env.getOrElse("MPROBE_STALE_MS", "60000").toLong
-    val s = session(root, staleMs)
+    val s = session(root, sfDir, staleMs)
     val pid = ProcessHandle.current().pid()
     mode match {
       case "prepare" =>

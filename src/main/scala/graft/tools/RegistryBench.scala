@@ -1,13 +1,12 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Per-query wall-clock for EVERY registry query at an arbitrary scale
-  * factor — the round-2 verdict's item 8: "the 94-query sweep is where a
-  * regression would hide". Same session conf + count() methodology as
-  * graft.Bench; one warmup then min of 2 (the registry is 95 queries — a
-  * third run would double-digit-minutes the sweep for ~noise gain).
+  * factor — the 94-query sweep is where a regression would hide. Same
+  * session (GraftSession) + count() methodology as graft.Bench; one
+  * warmup then min of 2 (the registry is 95 queries — a third run would
+  * double-digit-minutes the sweep for ~noise gain).
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.RegistryBench [prefix...]
   * Optional args are query-name prefixes (e.g. `llm_` for the text/vector
@@ -19,20 +18,8 @@ object RegistryBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val dataBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.map(_.length).sum).getOrElse(0L)
-    val shufflePartitions =
-      math.max(4, math.min(cpus.toInt, (dataBytes / (32L << 20)).toInt))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (16 * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val selected =

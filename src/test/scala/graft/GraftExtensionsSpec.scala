@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * strategy with NO graft code called first — the cluster-deploy path.
   *
   * The suite builds a dedicated session (sharing the test JVM's
-  * SparkContext) via builder().withExtensions, which is exactly what the
-  * `spark.sql.extensions=graft.GraftExtensions` config does at session
-  * construction.
+  * SparkContext) via GraftSession.builder(...).withExtensions, which is
+  * exactly what the `spark.sql.extensions=graft.GraftExtensions` config
+  * does at session construction.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -26,11 +26,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+      val s = GraftSession.builder(SparkTestBase.cpus, SparkTestBase.dataDir)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s ne prior, "must be a NEW session, not the shared one")

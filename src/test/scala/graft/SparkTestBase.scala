@@ -4,33 +4,19 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (spark_guide.md: one session per
   * suite via lazy val; sharing across suites in the forked test JVM keeps
-  * `sbt test` fast). */
+  * `sbt test` fast). Built by `GraftSession.builder`, so the suites run
+  * the plans the bench times; a case that needs another setting sets it
+  * inside the case and restores it. */
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.session
 }
 
 object SparkTestBase {
+  val cpus = 4
+  val dataDir = "/root/testdata/sf0.01"
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // trust bucketBy+sortBy sort order on single-file-per-bucket scans
-      // (Bucketed.ensure guarantees one file per bucket; Spark still
-      // verifies the file count before reporting the ordering) — without
-      // it every co-located SMJ re-sorts both sides per query
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // bucket PRUNING needs the bucketed scan to stay bucketed: the
-      // auto-bucketed-scan planner rule reads a bucketed table as plain
-      // files whenever no join/agg exploits the partitioning. (The
-      // MinHashIndex probe no longer depends on this — its r9 pruning
-      // selects bucket FILES driver-side and reads them as plain
-      // parquet — but the co-located SMJ family still does.) All
-      // bucketed layouts here are join-exploited, so the auto rule has
-      // nothing to win.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(cpus, dataDir).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

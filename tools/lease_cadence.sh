@@ -1,6 +1,6 @@
 #!/bin/bash
 # Cross-process lease CADENCE evidence (r12 verdict item 7): the single-JVM
-# endurance run (tools.AppendEnduranceProbe, CROSSOVER.md r11/r12) showed the
+# endurance run (CROSSOVER.md, "Round 11: a month of nights") showed the
 # append cadence stays flat over 32 nightly cycles; this runs the same
 # question at the lease machinery's actual deployment shape — two REAL JVMs
 # (plain `java -cp`, no sbt) sharing one layout warehouse, each driving N
