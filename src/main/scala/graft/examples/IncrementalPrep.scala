@@ -25,24 +25,30 @@ import org.apache.spark.sql.functions._
   *      read), and exact Jaccard verifies candidates against only the
   *      touched reps' texts. Any batch doc with a verified corpus match
   *      ≥ threshold is dropped — the corpus copy wins (arrival order).
-  *   4. Near-dup WITHIN the batch (TextDedup.minhashPairs on the
-  *      survivors — batch×batch is batch-sized, so the full banded pass
-  *      is cheap here): of each verified pair the larger id dies.
+  *   4. Near-dup WITHIN the batch ([[MinHashIndex.batchRepPairs]]: the
+  *      probe's own band rows of the survivors, self-joined on the band
+  *      key and verified by exact Jaccard — TextDedup.minhashPairs'
+  *      pairs without a second signature pass): of each verified pair
+  *      the larger id dies ([[MinHashIndex.keepFirst]]).
   *   5. Decontamination (optional): doc-level eval-shingle concentration
   *      ≥ contamMin against a BROADCAST benchmark n-gram set — the
   *      llm_decontaminate rule; batches are short-horizon so the doc-
   *      level form is the right default (the chunk-level rule remains
   *      available via TrainingDataPrep for full rebuilds).
-  *   6. `append = true` folds the kept docs into the index
-  *      ([[MinHashIndex.append]], crash-safe marker protocol), closing
-  *      the ingest loop: the NEXT batch's probe sees corpus ∪ kept.
+  *   6. `append = true` folds the kept docs into the index — their
+  *      band rows from the same probe, under [[MinHashIndex.append]]'s
+  *      crash-safe marker protocol — closing the ingest loop: the NEXT
+  *      batch's probe sees corpus ∪ kept.
   *
-  * At 100 TB the corpus index is the only corpus-sized artifact touched,
+  * The batch's MinHash signatures are computed once, in the probe. At
+  * 100 TB the corpus index is the only corpus-sized artifact touched,
   * and only through its bucketed probe path — the nightly cost tracks
-  * the batch, which is the design the IncrementalProbe series measures
-  * (flat probe cost across a 4× corpus at fixed batch).
+  * the batch (earlier rounds' incremental probes measured a flat probe
+  * cost across a 4× corpus at fixed batch).
   *
-  * Outputs: `kept` (surviving batch rows), `dropped` (id, stage), and
+  * Outputs: `kept` (surviving batch rows), `dropped` (id, stage: the
+  * first stage whose output lacks the id — every batch id is in exactly
+  * one of `kept` and `dropped`), and
   * `attrition` — one row per stage with docs in/out and surviving token
   * volume, the same report shape as [[TrainingDataPrep]].
   */
@@ -65,8 +71,8 @@ object IncrementalPrep {
       autoCompactAt: Int = 0,
       batchTag: Option[String] = None): Outputs = {
     graft.functions.GraftFunctions.register(s)
-    // scanned by three consumers (stage-1 groupBy, the b1 join, the
-    // dropped report) — cache once, count eagerly (fills the cache)
+    // scanned by two consumers (stage-1 groupBy, the dropped report) —
+    // cache once, count eagerly (fills the cache)
     val batch = batchIn.select(col("id"), col("text")).cache()
     val nBatch = batch.count()
 
@@ -75,10 +81,10 @@ object IncrementalPrep {
     // full upstream pipeline several times over and Catalyst re-analyzes
     // the whole tree per downstream action
 
-    // 1. within-batch exact dedup on the raw text
-    val exactKept = batch.groupBy(col("text"))
-      .agg(min(col("id")).as("id")).select("id")
-    val b1 = batch.join(exactKept, "id")
+    // 1. within-batch exact dedup on the raw text: one aggregate keeps
+    // the min id per text
+    val b1 = batch.groupBy(col("text")).agg(min(col("id")).as("id"))
+      .select(col("id"), col("text"))
       // per-doc token count once, carried through every stage subset —
       // the attrition report reuses it (the TrainingDataPrep r17 rule)
       .withColumn("tok",
@@ -86,32 +92,33 @@ object IncrementalPrep {
       .stageCheckpoint(eager = false)
 
     // 2. quality filter — the oracled formula, map-side
-    val scored = b1.withColumn("q", TextOps.qualityFeatures(col("text")))
-    val b2 = scored.filter(col("q.quality_raw") >= qualityMin).stageCheckpoint(eager = false)
+    val b2 = b1.withColumn("q", TextOps.qualityFeatures(col("text")))
+      .filter(col("q.quality_raw") >= qualityMin).stageCheckpoint(eager = false)
 
-    // 3. near-dup vs the corpus through the persisted index. probe()
-    // checkpoints the candidate set itself; `pairs` feeds both the drop
-    // and (optionally) the append's exact-dup filter.
-    val (pairs, bReps) = MinHashIndex.probe(
+    // 3. near-dup vs the corpus through the persisted index. The probe
+    // signs the batch once; its band rows serve stage 4 and the append.
+    val probed = MinHashIndex.probeBatch(
       s, bandsTable, repsTable, b2.select(col("id"), col("text")),
       shingleWords, nHashes, nBands, rowsPerBand, threshold)
-    val pairsCk = pairs.stageCheckpoint(eager = false)
-    // member expansion: batch ids → their dedup-group rep via the norm
-    val bMembers = b2.withColumn("norm", TextOps.normalize(col("text")))
-      .join(bReps.withColumnRenamed("rep", "brep"), "norm")
-      .select(col("brep"), col("id"))
-    val corpusDupIds = bMembers
-      .join(pairsCk.select(col("brep")).distinct(), "brep")
-      .select("id").distinct()
-    val b3 = b2.join(corpusDupIds, Seq("id"), "left_anti").stageCheckpoint(eager = false)
+    // reps with a verified corpus match, held driver-side: a subset of
+    // the candidate set the probe already collected (within its driver
+    // bound), and both consumers below join it without a build job
+    val corpusDupReps = driverHeld(s, probed.pairs.select(col("brep")).distinct())
+    // member expansion: each batch doc carries its dedup-group rep
+    // (joined on the norm) through the later stages
+    val b3 = b2.withColumn("norm", TextOps.normalize(col("text")))
+      .join(probed.bReps.withColumnRenamed("rep", "brep"), "norm")
+      .join(corpusDupReps, Seq("brep"), "left_anti")
+      .select(col("id"), col("text"), col("tok"), col("q"), col("brep"))
+      .stageCheckpoint(eager = false)
 
-    // 4. near-dup within the batch: drop the larger id of each verified
-    // pair (keep-first — TrainingDataPrep stage-3 semantics)
-    val batchDupIds = graft.etl.TextDedup.minhashPairs(
-        b3.select(col("id"), col("text")),
-        shingleWords, nHashes, nBands, rowsPerBand, threshold)
-      .select(col("doc_b").as("id")).distinct()
-    val b4 = b3.join(batchDupIds, Seq("id"), "left_anti").stageCheckpoint(eager = false)
+    // 4. near-dup within the batch over the groups that survived stage 3,
+    // from the probe's band rows: keep-first — of each verified pair the
+    // larger id dies (TrainingDataPrep stage-3 semantics)
+    val batchPairs = MinHashIndex.batchRepPairs(
+      probed.bBands.join(corpusDupReps, Seq("brep"), "left_anti"),
+      probed.bReps, shingleWords, threshold)
+    val b4 = MinHashIndex.keepFirst(b3, batchPairs).stageCheckpoint(eager = false)
 
     // 5. doc-level decontamination: shingle set materialized BELOW the
     // explode (the llm_decontaminate_chunks plan lessons: size(f(x))
@@ -137,18 +144,21 @@ object IncrementalPrep {
     // report's union branches must never race to fill a shared cache)
     Seq(b1, b2, b3, b4, b5).foreach(_.count())
 
-    // 6. fold the kept docs into the index: reps of the surviving norms
-    // (append's jaccard-1.0 filter is a no-op here — stage 3 already
-    // dropped every batch doc with ANY corpus match ≥ threshold).
-    // `batchTag` makes the fold EXACTLY-ONCE: a retried nightly run
-    // (scheduler re-fire, crash after commit) is a no-op instead of
-    // double-indexing the batch (MinHashIndex.append's stamp contract).
+    // 6. fold the kept docs into the index with their band rows from the
+    // probe — no signature pass. Every kept rep is fresh (stage 3
+    // already dropped every batch doc with ANY corpus match ≥ threshold,
+    // so append's jaccard-1.0 filter has nothing to remove). `batchTag`
+    // makes the fold EXACTLY-ONCE: a retried nightly run (scheduler
+    // re-fire, crash after commit) is a no-op instead of double-indexing
+    // the batch (MinHashIndex.append's stamp contract).
     if (append) {
-      val keptReps = b5.withColumn("norm", TextOps.normalize(col("text")))
-        .select(col("norm")).distinct()
-        .join(bReps, "norm").select(col("rep"), col("norm"))
-      MinHashIndex.append(s, bandsTable, repsTable, pairsCk, keptReps,
-        shingleWords, nHashes, nBands, rowsPerBand, batchTag)
+      // b5 holds one doc per group, its rep (stage 4 keeps only reps)
+      val keptReps = b5.select(col("id").as("rep"),
+        TextOps.normalize(col("text")).as("norm"))
+      val keptBands = keptReps.select(col("rep"))
+        .join(broadcast(probed.bBands.withColumnRenamed("brep", "rep")), "rep")
+        .select(col("bkey64"), col("rep"))
+      MinHashIndex.appendRows(s, bandsTable, repsTable, keptBands, keptReps, batchTag)
       // index MAINTENANCE on the caller's cadence: every append adds a
       // file per touched bucket, so a nightly job compacts periodically
       // to keep the probe's per-bucket file count bounded. Placement-only
@@ -162,23 +172,28 @@ object IncrementalPrep {
         MinHashIndex.compactIfFragmented(s, bandsTable, repsTable, autoCompactAt)
     }
 
-    val dropped =
-      batch.join(exactKept, Seq("id"), "left_anti")
-        .select(col("id"), lit("batch_exact_dup").as("stage"))
-      .unionByName(scored.filter(col("q.quality_raw") < qualityMin)
-        .select(col("id"), lit("low_quality").as("stage")))
-      .unionByName(corpusDupIds
-        .select(col("id"), lit("corpus_near_dup").as("stage")))
-      .unionByName(batchDupIds
-        .select(col("id"), lit("batch_near_dup").as("stage")))
-      .unionByName(contamIds
-        .select(col("id"), lit("decontaminated").as("stage")))
+    // each stage's drops are the ids its checkpoint lost against the
+    // previous one: anti-joins of materialized stages, no stage re-runs
+    val dropped = Seq(
+        (batch, b1, "batch_exact_dup"), (b1, b2, "low_quality"),
+        (b2, b3, "corpus_near_dup"), (b3, b4, "batch_near_dup"),
+        (b4, b5, "decontaminated"))
+      .map { case (before, after, stage) =>
+        before.select(col("id")).join(after.select(col("id")), Seq("id"), "left_anti")
+          .select(col("id"), lit(stage).as("stage"))
+      }
+      .reduce(_ unionByName _)
 
     val attrition = TrainingDataPrep.attritionReport(nBatch, Seq(
       ("batch_exact_dedup", 1, b1), ("quality_filter", 2, b2.drop("q")),
       ("corpus_neardup", 3, b3.drop("q")), ("batch_neardup", 4, b4.drop("q")),
       ("decontaminate", 5, b5.drop("q"))))
 
-    Outputs(b5.drop("q", "tok"), dropped, attrition)
+    Outputs(b5.select(col("id"), col("text")), dropped, attrition)
   }
+
+  /** `df`, collected and re-wrapped as a LocalRelation: a join against it
+    * broadcasts from the driver without a build job. */
+  private def driverHeld(s: SparkSession, df: DataFrame): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * dots and `codes` a row's PQ code array.
   *
   * Why an expression and not the `element_at(typedlit)` composition it
-  * replaces (both measured at 2 M rows, m=16 — tools.AdcAb,
-  * CROSSOVER.md r13): under a bare aggregate the composition holds
+  * replaces (both measured at 2 M rows, m=16 in the r13 A/B,
+  * CROSSOVER.md): under a bare aggregate the composition holds
   * whole-stage codegen and the win is modest (0.28 → 0.24 µs/row,
   * 1.16×), but the m-chained node tree sits near the codegen-collapse
   * threshold — composed under even ONE more expression

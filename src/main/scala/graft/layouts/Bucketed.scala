@@ -143,9 +143,14 @@ object Bucketed {
     * shuffle-partition sizing uses. The count participates in the ensure()
     * cache tag, so a dir re-laid-out under a different count can never be
     * served a stale mixed layout. */
-  def defaultBuckets(dir: String, table: String = "lineitem"): Int = {
-    val fact = LayoutUtil.pathBytes(s"$dir/$table.parquet")
-    val want = math.max(8L, fact / (32L << 20))
+  def defaultBuckets(dir: String, table: String = "lineitem"): Int =
+    defaultBuckets(dir, Seq(table))
+
+  /** The same rule over the summed bytes of several source tables (a
+    * layout derived from more than one table, e.g. a MinHash index). */
+  def defaultBuckets(dir: String, tables: Seq[String]): Int = {
+    val bytes = tables.map(t => LayoutUtil.pathBytes(s"$dir/$t.parquet")).sum
+    val want = math.max(8L, bytes / (32L << 20))
     Integer.highestOneBit(math.min(want, 1024L).toInt) match {
       case b if b.toLong < want => b * 2
       case b => b
@@ -252,8 +257,8 @@ object Bucketed {
     * driver-resident (KB-scale by contract) maps keys to bucket ids and
     * reads ONLY these files as plain parquet — file-level pruning
     * WITHOUT the per-row InSet filter the engine's own bucket pruning
-    * inserts (measured ~10× the plain decode per surviving row —
-    * tools.PruneAB, the r8/r9 negative result). Multi-file buckets
+    * inserts (measured ~10× the plain decode per surviving row in the
+    * r8/r9 A/B rounds, a negative result). Multi-file buckets
     * (appends before compaction) group under one id. The listing is
     * served from [[listedBuckets]] when the layout's completion marker
     * is unchanged, so repeated probes of a quiescent index pay one

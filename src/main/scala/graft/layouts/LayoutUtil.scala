@@ -129,13 +129,34 @@ object LayoutUtil {
       s.sparkContext.getConf
         .get("spark.sql.catalogImplementation", "in-memory") == "in-memory"
 
+    /** Bumped by every [[forget]]: a load that overlapped one may have
+      * read the catalog before the DDL, so it is returned but not stored. */
+    private val forgets = new java.util.concurrent.atomic.AtomicLong
+
+    /** The loader runs OUTSIDE the map's lock (get, compute, then
+      * `putIfAbsent`): inside `computeIfAbsent` a slow catalog call would
+      * block every other key of its hash bin. Two racing misses may both
+      * load; the first stored value wins and both return it. */
     def getOrCompute(s: org.apache.spark.sql.SparkSession, key: String)(f: => V): V =
       if (!inMemoryCatalog(s)) f
-      else byContext.computeIfAbsent(s.sparkContext,
+      else {
+        val m = byContext.computeIfAbsent(s.sparkContext,
           _ => new java.util.concurrent.ConcurrentHashMap[String, V]())
-        .computeIfAbsent(key, _ => f)
+        val hit = m.get(key)
+        if (hit != null) hit
+        else {
+          val seen = forgets.get
+          val v = f
+          if (forgets.get != seen) v
+          else {
+            val prior = m.putIfAbsent(key, v)
+            if (prior != null) prior else v
+          }
+        }
+      }
 
     def forget(s: org.apache.spark.sql.SparkSession, key: String): Unit = {
+      forgets.incrementAndGet()
       val m = byContext.get(s.sparkContext)
       if (m != null) { m.remove(key); () }
     }

@@ -89,17 +89,6 @@ object MinHashIndex {
         col("rep"))
       .withColumn("bkey64", xxhash64(col("bkey")))
 
-  /** Default bucket count for index tables. Larger than the fact
-    * layouts' floor because the BANDS table is also the probe's PRUNING
-    * unit (see [[probe]]): a batch's band keys select bucket FILES, and
-    * the expected selected count is B·(1 − e^(−keys/B)) — pruning bites
-    * exactly when distinct batch keys < bucket count, so a 100 TB index
-    * wants buckets sized to corpus_bands/rows_per_file (millions of
-    * files), probed by KB-scale batches. Writers that need a different
-    * count pass it to [[ensure]]; [[append]] reads the registered
-    * table's own count so appended files can never break the spec. */
-  val Buckets = 64
-
   /** Probe-side pruning cap: past this many distinct batch keys the
     * driver collect feeding the file-pruned scan stops being KB-scale and
     * the keys touch every bucket anyway — scan everything. */
@@ -138,8 +127,8 @@ object MinHashIndex {
     * bucket(k)'s files, so unselected files cannot hold a match, and
     * selected files' non-matching rows die in the join probe (~12
     * ns/row) — NOT in a per-row InSet filter, whose ~78 ns/row cost
-    * (tools.PruneAB: scan 0.16 → 1.51 s, join 0.59 → 2.85 s at 4.9 k
-    * keys on sf24t) made the r8 row-filter form a measured LOSS whenever
+    * (measured in an r9 A/B: scan 0.16 → 1.51 s, join 0.59 → 2.85 s at
+    * 4.9 k keys on sf24t) made the r8 row-filter form a measured LOSS whenever
     * keys touched a meaningful file fraction — that negative result is
     * why this is FILE-list pruning with no residual filter, which wins
     * whenever ANY file goes unread (condition: touched < total, vs the
@@ -190,6 +179,20 @@ object MinHashIndex {
   /** Ensure the index layout exists; returns (bandsTable, repsTable)
     * fully qualified for `spark.table`.
     *
+    * `buckets` ≤ 0 (the default) sizes both tables by the fact layouts'
+    * rule over the `srcTables` bytes ([[Bucketed.defaultBuckets]]: one
+    * bucket per ~32 MB, a power of two, at least 8). The BANDS table is
+    * also the probe's PRUNING unit (see [[probe]]): a batch's band keys
+    * select bucket FILES, and the expected selected count is
+    * B·(1 − e^(−keys/B)), so pruning bites only when a batch's distinct
+    * keys are fewer than the buckets. A 20-doc probe carries ~320 band
+    * keys (16 bands × 20 reps), which touch ~63.6 of 64 buckets: the
+    * former fixed 64 pruned nothing at sf0.1, yet made every probe, append
+    * and compaction open 64 files per table. Sized by bytes, the sf0.1
+    * index has 8 buckets and the same probe reads 8 files per table; the
+    * count grows with the corpus, where corpus buckets outnumber a
+    * batch's keys and the file-pruned scan skips buckets again.
+    *
     * `tag` must encode the corpus DEFINITION, not just its sources:
     * Bucketed.ensure's cache signature covers the source tables' bytes
     * and the spec's name/key/schema, but NOT the filter that selected
@@ -197,12 +200,13 @@ object MinHashIndex {
     * same table under one tag would silently share a layout. */
   def ensure(s: SparkSession, dir: String, corpus: DataFrame, tag: String,
       shingleWords: Int, nHashes: Int, nBands: Int, rowsPerBand: Int,
-      srcTables: Seq[String], buckets: Int = Buckets): (String, String) = {
+      srcTables: Seq[String], buckets: Int = 0): (String, String) = {
     val (bands, reps) = bandRows(corpus, shingleWords, nHashes, nBands, rowsPerBand)
+    val n = if (buckets > 0) buckets else Bucketed.defaultBuckets(dir, srcTables)
     val Seq(b, r) = Bucketed.ensure(s, dir, Seq(
       Bucketed.Spec(s"mhidx_${tag}_bands", bands.select(col("bkey64"), col("rep")),
         "bkey64", srcTables),
-      Bucketed.Spec(s"mhidx_${tag}_reps", reps, "rep", srcTables)), buckets)
+      Bucketed.Spec(s"mhidx_${tag}_reps", reps, "rep", srcTables)), n)
     (b, r)
   }
 
@@ -223,6 +227,16 @@ object MinHashIndex {
     * it driver-side merges the key-collect and checkpoint actions the
     * r17 shape paid separately.
     *
+    * DRIVER BOUND: both collects are unbounded. The band collect holds
+    * batch reps × bands rows. The candidate collect holds one row per
+    * distinct (batch rep, indexed rep) pair sharing a band key — batch
+    * reps × the band keys' fan-out into the index, which a band-key hot
+    * spot (many indexed reps with one band slice) can make corpus-sized.
+    * `spark.driver.maxResultSize` is the only backstop: past it the probe
+    * fails loudly rather than degrading. A cap with a distributed
+    * fallback is open work (ROADMAP D); a `limit(cap + 1)` guard would add
+    * `executeTake` jobs to every probe.
+    *
     * CONCURRENCY CONTRACT (r9 ADVICE): the file-pruned scan captures the
     * bucket FILE LIST driver-side and reads those paths as plain parquet,
     * so an [[append]] or [[compact]] racing the probe in the same session
@@ -236,6 +250,21 @@ object MinHashIndex {
   def probe(s: SparkSession, bandsTable: String, repsTable: String,
       batch: DataFrame, shingleWords: Int, nHashes: Int, nBands: Int,
       rowsPerBand: Int, threshold: Double): (DataFrame, DataFrame) = {
+    val p = probeBatch(s, bandsTable, repsTable, batch, shingleWords, nHashes,
+      nBands, rowsPerBand, threshold)
+    (p.pairs, p.bReps)
+  }
+
+  /** A probe's result: the public (`pairs`, `bReps`) of [[probe]] plus the
+    * batch's band rows `bBands` (bkey64, brep), which the probe already
+    * holds driver-side — a LocalRelation, so reusing it runs no job and
+    * no second signature pass ([[batchRepPairs]], [[appendRows]]). */
+  private[graft] final case class Probed(pairs: DataFrame, bReps: DataFrame,
+      bBands: DataFrame)
+
+  private[graft] def probeBatch(s: SparkSession, bandsTable: String,
+      repsTable: String, batch: DataFrame, shingleWords: Int, nHashes: Int,
+      nBands: Int, rowsPerBand: Int, threshold: Double): Probed = {
     lastProbeStats = None // cleared FIRST: no failure below — including
     // the lease refusal — may expose the previous probe's stats
     // ENFORCE the concurrency contract above instead of only stating
@@ -259,18 +288,14 @@ object MinHashIndex {
     val bReps = repRows(batch).stageCheckpoint()
     // FILE-PRUNED band scan (r9, the r8 verdict's item 3, sharpened):
     // the probe's residual corpus-linear term was the full band-table
-    // scan. The batch's band rows are KB–MB by the fixed-batch contract
-    // — the pre-r18 shape already pulled every band row to the driver
-    // (inside the broadcast build) and every candidate pair into a
-    // localCheckpoint + a broadcast, so collecting both HERE adds no new
-    // driver exposure (spark.driver.maxResultSize stays the loud
-    // backstop) and merges four probe-internal actions into two: the
-    // band collect yields the distinct prune keys AND the join's build
-    // side (a LocalRelation broadcast builds driver-side, no job), and
-    // the candidate collect yields the rep prune keys AND both verify
-    // joins' build side. Bands derive MAP-SIDE from the checkpointed rep
-    // table, so the signature pass runs exactly once. See [[prunedScan]]
-    // for the file-list pruning derivation and exactness argument.
+    // scan. Collecting here merges four probe-internal actions into two
+    // (driver bound: see the scaladoc): the band collect yields the
+    // distinct prune keys AND the join's build side (a LocalRelation
+    // broadcast builds driver-side, no job), and the candidate collect
+    // yields the rep prune keys AND both verify joins' build side. Bands
+    // derive MAP-SIDE from the checkpointed rep table, so the signature
+    // pass runs exactly once. See [[prunedScan]] for the file-list
+    // pruning derivation and exactness argument.
     val localBands = bandsOfReps(bReps, shingleWords, nHashes, nBands, rowsPerBand)
       .select(col("bkey64"), col("rep").as("brep"))
       .collect()
@@ -323,8 +348,39 @@ object MinHashIndex {
       .withColumn("jaccard", expr("jaccard_sim(bsh, csh)"))
       .filter(col("jaccard") >= threshold)
       .select(col("brep"), col("crep"), col("jaccard"))
-    (pairs, bReps)
+    Probed(pairs, bReps, bBands)
   }
+
+  /** Within-batch near-dup pairs of dedup-group reps, from a probe's band
+    * rows: reps sharing a band key are candidates, kept at exact shingle
+    * Jaccard ≥ `threshold` — (a, b, jaccard) with a < b. `bands` (bkey64,
+    * brep) is a [[Probed]]'s `bBands`, or the subset of reps to pair;
+    * `reps` (rep, norm) its `bReps`. These are the rep-to-rep pairs of
+    * [[graft.etl.TextDedup.minhashPairs]] over the same docs, without its
+    * second signature pass (DedupSpec pins the two). */
+  private[graft] def batchRepPairs(bands: DataFrame, reps: DataFrame,
+      shingleWords: Int, threshold: Double): DataFrame = {
+    val cand = bands.select(col("bkey64"), col("brep").as("a"))
+      .join(bands.select(col("bkey64"), col("brep").as("b")), "bkey64")
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b")).distinct()
+    def shingles(side: String) = reps.select(col("rep").as(side),
+      expr(s"word_shingles(norm, $shingleWords)").as(s"sh_$side"))
+    cand.join(shingles("a"), "a").join(shingles("b"), "b")
+      .select(col("a"), col("b"), expr("jaccard_sim(sh_a, sh_b)").as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** Keep-first within-batch dedup: of `docs` (id, brep, …: whole dedup
+    * groups, `brep` the group's min id), keep each group's rep unless a
+    * [[batchRepPairs]] pair names it as the larger rep. These are exactly
+    * the docs that are never the larger id (`doc_b`) of a
+    * TextDedup.minhashPairs pair: members pair with their rep at 1.0, and
+    * every member of a pair's larger group is above the smaller rep. */
+  private[graft] def keepFirst(docs: DataFrame, repPairs: DataFrame): DataFrame =
+    docs.filter(col("id") === col("brep"))
+      .join(repPairs.select(col("b").as("brep")).distinct(), Seq("brep"), "left_anti")
+      .select(docs.columns.map(col): _*)
 
   /** INDEX MAINTENANCE: fold a probed batch into the index so the NEXT
     * batch dedups against corpus ∪ batch — the ingest lifecycle (the
@@ -333,7 +389,7 @@ object MinHashIndex {
     * rep (a probe pair at jaccard 1.0 means the identical shingle set
     * is already represented — re-indexing it would only duplicate its
     * band rows). Appended files preserve the tables' bucketing spec
-    * (same [[Buckets]] count and keys); multi-file buckets keep the
+    * (the registered tables' bucket counts and keys); multi-file buckets keep the
     * CLUSTERING the probe join rides (Spark just stops reporting
     * per-bucket sort order, which the probe never needed).
     *
@@ -354,6 +410,23 @@ object MinHashIndex {
       probePairs: DataFrame, batchReps: DataFrame,
       shingleWords: Int, nHashes: Int, nBands: Int, rowsPerBand: Int,
       batchTag: Option[String] = None): Boolean = {
+    val exactDup = probePairs.filter(col("jaccard") === 1.0)
+      .select(col("brep").as("rep")).distinct()
+    val fresh = batchReps.join(exactDup, Seq("rep"), "left_anti")
+      .select(col("rep").as("id"), col("norm").as("text"))
+    val (bands, reps) = bandRows(fresh, shingleWords, nHashes, nBands, rowsPerBand)
+    appendRows(s, bandsTable, repsTable, bands.select(col("bkey64"), col("rep")),
+      reps, batchTag)
+  }
+
+  /** The write half of [[append]]: fold ready index rows — `bands`
+    * (bkey64, rep) and `reps` (rep, norm) — into the index under the same
+    * exactly-once stamp and crash-safe marker protocol. For a caller that
+    * already holds the batch's band rows (a [[Probed]]'s `bBands`), so the
+    * append pays no signature pass. Returns whether the append ran. */
+  private[graft] def appendRows(s: SparkSession, bandsTable: String,
+      repsTable: String, bands: DataFrame, reps: DataFrame,
+      batchTag: Option[String]): Boolean = {
     val family = Seq(bandsTable, repsTable)
     // fast path; a transient mixed reading (concurrent winner between
     // stamp touches) defers to the under-lease re-check — the
@@ -362,11 +435,6 @@ object MinHashIndex {
       try batchTag.exists(Bucketed.familyApplied(s, family, _))
       catch { case _: IllegalStateException => false }
     if (appliedFast) return false
-    val exactDup = probePairs.filter(col("jaccard") === 1.0)
-      .select(col("brep").as("rep")).distinct()
-    val fresh = batchReps.join(exactDup, Seq("rep"), "left_anti")
-      .select(col("rep").as("id"), col("norm").as("text"))
-    val (bands, reps) = bandRows(fresh, shingleWords, nHashes, nBands, rowsPerBand)
     // Crash-safe (r8 ADVICE): the two appends must land together or not
     // at all — markers down, write both, markers up; see
     // Bucketed.appendGuard for the torn-append recovery contract.
@@ -381,8 +449,7 @@ object MinHashIndex {
     // the family still certified
     Bucketed.appendGuardIf(s, family)(
       () => !batchTag.exists(Bucketed.familyApplied(s, family, _))) {
-      bands.select(col("bkey64"), col("rep"))
-        .write.mode("append").bucketBy(bandB, "bkey64").sortBy("bkey64")
+      bands.write.mode("append").bucketBy(bandB, "bkey64").sortBy("bkey64")
         .saveAsTable(bandsTable)
       reps.write.mode("append").bucketBy(repB, "rep").sortBy("rep")
         .saveAsTable(repsTable)

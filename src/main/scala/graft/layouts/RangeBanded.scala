@@ -151,8 +151,8 @@ object RangeBanded {
     * 1024 means a window ~1000× the band width — a layout-choice error,
     * not a workload).
     *
-    * REBUILD vs FAN-OUT, measured (tools.WideWindowProbe at sf12, 12 M
-    * events, 2.4 k-row probe): fan-out is the default WINNER, not the
+    * REBUILD vs FAN-OUT, measured in a past round (a wide-window A/B at
+    * sf12, 12 M events, 2.4 k-row probe): fan-out is the default WINNER, not the
     * compromise — candidate bands p..p+1+(W−1) div B cover ~W+2B of
     * banded rows while a rebuilt band=W layout's two bands cover 2W, so
     * for W ≫ B the narrow-band explode is also the lower-IO plan
@@ -179,8 +179,8 @@ object RangeBanded {
     * at layout-ensure time like the banding sort itself. A uniform
     * corpus derives k = 1 (salting pure overhead there: the probe's
     * fan-out is ×k while no task shrinks); a 75 %-hot corpus lands
-    * within the plateau of the best manual pick (tools.SaltProbe A/B,
-    * CROSSOVER.md). `targetRowsPerTask` is the merge-task size the
+    * within the plateau of the best manual pick (a past round's salt A/B,
+    * recorded in CROSSOVER.md). `targetRowsPerTask` is the merge-task size the
     * cluster digests comfortably — the default mirrors the ~32 MB/task
     * sizing the bucket counts use (~1 M event-sized rows). */
   def autoSalt(src: DataFrame, tsCol: String, bandMicros: Long,

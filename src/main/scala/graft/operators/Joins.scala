@@ -128,7 +128,7 @@ object Joins extends QueryGroup {
 
   /** Single-long-key broadcast lookup with RESIDUAL cross-side
     * equalities — the codified fix for the composite-key probe tax
-    * root-caused this round (tools.Q5Probe4 / NOTES_r7 §6). Catalyst
+    * root-caused in round 7 (NOTES_r7 §6). Catalyst
     * lifts EVERY cross-side equality in a join condition into the
     * equi-key list, which silently switches the broadcast hashed
     * relation from LongHashedRelation (single bigint key — a dense
@@ -616,7 +616,7 @@ object Joins extends QueryGroup {
     * k > 1 and the salted probe path is what the oracle exercises) and
     * returns it alongside the table so the probe enumerates exactly the
     * derived residues. Same SQL oracle — the salt only rewrites
-    * placement; the A/B economics live in tools.SaltProbe
+    * placement; a past round's salt A/B measured the economics
     * (auto within 5.7 % of the best manual pick, CROSSOVER.md). */
   private val joinRangeBandedAuto = GraftQuery(
     "join_range_banded_autosalt",
@@ -649,7 +649,7 @@ object Joins extends QueryGroup {
     * residue (8 candidate keys per row instead of 2). Same SQL oracle —
     * salting only rewrites placement, never membership (the probe's
     * candidate set covers every residue; measured 5.9× on a 75 %-hot
-    * corpus — tools.SaltProbe, CROSSOVER.md). */
+    * corpus in a past round's salt A/B, CROSSOVER.md). */
   private val joinRangeBandedSalted = GraftQuery(
     "join_range_banded_salted",
     (s, dir) => {

@@ -199,6 +199,57 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(got3.toSet == Set((20L, 12L)), s"post-reregister pairs: ${got3.toSeq}")
   }
 
+  test("within-batch pairs from the probe's band rows match " +
+      "TextDedup.minhashPairs on the same batch (norm twins, short texts)") {
+    import org.apache.spark.sql.functions._
+    import graft.layouts.MinHashIndex
+    graft.functions.GraftFunctions.register(spark)
+    val P = (5, 64, 16, 4)
+    graft.layouts.Bucketed.invalidate(spark, "mhidx_batchpairspec_")
+    val corpus = Seq((1L, textC)).toDF("id", "text")
+    val (bandsT, repsT) = MinHashIndex.ensure(
+      spark, SparkTestBase.dataDir, corpus, "batchpairspec",
+      P._1, P._2, P._3, P._4, Seq("region"))
+    val batch = Seq(
+      (10L, textA), (11L, textA2),
+      (12L, textA.toUpperCase), // exact-norm twin of 10: one group
+      (13L, "  " + textA2.replace(" ", "  ")), // norm twin of 11
+      (14L, textB), (15L, textB), // raw-text twins
+      (16L, "tiny doc"), (17L, "Tiny  DOC"), // shorter than 5 words, twins
+      (18L, "one two three four"), (19L, "one two three five"),
+      (20L, textC)).toDF("id", "text")
+    // ensure's default count is the fact layouts' size rule (its floor here)
+    assert(MinHashIndex.bucketsOf(spark, bandsT) ==
+      graft.layouts.Bucketed.defaultBuckets(SparkTestBase.dataDir, Seq("region")))
+    assert(MinHashIndex.bucketsOf(spark, bandsT) == 8)
+    val probed = MinHashIndex.probeBatch(spark, bandsT, repsT, batch,
+      P._1, P._2, P._3, P._4, threshold = 0.5)
+    val repPairs = MinHashIndex.batchRepPairs(probed.bBands, probed.bReps,
+      P._1, threshold = 0.5)
+    val want = TextDedup.minhashPairs(batch, P._1, P._2, P._3, P._4, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // not vacuous: the reference holds cross pairs of two two-member
+    // groups at the reps' Jaccard and the twins at 1.0
+    val byPair = want.map(t => (t._1, t._2) -> t._3).toMap
+    val crossA = Seq((10L, 11L), (10L, 13L), (11L, 12L), (12L, 13L))
+    crossA.foreach(p => assert(byPair.get(p).exists(j => j >= 0.5 && j < 1.0), s"$p: $want"))
+    Seq((10L, 12L), (11L, 13L), (14L, 15L), (16L, 17L))
+      .foreach(p => assert(byPair.get(p).contains(1.0), s"$p: $want"))
+    assert(want.size == crossA.size + 4, s"unexpected pairs: $want")
+    // the rep-to-rep pairs are the reference's pairs between group reps
+    val reps = probed.bReps.select("rep").as[Long].collect().toSet
+    assert(repPairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq.sorted == want.filter(t => reps(t._1) && reps(t._2)).sorted)
+    // keep-first keeps exactly the docs that are never a pair's larger id
+    val members = batch
+      .withColumn("norm", graft.functions.TextOps.normalize(col("text")))
+      .join(probed.bReps.withColumnRenamed("rep", "brep"), "norm")
+      .select(col("id"), col("brep"))
+    val kept = MinHashIndex.keepFirst(members, repPairs).select("id").as[Long]
+      .collect().toSet
+    assert(kept == (10L to 20L).toSet -- want.map(_._2))
+  }
+
   test("MinHash probes on a quiescent index share ONE bucket-file listing " +
       "(the marker-validated bucketFiles cache) — repeat probes pay a " +
       "metadata stat, not a directory walk, and answer identically") {
@@ -285,6 +336,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val (bandsT, repsT) = graft.layouts.MinHashIndex.ensure(
       spark, "/root/testdata/sf0.001", corpus, "compactspec",
       P._1, P._2, P._3, P._4, Seq("region"))
+    val ensuredBuckets = graft.layouts.MinHashIndex.bucketsOf(spark, bandsT)
     // two append rounds so files-per-bucket provably exceeds one
     val textD = (1 to 50).map(i => s"zeta$i").mkString(" ")
     val textE = (1 to 50).map(i => s"eta$i").mkString(" ")
@@ -338,9 +390,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       assert(new java.io.File(new java.io.File(new java.net.URI(loc)), "_GRAFT_COMPLETE").exists(),
         s"$q marker missing after compact")
     }
-    // bucket spec preserved (append after compact must still match)
-    assert(graft.layouts.MinHashIndex.bucketsOf(spark, bandsT) ==
-      graft.layouts.MinHashIndex.Buckets)
+    // bucket spec preserved: still the count the index was ensured with
+    // (append after compact must still match)
+    assert(graft.layouts.MinHashIndex.bucketsOf(spark, bandsT) == ensuredBuckets)
     // probe results are invariant under compaction
     assert(probePairs() == before, "compaction changed probe results")
     // and the content row counts are unchanged (placement-only rewrite)
@@ -368,7 +420,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       graft.layouts.Bucketed.appendGuard(spark, Seq(bandsT, repsT)) {
         bands.select(col("bkey64"), col("rep"))
           .write.mode("append")
-          .bucketBy(graft.layouts.MinHashIndex.Buckets, "bkey64").sortBy("bkey64")
+          .bucketBy(graft.layouts.MinHashIndex.bucketsOf(spark, bandsT), "bkey64")
+          .sortBy("bkey64")
           .saveAsTable(bandsT)
         throw new RuntimeException("simulated crash between the append pair")
       }

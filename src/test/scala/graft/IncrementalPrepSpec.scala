@@ -20,6 +20,29 @@ class IncrementalPrepSpec extends AnyFunSuite with SparkTestBase {
     (corpus, batch)
   }
 
+  /** Every batch id is in exactly one of `kept` and `dropped`, and each
+    * stage label counts exactly the docs that stage lost (its attrition
+    * docs_in − docs_out): an id's label is the first stage whose
+    * checkpoint lacks it. */
+  private def assertPartition(batch: org.apache.spark.sql.DataFrame,
+      out: IncrementalPrep.Outputs): Unit = {
+    val ids = batch.select(col("id").cast("long")).collect().map(_.getLong(0))
+    assert(ids.distinct.length == ids.length, "fixture ids must be unique")
+    val kept = out.kept.select("id").collect().map(_.getLong(0))
+    val dropped = out.dropped.collect().map(r => (r.getLong(0), r.getString(1)))
+    val all = kept ++ dropped.map(_._1)
+    assert(all.length == all.distinct.length,
+      "an id is in kept and dropped, or dropped twice")
+    assert(all.toSet == ids.toSet)
+    val labels = Seq("batch_exact_dup", "low_quality", "corpus_near_dup",
+      "batch_near_dup", "decontaminated")
+    out.attrition.orderBy(col("stage_ord")).collect().foreach { r =>
+      val label = labels(r.getInt(0) - 1)
+      assert(dropped.count(_._2 == label) == r.getLong(2) - r.getLong(3),
+        s"$label drops vs attrition ${r.getLong(2)} → ${r.getLong(3)}")
+    }
+  }
+
   test("planted batch families die in their intended stages") {
     val (corpus, batch) = setup()
     val (bandsT, repsT) = graft.layouts.MinHashIndex.ensure(
@@ -112,6 +135,7 @@ class IncrementalPrepSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(att.last._3 == kept.size)
     assert(att.head._2 == batch.count())
+    assertPartition(batch, out)
   }
 
   test("append closes the ingest loop: a later batch dedups against " +
@@ -133,6 +157,7 @@ class IncrementalPrepSpec extends AnyFunSuite with SparkTestBase {
       append = true, compactIndex = true)
     val kept1 = out1.kept.select(col("id"), col("text")).collect()
     assert(kept1.nonEmpty)
+    assertPartition(batch1, out1)
     // the index grew by exactly the kept docs' distinct norms
     val keptNorms = out1.kept
       .select(TextOps.normalize(col("text")).as("n")).distinct().count()
@@ -149,5 +174,6 @@ class IncrementalPrepSpec extends AnyFunSuite with SparkTestBase {
         s"appended doc not seen by the next probe: $id2 → ${dropped2.get(id2)}")
     }
     assert(out2.kept.count() == 0)
+    assertPartition(batch2, out2)
   }
 }
