@@ -1,9 +1,11 @@
 package graft.examples
 
-import graft.functions.TextOps
+import graft.etl.DriverHeld
 import graft.etl.StageCheckpoint.StageCheckpointOps
+import graft.functions.TextOps
 import graft.layouts.MinHashIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL corpus preparation — the nightly job a training-data user
@@ -25,11 +27,11 @@ import org.apache.spark.sql.functions._
   *      read), and exact Jaccard verifies candidates against only the
   *      touched reps' texts. Any batch doc with a verified corpus match
   *      ≥ threshold is dropped — the corpus copy wins (arrival order).
-  *   4. Near-dup WITHIN the batch ([[MinHashIndex.batchRepPairs]]: the
-  *      probe's own band rows of the survivors, self-joined on the band
-  *      key and verified by exact Jaccard — TextDedup.minhashPairs'
-  *      pairs without a second signature pass): of each verified pair
-  *      the larger id dies ([[MinHashIndex.keepFirst]]).
+  *   4. Near-dup WITHIN the batch ([[MinHashIndex.heldRepPairs]]: the
+  *      probe's own band keys of the survivors, paired on a shared key
+  *      and verified by exact Jaccard — TextDedup.minhashPairs' pairs
+  *      without a second signature pass): of each verified pair the
+  *      larger id dies ([[MinHashIndex.keepFirst]]'s rule).
   *   5. Decontamination (optional): doc-level eval-shingle concentration
   *      ≥ contamMin against a BROADCAST benchmark n-gram set — the
   *      llm_decontaminate rule; batches are short-horizon so the doc-
@@ -45,6 +47,14 @@ import org.apache.spark.sql.functions._
   * and only through its bucketed probe path — the nightly cost tracks
   * the batch (earlier rounds' incremental probes measured a flat probe
   * cost across a 4× corpus at fixed batch).
+  *
+  * Jobs: the batch's sets that the stages consume (reps, band keys,
+  * verified pairs, within-batch losers, kept ids) are held on the driver
+  * ([[graft.etl.DriverHeld]]) and applied as InSet filters, so no stage
+  * plan holds a broadcast and the stages materialize inside the probe's
+  * collect and one collect over b5: with `append` and the writes of
+  * `kept` and `dropped`, a batch is ten jobs (IngestJobsSpec). Past
+  * DriverHeld's cap each step takes its distributed shape instead.
   *
   * Outputs: `kept` (surviving batch rows), `dropped` (id, stage: the
   * first stage whose output lacks the id — every batch id is in exactly
@@ -79,7 +89,8 @@ object IncrementalPrep {
     // stage lineage is CUT per stage (localCheckpoint, the
     // TrainingDataPrep finding): each stage's plan otherwise embeds the
     // full upstream pipeline several times over and Catalyst re-analyzes
-    // the whole tree per downstream action
+    // the whole tree per downstream action. The checkpoints are lazy:
+    // the first action that reads a stage fills it.
 
     // 1. within-batch exact dedup on the raw text: one aggregate keeps
     // the min id per text
@@ -97,52 +108,69 @@ object IncrementalPrep {
 
     // 3. near-dup vs the corpus through the persisted index. The probe
     // signs the batch once; its band rows serve stage 4 and the append.
+    // Under DriverHeld's cap it holds the batch reps, their band keys and
+    // the verified pairs on the driver, and the stages below consume
+    // them as InSet filters: no stage plan holds a broadcast, each of
+    // which would run a build job when the stage is checkpointed.
     val probed = MinHashIndex.probeBatch(
       s, bandsTable, repsTable, b2.select(col("id"), col("text")),
       shingleWords, nHashes, nBands, rowsPerBand, threshold)
-    // reps with a verified corpus match, held driver-side: a subset of
-    // the candidate set the probe already collected (within its driver
-    // bound), and both consumers below join it without a build job
-    val corpusDupReps = driverHeld(s, probed.pairs.select(col("brep")).distinct())
-    // member expansion: each batch doc carries its dedup-group rep
-    // (joined on the norm) through the later stages
-    val b3 = b2.withColumn("norm", TextOps.normalize(col("text")))
-      .join(probed.bReps.withColumnRenamed("rep", "brep"), "norm")
-      .join(corpusDupReps, Seq("brep"), "left_anti")
+    val held = probed.held
+    // drop the reps with a verified corpus match
+    val dropCorpusDups: DataFrame => DataFrame = held match {
+      case Some(h) => withoutReps(_, h.pairs.map(_._1))
+      case None =>
+        val dups = probed.pairs.select(col("brep")).distinct()
+        _.join(dups, Seq("brep"), "left_anti")
+    }
+    // member expansion: each batch doc carries its dedup-group rep, the
+    // min id of its norm group — the probe's rep for that norm
+    val b3 = dropCorpusDups(b2.withColumn("brep", min(col("id"))
+        .over(Window.partitionBy(TextOps.normalize(col("text"))))))
       .select(col("id"), col("text"), col("tok"), col("q"), col("brep"))
       .stageCheckpoint(eager = false)
 
     // 4. near-dup within the batch over the groups that survived stage 3,
     // from the probe's band rows: keep-first — of each verified pair the
-    // larger id dies (TrainingDataPrep stage-3 semantics)
-    val batchPairs = MinHashIndex.batchRepPairs(
-      probed.bBands.join(corpusDupReps, Seq("brep"), "left_anti"),
-      probed.bReps, shingleWords, threshold)
-    val b4 = MinHashIndex.keepFirst(b3, batchPairs).stageCheckpoint(eager = false)
+    // larger id dies (TrainingDataPrep stage-3 semantics). Held, the
+    // pairs are evaluated on the driver; past the cap, by joins.
+    val losers = held.flatMap { h =>
+      val dups = h.pairs.map(_._1).toSet
+      MinHashIndex.heldRepPairs(h.reps.filterNot(r => dups(r.rep)), shingleWords, threshold)
+        .map(_.map(_._2))
+    }
+    val b4 = (losers match {
+      case Some(ls) => withoutReps(b3.filter(col("id") === col("brep")), ls)
+      case None => MinHashIndex.keepFirst(b3, MinHashIndex.batchRepPairs(
+        dropCorpusDups(probed.bBands), probed.bReps, shingleWords, threshold))
+    }).stageCheckpoint(eager = false)
 
     // 5. doc-level decontamination: shingle set materialized BELOW the
     // explode (the llm_decontaminate_chunks plan lessons: size(f(x))
     // beside explode(f(x)) re-runs the pipeline per exploded row, and
     // explode_outer avoids the inferred size>0 re-run below the shuffle)
-    val contamIds = evalNgrams match {
-      case None => b4.select("id").limit(0)
-      case Some(ev) =>
-        b4.withColumn("norm", TextOps.normalize(col("text")))
-          .select(col("id"), expr(s"word_shingles(norm, $shingleWords)").as("shs"))
-          .select(col("id"), size(col("shs")).as("n_sh"),
-            explode_outer(col("shs")).as("sh"))
-          .join(broadcast(ev.select(col("sh")).distinct()), "sh")
-          .groupBy(col("id"), col("n_sh"))
-          .agg(count(lit(1)).as("hits"))
-          .filter(col("hits").cast("double") >=
-            col("n_sh").cast("double") * contamMin)
-          .select("id").distinct()
+    val b5 = evalNgrams.fold(b4) { ev =>
+      val contamIds = b4.withColumn("norm", TextOps.normalize(col("text")))
+        .select(col("id"), expr(s"word_shingles(norm, $shingleWords)").as("shs"))
+        .select(col("id"), size(col("shs")).as("n_sh"),
+          explode_outer(col("shs")).as("sh"))
+        .join(broadcast(ev.select(col("sh")).distinct()), "sh")
+        .groupBy(col("id"), col("n_sh"))
+        .agg(count(lit(1)).as("hits"))
+        .filter(col("hits").cast("double") >=
+          col("n_sh").cast("double") * contamMin)
+        .select("id").distinct()
+      b4.join(contamIds, Seq("id"), "left_anti").stageCheckpoint(eager = false)
     }
-    val b5 = b4.join(contamIds, Seq("id"), "left_anti").stageCheckpoint(eager = false)
 
-    // materialize stages eagerly in dependency order (the attrition
-    // report's union branches must never race to fill a shared cache)
-    Seq(b1, b2, b3, b4, b5).foreach(_.count())
+    // ONE action over b5 materializes every stage the probe has not (the
+    // attrition report's union branches must never race to fill a shared
+    // cache). Held, it collects the kept ids the append needs: b5 holds
+    // only reps, so at most the probe's held rep count, within the cap.
+    val heldKept = held.map(h => h -> DriverHeld.collect(b5.select(col("id")))
+      .getOrElse(throw new IllegalStateException("more kept docs than held batch reps"))
+      .map(_.getLong(0)).toSet)
+    if (heldKept.isEmpty) b5.count()
 
     // 6. fold the kept docs into the index with their band rows from the
     // probe — no signature pass. Every kept rep is fresh (stage 3
@@ -152,12 +180,16 @@ object IncrementalPrep {
     // re-fire, crash after commit) is a no-op instead of double-indexing
     // the batch (MinHashIndex.append's stamp contract).
     if (append) {
-      // b5 holds one doc per group, its rep (stage 4 keeps only reps)
-      val keptReps = b5.select(col("id").as("rep"),
-        TextOps.normalize(col("text")).as("norm"))
-      val keptBands = keptReps.select(col("rep"))
-        .join(broadcast(probed.bBands.withColumnRenamed("brep", "rep")), "rep")
-        .select(col("bkey64"), col("rep"))
+      val (keptBands, keptReps) = heldKept match {
+        case Some((h, ids)) => MinHashIndex.heldIndexRows(s, h, ids)
+        case None =>
+          // b5 holds one doc per group, its rep (stage 4 keeps only reps)
+          val reps = b5.select(col("id").as("rep"),
+            TextOps.normalize(col("text")).as("norm"))
+          (reps.select(col("rep"))
+            .join(broadcast(probed.bBands.withColumnRenamed("brep", "rep")), "rep")
+            .select(col("bkey64"), col("rep")), reps)
+      }
       MinHashIndex.appendRows(s, bandsTable, repsTable, keptBands, keptReps, batchTag)
       // index MAINTENANCE on the caller's cadence: every append adds a
       // file per touched bucket, so a nightly job compacts periodically
@@ -172,17 +204,17 @@ object IncrementalPrep {
         MinHashIndex.compactIfFragmented(s, bandsTable, repsTable, autoCompactAt)
     }
 
-    // each stage's drops are the ids its checkpoint lost against the
-    // previous one: anti-joins of materialized stages, no stage re-runs
-    val dropped = Seq(
-        (batch, b1, "batch_exact_dup"), (b1, b2, "low_quality"),
-        (b2, b3, "corpus_near_dup"), (b3, b4, "batch_near_dup"),
-        (b4, b5, "decontaminated"))
-      .map { case (before, after, stage) =>
-        before.select(col("id")).join(after.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(stage).as("stage"))
-      }
+    // an id's stage is the first checkpoint that lacks it; the stages
+    // nest, so that is the one after the last stage holding it — one
+    // union-aggregate of the materialized stages' ids
+    val labels = Seq("batch_exact_dup", "low_quality", "corpus_near_dup",
+      "batch_near_dup", "decontaminated")
+    val dropped = Seq(batch, b1, b2, b3, b4, b5).zipWithIndex
+      .map { case (df, i) => df.select(col("id"), lit(i).as("last")) }
       .reduce(_ unionByName _)
+      .groupBy(col("id")).agg(max(col("last")).as("last"))
+      .filter(col("last") < labels.size)
+      .select(col("id"), element_at(array(labels.map(lit): _*), col("last") + 1).as("stage"))
 
     val attrition = TrainingDataPrep.attritionReport(nBatch, Seq(
       ("batch_exact_dedup", 1, b1), ("quality_filter", 2, b2.drop("q")),
@@ -192,8 +224,8 @@ object IncrementalPrep {
     Outputs(b5.select(col("id"), col("text")), dropped, attrition)
   }
 
-  /** `df`, collected and re-wrapped as a LocalRelation: a join against it
-    * broadcasts from the driver without a build job. */
-  private def driverHeld(s: SparkSession, df: DataFrame): DataFrame =
-    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+  /** `df` without the rows whose `brep` is in `reps` — a driver-held set,
+    * so an InSet filter instead of a join. */
+  private def withoutReps(df: DataFrame, reps: Seq[Long]): DataFrame =
+    if (reps.isEmpty) df else df.filter(!col("brep").isin(reps.distinct: _*))
 }

@@ -176,8 +176,11 @@ object Bucketed {
         s.catalog.listTables(db.name).collect()
           .filter(_.name.startsWith(namePrefix))
           .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS ${db.name}.${t.name}")
-            forgetTableDir(s, s"${db.name}.${t.name}")
+            val qname = s"${db.name}.${t.name}"
+            s.sql(s"DROP TABLE IF EXISTS $qname")
+            forgetTableDir(s, qname)
+            bucketsMemo.forget(s, qname)
+            listedBuckets.remove(qname)
           }
       }
     val root = new Path(layoutRoot(s))
@@ -343,6 +346,33 @@ object Bucketed {
       new Path(s.sessionState.catalog.getTableMetadata(
         s.sessionState.sqlParser.parseTableIdentifier(qname)).location)
     }
+
+  /** Bucket count of a registered bucketed table (from the catalog, so
+    * append always matches the layout it extends). MEMOIZED per
+    * (context, table) like [[tableDirMemo]] — r17: the DESC FORMATTED +
+    * head() resolution is a ~20–50 ms plan + local job, paid three times
+    * per probe. The count is immutable for a registered layout:
+    * append/compact derive their write spec from it, and a REBUILT
+    * layout lives under a different content-tagged database, so the
+    * qualified name itself rotates; [[invalidate]] forgets the dropped
+    * tables' entries. */
+  private val bucketsMemo = new LayoutUtil.CatalogMemo[Integer]
+
+  private[graft] def bucketsOf(s: SparkSession, qname: String): Int =
+    bucketsMemo.getOrCompute(s, qname) {
+      // catalog metadata API, not DESC FORMATTED + head(), as in tableDir
+      val meta = s.sessionState.catalog.getTableMetadata(
+        s.sessionState.sqlParser.parseTableIdentifier(qname))
+      meta.bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
+        s"$qname is not a bucketed table — cannot derive its bucket count"))
+    }
+
+  /** The per-table memos holding an entry for `qname` — "location",
+    * "buckets", "listing" (test observability for [[invalidate]]). */
+  private[graft] def memoized(s: SparkSession, qname: String): Set[String] =
+    Set("location" -> tableDirMemo.contains(s, qname),
+      "buckets" -> bucketsMemo.contains(s, qname),
+      "listing" -> listedBuckets.containsKey(qname)).collect { case (m, true) => m }
 
   /** Split a layout directory name into (base, compactVersion):
     * `orders_b` → (orders_b, 0), `orders_b__v3` → (orders_b, 3). The

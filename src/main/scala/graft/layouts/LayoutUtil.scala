@@ -160,6 +160,11 @@ object LayoutUtil {
       val m = byContext.get(s.sparkContext)
       if (m != null) { m.remove(key); () }
     }
+
+    def contains(s: org.apache.spark.sql.SparkSession, key: String): Boolean = {
+      val m = byContext.get(s.sparkContext)
+      m != null && m.containsKey(key)
+    }
   }
 
   // ---------------------------------------------------------------------

@@ -1,8 +1,12 @@
 package graft.layouts
 
-import graft.functions.TextOps
+import graft.etl.DriverHeld
 import graft.etl.StageCheckpoint.StageCheckpointOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{ArrayJaccard, TextOps, WordShingles}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 
 /** Persisted banded-MinHash signature index of a text corpus — the
@@ -80,19 +84,31 @@ object MinHashIndex {
   private def bandsOfReps(reps: DataFrame, shingleWords: Int,
       nHashes: Int, nBands: Int, rowsPerBand: Int): DataFrame =
     reps
-      .withColumn("sig", expr(s"minhash_sig(word_shingles(norm, $shingleWords), $nHashes)"))
+      .withColumn("sig", signature(shingleWords, nHashes))
       .select(col("rep"), posexplode(transform(
-        sequence(lit(0), lit(nBands - 1)),
-        b => array_join(
-          slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)).cast("array<string>"), ","))))
-      .select(concat(col("pos").cast("string"), lit(":"), col("col")).as("bkey"),
-        col("rep"))
+        sequence(lit(0), lit(nBands - 1)), b => bandSlice(col("sig"), b, rowsPerBand))))
+      .select(bandKey(col("pos"), col("col")).as("bkey"), col("rep"))
       .withColumn("bkey64", xxhash64(col("bkey")))
 
-  /** Probe-side pruning cap: past this many distinct batch keys the
-    * driver collect feeding the file-pruned scan stops being KB-scale and
-    * the keys touch every bucket anyway — scan everything. */
-  private[graft] val MaxPruneKeys = 100000
+  /** A (rep, norm) row's `bkey64`s as one array, from the same pieces as
+    * [[bandsOfReps]] — the probe's held form. The signature is the
+    * `transform` ARGUMENT, repeated per band, so it is evaluated once per
+    * row: referenced from inside the lambda of a projection, it would be
+    * recomputed for every band. */
+  private def bandKeys64(shingleWords: Int, nHashes: Int, nBands: Int,
+      rowsPerBand: Int): Column =
+    transform(array_repeat(signature(shingleWords, nHashes), nBands),
+      (sig, b) => xxhash64(bandKey(b, bandSlice(sig, b, rowsPerBand))))
+
+  private def signature(shingleWords: Int, nHashes: Int): Column =
+    expr(s"minhash_sig(word_shingles(norm, $shingleWords), $nHashes)")
+
+  /** Band `b` of a signature as `<sig[4b]>,<sig[4b+1]>,…`, and its
+    * auditable key `<b>:<slice>` (hashed to the stored `bkey64`). */
+  private def bandSlice(sig: Column, b: Column, rowsPerBand: Int): Column =
+    array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)).cast("array<string>"), ",")
+  private def bandKey(b: Column, slice: Column): Column =
+    concat(b.cast("string"), lit(":"), slice)
 
   /** Bucket id of a long key under Spark's bucketing spec:
     * pmod(Murmur3Hash(key, seed 42), n) — the exact
@@ -134,47 +150,28 @@ object MinHashIndex {
     * whenever ANY file goes unread (condition: touched < total, vs the
     * row-filter form's keys·8 ≤ buckets). Expected touched count is
     * B·(1 − e^(−keys/B)): at a 100 TB index (files ≫ batch keys) the
-    * scan term is bounded by the BATCH's key count, not the corpus. */
+    * scan term is bounded by the BATCH's key count, not the corpus.
+    * `heldKeys` None (a key set past [[DriverHeld]]'s cap) scans everything. */
   private def prunedScan(s: SparkSession, table: String,
-      keys: Array[Long]): (DataFrame, ScanStats) = {
+      heldKeys: Option[Array[Long]]): (DataFrame, ScanStats) = {
     val files = Bucketed.bucketFiles(s, table)
     val total = files.valuesIterator.map(_.size).sum
-    if (keys.isEmpty)
-      return (s.table(table).filter(lit(false)), ScanStats(0, total, pruned = true))
-    if (keys.length > MaxPruneKeys)
-      return (s.table(table), ScanStats(total, total, pruned = false))
-    val n = bucketsOf(s, table)
-    val sel = keys.map(bucketOfLong(_, n)).distinct.toSeq.sorted
-      .flatMap(files.getOrElse(_, Nil))
-    if (sel.isEmpty) // every touched bucket is empty: no match is possible
-      (s.table(table).filter(lit(false)), ScanStats(0, total, pruned = true))
-    else if (sel.length < total)
-      (s.read.schema(s.table(table).schema).parquet(sel: _*),
-        ScanStats(sel.length, total, pruned = true))
-    else (s.table(table), ScanStats(total, total, pruned = false))
-  }
-
-  /** Bucket count of a registered bucketed table (from the catalog, so
-    * append always matches the layout it extends). MEMOIZED per
-    * (context, table) — r17: the DESC FORMATTED + head() resolution is a
-    * ~20–50 ms plan + local job, paid three times per probe; r18: weak
-    * context keys + hive-metastore bypass via LayoutUtil.CatalogMemo
-    * (see Bucketed.tableDirMemo for the lifecycle rationale). The count
-    * is immutable for a registered layout: append/compact derive their
-    * write spec from it, and a REBUILT layout lives under a different
-    * content-tagged database, so the qualified name itself rotates. */
-  private val bucketsMemo = new LayoutUtil.CatalogMemo[Integer]
-
-  private[graft] def bucketsOf(s: SparkSession, table: String): Int =
-    bucketsMemo.getOrCompute(s, table) {
-      // catalog metadata API, not DESC FORMATTED + head() (r18): the SQL
-      // form launches ~3 tiny executeTake jobs per memo-missed
-      // resolution; getTableMetadata is a pure driver call
-      val meta = s.sessionState.catalog.getTableMetadata(
-        s.sessionState.sqlParser.parseTableIdentifier(table))
-      meta.bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed table — cannot derive its bucket count"))
+    def unpruned = (s.table(table), ScanStats(total, total, pruned = false))
+    def empty = (s.table(table).filter(lit(false)), ScanStats(0, total, pruned = true))
+    heldKeys match {
+      case None => unpruned
+      case Some(keys) if keys.isEmpty => empty
+      case Some(keys) =>
+        val n = Bucketed.bucketsOf(s, table)
+        val sel = keys.map(bucketOfLong(_, n)).distinct.toSeq.sorted
+          .flatMap(files.getOrElse(_, Nil))
+        if (sel.isEmpty) empty // every touched bucket is empty: no match is possible
+        else if (sel.length < total)
+          (s.read.schema(s.table(table).schema).parquet(sel: _*),
+            ScanStats(sel.length, total, pruned = true))
+        else unpruned
     }
+  }
 
   /** Ensure the index layout exists; returns (bandsTable, repsTable)
     * fully qualified for `spark.table`.
@@ -222,20 +219,21 @@ object MinHashIndex {
     * (PlanSpec-pinned; the r7 SMJ-on-bucketing shape paid a per-probe
     * string compare plus the merge machinery on every index row), and
     * verification texts are fetched by id from the rep table for the
-    * touched reps only. The candidate set is COLLECTED (r18): it feeds
-    * multiple consumers as the broadcast build side anyway, so holding
-    * it driver-side merges the key-collect and checkpoint actions the
-    * r17 shape paid separately.
+    * touched reps only.
     *
-    * DRIVER BOUND: both collects are unbounded. The band collect holds
-    * batch reps × bands rows. The candidate collect holds one row per
-    * distinct (batch rep, indexed rep) pair sharing a band key — batch
-    * reps × the band keys' fan-out into the index, which a band-key hot
-    * spot (many indexed reps with one band slice) can make corpus-sized.
-    * `spark.driver.maxResultSize` is the only backstop: past it the probe
-    * fails loudly rather than degrading. A cap with a distributed
-    * fallback is open work (ROADMAP D); a `limit(cap + 1)` guard would add
-    * `executeTake` jobs to every probe.
+    * DRIVER-HELD SETS: every batch-bounded set — the batch reps with
+    * their band keys, the candidate pairs, the touched corpus reps' texts
+    * — comes to the driver through ONE [[DriverHeld.collect]] job each
+    * and is consumed there: the band keys select bucket files and build
+    * the candidate join, the candidates select the rep files, and the
+    * verified pairs are computed on the driver with the same
+    * `word_shingles` and `jaccard_sim` kernels the executors run. The
+    * candidate join's broadcast of the band rows is the only broadcast
+    * build; a probe is five jobs with the caller's write of `pairs`. Past
+    * the cap the probe falls back to its distributed shape (checkpointed
+    * signed reps and candidate set, verification by joins), so a band-key
+    * hot spot (many indexed reps with one band slice) degrades instead
+    * of exhausting the driver.
     *
     * CONCURRENCY CONTRACT (r9 ADVICE): the file-pruned scan captures the
     * bucket FILE LIST driver-side and reads those paths as plain parquet,
@@ -256,11 +254,28 @@ object MinHashIndex {
   }
 
   /** A probe's result: the public (`pairs`, `bReps`) of [[probe]] plus the
-    * batch's band rows `bBands` (bkey64, brep), which the probe already
-    * holds driver-side — a LocalRelation, so reusing it runs no job and
-    * no second signature pass ([[batchRepPairs]], [[appendRows]]). */
+    * batch's band rows `bBands` (bkey64, brep), so a caller reuses the
+    * probe's signature pass ([[batchRepPairs]], [[appendRows]]), and —
+    * when every set fit under [[DriverHeld]]'s cap — the same state held
+    * on the driver. Held, all three frames are LocalRelations. */
   private[graft] final case class Probed(pairs: DataFrame, bReps: DataFrame,
-      bBands: DataFrame)
+      bBands: DataFrame, held: Option[Held])
+
+  /** A probe's driver-held state: each batch rep with its norm and band
+    * keys, and the verified (brep, crep, jaccard) pairs. */
+  private[graft] final case class Held(reps: Seq[HeldRep], pairs: Seq[(Long, Long, Double)])
+  private[graft] final case class HeldRep(rep: Long, norm: String, bkeys: Seq[Long])
+
+  private val RepBandSchema = StructType(Seq(
+    StructField("bkey64", LongType, nullable = false),
+    StructField("brep", LongType, nullable = false)))
+  private val PairSchema = StructType(Seq(
+    StructField("brep", LongType, nullable = false),
+    StructField("crep", LongType, nullable = false),
+    StructField("jaccard", DoubleType)))
+
+  private def local(s: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private[graft] def probeBatch(s: SparkSession, bandsTable: String,
       repsTable: String, batch: DataFrame, shingleWords: Int, nHashes: Int,
@@ -280,76 +295,120 @@ object MinHashIndex {
             "overlap append/compact on the same layout (probe → append → " +
             "compact is the sequential ingest lifecycle)")
     }
-    // ONE eager checkpoint of the batch's rep table: it feeds the band
-    // derivation, the verification side (bSh) AND the caller's follow-up
-    // append/member expansion — un-checkpointed, the batch's
-    // normalize+groupBy pass ran once per consumer (r18; the r17
-    // multiply-consumed-subtree rule applied to the probe's own input).
-    val bReps = repRows(batch).stageCheckpoint()
-    // FILE-PRUNED band scan (r9, the r8 verdict's item 3, sharpened):
-    // the probe's residual corpus-linear term was the full band-table
-    // scan. Collecting here merges four probe-internal actions into two
-    // (driver bound: see the scaladoc): the band collect yields the
-    // distinct prune keys AND the join's build side (a LocalRelation
-    // broadcast builds driver-side, no job), and the candidate collect
-    // yields the rep prune keys AND both verify joins' build side. Bands
-    // derive MAP-SIDE from the checkpointed rep table, so the signature
-    // pass runs exactly once. See [[prunedScan]] for the file-list
-    // pruning derivation and exactness argument.
-    val localBands = bandsOfReps(bReps, shingleWords, nHashes, nBands, rowsPerBand)
-      .select(col("bkey64"), col("rep").as("brep"))
-      .collect()
-    val keys = {
-      val set = new java.util.HashSet[Long]()
-      localBands.foreach(r => set.add(r.getLong(0)))
-      val arr = new Array[Long](set.size)
-      val it = set.iterator(); var i = 0
-      while (it.hasNext) { arr(i) = it.next(); i += 1 }
-      arr
+    val reps = repRows(batch)
+    // the batch reps with their band keys, checkpointed lazily so the
+    // held collect fills it: the normalize-and-group shuffle and the
+    // signature pass run once, and past the cap the distributed shape
+    // reads them back
+    val keyed = reps.select(col("rep"), col("norm"),
+      bandKeys64(shingleWords, nHashes, nBands, rowsPerBand).as("bkeys"))
+      .stageCheckpoint(eager = false)
+    DriverHeld.collect(keyed) match {
+      case Some(rows) =>
+        heldProbe(s, bandsTable, repsTable, reps.schema,
+          rows.map(r => HeldRep(r.getLong(0), r.getString(1), r.getSeq[Long](2))).toSeq,
+          shingleWords, threshold)
+      case None =>
+        // past the cap the band keys (nBands per rep) cannot be held
+        // either, so the band scan is unpruned
+        val bReps = keyed.select(col("rep"), col("norm"))
+        val bBands = keyed.select(explode(col("bkeys")).as("bkey64"), col("rep").as("brep"))
+        val (idxScan, bandStats) = prunedScan(s, bandsTable, None)
+        val (pairs, repStats) = verifyDistributed(s, repsTable,
+          candidates(idxScan, bBands).stageCheckpoint(), bReps, shingleWords, threshold)
+        lastProbeStats = Some((bandStats, repStats))
+        Probed(pairs, bReps, bBands, None)
     }
-    val (idxScan, bandStats) = prunedScan(s, bandsTable, keys)
-    val bandSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bkey64",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("brep",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val bBands = s.createDataFrame(
-      java.util.Arrays.asList(localBands: _*), bandSchema)
-    val cand = idxScan.withColumnRenamed("rep", "crep")
+  }
+
+  /** The probe over a driver-held batch. The candidate collect yields the
+    * rep prune keys and the verification's pairs; the touched reps'
+    * texts come back in one more collect, one row per candidate rep and
+    * so within the cap whenever the candidates are. */
+  private def heldProbe(s: SparkSession, bandsTable: String, repsTable: String,
+      repSchema: StructType, reps: Seq[HeldRep], shingleWords: Int,
+      threshold: Double): Probed = {
+    val bReps = local(s, reps.map(h => Row(h.rep, h.norm)), repSchema)
+    val bBands = local(s, reps.flatMap(h => h.bkeys.map(k => Row(k, h.rep))), RepBandSchema)
+    val (idxScan, bandStats) = prunedScan(s, bandsTable,
+      Some(reps.flatMap(_.bkeys).distinct.toArray))
+    // checkpointed lazily so the held collect fills it: a band-key hot
+    // spot's distributed verification reads it back instead of running
+    // the band scan again
+    val cand = candidates(idxScan, bBands).stageCheckpoint(eager = false)
+    DriverHeld.collect(cand) match {
+      case None =>
+        val (pairs, repStats) = verifyDistributed(s, repsTable, cand, bReps,
+          shingleWords, threshold)
+        lastProbeStats = Some((bandStats, repStats))
+        Probed(pairs, bReps, bBands, None)
+      case Some(candRows) =>
+        val crepIds = candRows.map(_.getLong(1)).distinct
+        val (repsScan, repStats) = prunedScan(s, repsTable, Some(crepIds))
+        lastProbeStats = Some((bandStats, repStats))
+        // the InSet filter keeps the selected files' other reps off the
+        // driver; its per-row cost is small beside decoding their texts
+        val texts =
+          if (crepIds.isEmpty) Array.empty[Row]
+          else DriverHeld.collect(repsScan.filter(col("rep").isin(crepIds.toIndexedSeq: _*))
+            .select(col("rep"), col("norm"))).getOrElse(throw new IllegalStateException(
+              s"$repsTable holds more than one row for some of ${crepIds.length} reps"))
+        // shingles only of the reps a candidate names
+        val touched = candRows.iterator.map(_.getLong(0)).toSet
+        val bSh = reps.filter(h => touched(h.rep))
+          .map(h => h.rep -> shinglesOf(h.norm, shingleWords)).toMap
+        val cSh = texts.toSeq.groupMap(_.getLong(0))(r => shinglesOf(r.getString(1), shingleWords))
+        val pairs = for {
+          c <- candRows.toSeq
+          cs <- cSh.getOrElse(c.getLong(1), Nil)
+          j <- jaccardOf(bSh(c.getLong(0)), cs) if j >= threshold
+        } yield (c.getLong(0), c.getLong(1), j)
+        Probed(local(s, pairs.map { case (b, c, j) => Row(b, c, j) }, PairSchema),
+          bReps, bBands, Some(Held(reps, pairs)))
+    }
+  }
+
+  /** The candidate join: the batch's band rows BROADCAST into a
+    * single-long-key BroadcastHashJoin against the index scan, the
+    * index side never shuffled (PlanSpec pins this shape). */
+  private def candidates(idxScan: DataFrame, bBands: DataFrame): DataFrame =
+    idxScan.withColumnRenamed("rep", "crep")
       .join(broadcast(bBands), "bkey64")
       .select(col("brep"), col("crep")).distinct()
-      .collect()
-    // same pruning for the verification fetch: the touched corpus reps
-    // are candidate-bounded (batch-proportional), so the rep-text scan
-    // reads only their buckets instead of the whole rep table
-    val crepIds = {
-      val set = new java.util.HashSet[Long]()
-      cand.foreach(r => set.add(r.getLong(1)))
-      val arr = new Array[Long](set.size)
-      val it = set.iterator(); var i = 0
-      while (it.hasNext) { arr(i) = it.next(); i += 1 }
-      arr
-    }
-    val (repsScan, repStats) = prunedScan(s, repsTable, crepIds)
-    lastProbeStats = Some((bandStats, repStats))
-    val candSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("brep",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("crep",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val candDf = s.createDataFrame(
-      java.util.Arrays.asList(cand: _*), candSchema)
-    val cSh = candDf.select(col("crep")).distinct()
+
+  /** Verification by joins, the shape past the cap: the touched reps'
+    * texts are fetched by a file-pruned scan while their ids fit on the
+    * driver. */
+  private def verifyDistributed(s: SparkSession, repsTable: String, cand: DataFrame,
+      bReps: DataFrame, shingleWords: Int, threshold: Double): (DataFrame, ScanStats) = {
+    val (repsScan, repStats) = prunedScan(s, repsTable,
+      heldLongs(cand.select(col("crep")).distinct()))
+    val cSh = cand.select(col("crep")).distinct()
       .join(repsScan, col("crep") === col("rep"))
       .select(col("crep"), expr(s"word_shingles(norm, $shingleWords)").as("csh"))
     val bSh = bReps.select(col("rep").as("brep"),
       expr(s"word_shingles(norm, $shingleWords)").as("bsh"))
-    val pairs = candDf.join(bSh, "brep").join(cSh, "crep")
+    val pairs = cand.join(bSh, "brep").join(cSh, "crep")
       .withColumn("jaccard", expr("jaccard_sim(bsh, csh)"))
       .filter(col("jaccard") >= threshold)
       .select(col("brep"), col("crep"), col("jaccard"))
-    Probed(pairs, bReps, bBands)
+    (pairs, repStats)
   }
+
+  private def heldLongs(df: DataFrame): Option[Array[Long]] =
+    DriverHeld.collect(df).map(_.map(_.getLong(0)))
+
+  /** `word_shingles` and `jaccard_sim` evaluated on the driver: the same
+    * expressions the executors evaluate (both are CodegenFallback, so
+    * there is no second, generated implementation). Null in, null out. */
+  private def shinglesOf(norm: String, shingleWords: Int): ArrayData =
+    WordShingles(Literal(norm), Literal(shingleWords)).eval().asInstanceOf[ArrayData]
+
+  private val ShingleType = ArrayType(StringType, containsNull = false)
+
+  private def jaccardOf(a: ArrayData, b: ArrayData): Option[Double] =
+    Option(ArrayJaccard(Literal(a, ShingleType), Literal(b, ShingleType)).eval())
+      .map(_.asInstanceOf[Double])
 
   /** Within-batch near-dup pairs of dedup-group reps, from a probe's band
     * rows: reps sharing a band key are candidates, kept at exact shingle
@@ -369,6 +428,40 @@ object MinHashIndex {
     cand.join(shingles("a"), "a").join(shingles("b"), "b")
       .select(col("a"), col("b"), expr("jaccard_sim(sh_a, sh_b)").as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** [[batchRepPairs]] of held reps, evaluated on the driver; None when
+    * their candidate pairs exceed [[DriverHeld]]'s cap. */
+  private[graft] def heldRepPairs(reps: Seq[HeldRep], shingleWords: Int,
+      threshold: Double): Option[Seq[(Long, Long, Double)]] = {
+    val cap = DriverHeld.cap
+    val cand = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    val it = reps.flatMap(h => h.bkeys.map(_ -> h.rep)).groupMap(_._1)(_._2)
+      .valuesIterator.flatMap(rs => rs.iterator.flatMap(a => rs.iterator.filter(a < _).map(a -> _)))
+    while (it.hasNext && cand.size <= cap) cand += it.next()
+    if (cand.size > cap) { DriverHeld.overflows += 1; None }
+    else {
+      val touched = cand.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+      val sh = reps.filter(h => touched(h.rep))
+        .map(h => h.rep -> shinglesOf(h.norm, shingleWords)).toMap
+      Some(cand.toSeq.sorted.flatMap { case (a, b) =>
+        jaccardOf(sh(a), sh(b)).filter(_ >= threshold).map((a, b, _))
+      })
+    }
+  }
+
+  /** Index rows of the held reps in `keep`, for [[appendRows]]: `bands`
+    * (bkey64, rep) and `reps` (rep, norm) as one-partition LocalRelations,
+    * so the append writes one file per touched bucket. */
+  private[graft] def heldIndexRows(s: SparkSession, held: Held,
+      keep: Set[Long]): (DataFrame, DataFrame) = {
+    val kept = held.reps.filter(h => keep(h.rep))
+    (local(s, kept.flatMap(h => h.bkeys.map(k => Row(k, h.rep))), StructType(Seq(
+        StructField("bkey64", LongType, nullable = false),
+        StructField("rep", LongType, nullable = false)))).coalesce(1),
+      local(s, kept.map(h => Row(h.rep, h.norm)), StructType(Seq(
+        StructField("rep", LongType, nullable = false),
+        StructField("norm", StringType)))).coalesce(1))
   }
 
   /** Keep-first within-batch dedup: of `docs` (id, brep, …: whole dedup
@@ -441,7 +534,7 @@ object MinHashIndex {
     // bucket counts come from the REGISTERED tables (not the default
     // constant), so an append can never break the bucketing spec of a
     // layout built with a non-default count
-    val (bandB, repB) = (bucketsOf(s, bandsTable), bucketsOf(s, repsTable))
+    val (bandB, repB) = (Bucketed.bucketsOf(s, bandsTable), Bucketed.bucketsOf(s, repsTable))
     // applied-state decision as the PRE-MARKER gate (the
     // Bucketed.appendOnce rule): re-decided under the lease — a raced
     // retry skips after the winner's stamps landed — and BEFORE the

@@ -202,7 +202,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   test("within-batch pairs from the probe's band rows match " +
       "TextDedup.minhashPairs on the same batch (norm twins, short texts)") {
     import org.apache.spark.sql.functions._
-    import graft.layouts.MinHashIndex
+    import graft.layouts.{Bucketed, MinHashIndex}
     graft.functions.GraftFunctions.register(spark)
     val P = (5, 64, 16, 4)
     graft.layouts.Bucketed.invalidate(spark, "mhidx_batchpairspec_")
@@ -219,9 +219,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (18L, "one two three four"), (19L, "one two three five"),
       (20L, textC)).toDF("id", "text")
     // ensure's default count is the fact layouts' size rule (its floor here)
-    assert(MinHashIndex.bucketsOf(spark, bandsT) ==
+    assert(Bucketed.bucketsOf(spark, bandsT) ==
       graft.layouts.Bucketed.defaultBuckets(SparkTestBase.dataDir, Seq("region")))
-    assert(MinHashIndex.bucketsOf(spark, bandsT) == 8)
+    assert(Bucketed.bucketsOf(spark, bandsT) == 8)
     val probed = MinHashIndex.probeBatch(spark, bandsT, repsT, batch,
       P._1, P._2, P._3, P._4, threshold = 0.5)
     val repPairs = MinHashIndex.batchRepPairs(probed.bBands, probed.bReps,
@@ -336,7 +336,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val (bandsT, repsT) = graft.layouts.MinHashIndex.ensure(
       spark, "/root/testdata/sf0.001", corpus, "compactspec",
       P._1, P._2, P._3, P._4, Seq("region"))
-    val ensuredBuckets = graft.layouts.MinHashIndex.bucketsOf(spark, bandsT)
+    val ensuredBuckets = graft.layouts.Bucketed.bucketsOf(spark, bandsT)
     // two append rounds so files-per-bucket provably exceeds one
     val textD = (1 to 50).map(i => s"zeta$i").mkString(" ")
     val textE = (1 to 50).map(i => s"eta$i").mkString(" ")
@@ -392,7 +392,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
     // bucket spec preserved: still the count the index was ensured with
     // (append after compact must still match)
-    assert(graft.layouts.MinHashIndex.bucketsOf(spark, bandsT) == ensuredBuckets)
+    assert(graft.layouts.Bucketed.bucketsOf(spark, bandsT) == ensuredBuckets)
     // probe results are invariant under compaction
     assert(probePairs() == before, "compaction changed probe results")
     // and the content row counts are unchanged (placement-only rewrite)
@@ -420,7 +420,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       graft.layouts.Bucketed.appendGuard(spark, Seq(bandsT, repsT)) {
         bands.select(col("bkey64"), col("rep"))
           .write.mode("append")
-          .bucketBy(graft.layouts.MinHashIndex.bucketsOf(spark, bandsT), "bkey64")
+          .bucketBy(graft.layouts.Bucketed.bucketsOf(spark, bandsT), "bkey64")
           .sortBy("bkey64")
           .saveAsTable(bandsT)
         throw new RuntimeException("simulated crash between the append pair")

@@ -928,5 +928,14 @@ class LayoutLifecycleSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.graft.layout.mtimeSlackMs", "not-a-number")
     try assert(Bucketed.bucketFiles(spark, t) == compacted)
     finally spark.conf.unset("spark.graft.layout.mtimeSlackMs")
+
+    // invalidate forgets every per-table memo of the tables it drops: the
+    // cached listing and the memoized bucket count, not only the location
+    backdateMarker()
+    Bucketed.bucketFiles(spark, t)
+    assert(Bucketed.bucketsOf(spark, t) == 4)
+    assert(Bucketed.memoized(spark, t) == Set("location", "buckets", "listing"))
+    Bucketed.invalidate(spark, "bflist_lspec")
+    assert(Bucketed.memoized(spark, t).isEmpty, "invalidate left memo entries behind")
   }
 }
