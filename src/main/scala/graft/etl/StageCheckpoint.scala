@@ -40,7 +40,8 @@ object StageCheckpoint {
 
   /** Materialize `df` as a consumed-many-times stage under the policy
     * above. `eager = false` defers materialization to the first action
-    * (the TrainingDataPrep dependency-ordered-stage convention). */
+    * that reads it (examples.StageRunner's stages: one action over the
+    * last stage fills every checkpoint in lineage order). */
   def stage(df: DataFrame, eager: Boolean = true): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)

@@ -1385,9 +1385,11 @@ object LlmOps extends QueryGroup {
       // re-evaluates the groupBy per consumer and the extraction — the
       // row's dominant cost — runs twice (r17 RowProbe: 5.7 s of task
       // time for a 1.8 s row). Eager stage checkpoints make each pass
-      // run exactly once, the TrainingDataPrep materialization-point
-      // rule applied inside one row. At 100 TB these are the stage
-      // outputs a corpus-stats pipeline checkpoints to storage anyway.
+      // run exactly once, each in its own job before the row's own
+      // (examples.StageRunner gets the same from lazy checkpoints that
+      // one action over its last stage fills). At 100 TB these are the
+      // stage outputs a corpus-stats pipeline checkpoints to storage
+      // anyway.
       val groups = Tables.documents(s, dir)
         .groupBy(col("lang"), col("text"))
         .agg(sort_array(collect_list(col("doc_id"))).as("members"),

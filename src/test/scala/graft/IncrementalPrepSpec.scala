@@ -149,12 +149,13 @@ class IncrementalPrepSpec extends AnyFunSuite with SparkTestBase {
     val repsBefore = spark.table(repsT).count()
     val batch1 = batch.filter(col("id") % 1000000000L >= 4000000L &&
       col("id") % 1000000000L < 5000000L)
-    // compactIndex exercises the maintenance wiring end-to-end: the
-    // append's extra bucket files are rewritten away before batch2's
-    // probe, which must see identical content (Bucketed.compact is
-    // placement-only — DedupSpec pins the file-count mechanics)
-    val out1 = IncrementalPrep.run(spark, bandsT, repsT, batch1,
-      append = true, compactIndex = true)
+    // compacting right after the run exercises the maintenance wiring
+    // end-to-end: the append's extra bucket files are rewritten away
+    // before batch2's probe, which must see identical content
+    // (Bucketed.compact is placement-only — DedupSpec pins the
+    // file-count mechanics)
+    val out1 = IncrementalPrep.run(spark, bandsT, repsT, batch1, append = true)
+    graft.layouts.MinHashIndex.compact(spark, bandsT, repsT)
     val kept1 = out1.kept.select(col("id"), col("text")).collect()
     assert(kept1.nonEmpty)
     assertPartition(batch1, out1)

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The ingest path's batch-bounded sets are held on the driver
   * (DriverHeld): a probe and an IncrementalPrep batch run a fixed, small
   * number of Spark jobs, and past the cap both fall back to their
-  * distributed shapes with identical results. */
+  * distributed shapes with identical results. The full corpus prep's
+  * `_stages` row runs one action over its stages. */
 class IngestJobsSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = SparkTestBase.dataDir
@@ -67,7 +68,7 @@ class IngestJobsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("an IncrementalPrep batch with append plus the writes of kept and " +
-      "dropped runs 10 jobs: no broadcast build and no per-stage count") {
+      "dropped runs 9 jobs: no broadcast build and no per-stage count") {
     val tag = s"ingestjobs_${System.nanoTime()}"
     val (bandsT, repsT) = MinHashIndex.ensure(spark, sf, corpus(), tag,
       P._1, P._2, P._3, P._4, Seq("documents"))
@@ -81,10 +82,24 @@ class IngestJobsSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(spark.read.parquet(keptOut).count() >= 1)
     assert(spark.read.parquet(droppedOut).count() >= 1)
-    // batch cache; the probe's reps, band-scan broadcast, candidates and
-    // rep texts; the kept ids (materializing every stage); two appends;
-    // two writes
-    assert(jobs == 10, s"IncrementalPrep + writes ran $jobs jobs")
+    // the probe's reps (filling stages 0-2), band-scan broadcast,
+    // candidates and rep texts; the kept ids (the one action, filling
+    // stages 3-5); two appends; two writes
+    assert(jobs == 9, s"IncrementalPrep + writes ran $jobs jobs")
+  }
+
+  test("llm_corpus_prep_stages plus the write of its result runs 6 jobs: " +
+      "one action over the stages, none for the disabled ones") {
+    val out = tmpDir()
+    val jobs = jobsOf {
+      SparkEntry.queries("llm_corpus_prep_stages")(spark, sf)
+        .write.mode("overwrite").parquet(out)
+    }
+    assert(spark.read.parquet(out).count() == 5)
+    // the documents listing; the fixture's two broadcast builds (its
+    // stitched and contaminated plants); the count over the last stage;
+    // the sorted write's sample and write
+    assert(jobs == 6, s"llm_corpus_prep_stages + write ran $jobs jobs")
   }
 
   test("band-key hot spot: past DriverHeld's cap the probe and " +

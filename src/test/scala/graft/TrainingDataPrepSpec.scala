@@ -1,6 +1,7 @@
 package graft
 
 import graft.examples.TrainingDataPrep
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +18,28 @@ class TrainingDataPrepSpec extends AnyFunSuite with SparkTestBase {
     val (docs, planted, evalSh) =
       graft.operators.LlmOps.corpusPrepFixture(spark, sf)
     (docs, docs.unionByName(planted), evalSh)
+  }
+
+  private val labels = Seq("exact_dup", "low_quality", "near_dup",
+    "chunk_boilerplate", "decontaminated")
+
+  /** Every planted id is in exactly one of `kept` and `dropped`, and each
+    * stage label counts exactly the docs that stage lost (its attrition
+    * docs_in − docs_out). */
+  private def assertPartition(planted: DataFrame, out: TrainingDataPrep.Outputs): Unit = {
+    val ids = planted.select("doc_id").collect().map(_.getLong(0))
+    assert(ids.distinct.length == ids.length, "fixture ids must be unique")
+    val kept = out.kept.select("doc_id").collect().map(_.getLong(0))
+    val dropped = out.dropped.collect().map(r => (r.getLong(0), r.getString(1)))
+    val all = kept ++ dropped.map(_._1)
+    assert(all.length == all.distinct.length,
+      "an id is in kept and dropped, or dropped twice")
+    assert(all.toSet == ids.toSet)
+    out.attrition.orderBy(col("stage_ord")).collect().foreach { r =>
+      val label = labels(r.getInt(0) - 1)
+      assert(dropped.count(_._2 == label) == r.getLong(2) - r.getLong(3),
+        s"$label drops vs attrition ${r.getLong(2)} → ${r.getLong(3)}")
+    }
   }
 
   test("planted copies and mutants die in their intended stages") {
@@ -114,5 +137,23 @@ class TrainingDataPrepSpec extends AnyFunSuite with SparkTestBase {
     // every kept doc clears the bar and total drops reconcile
     assert(out.kept.filter(col("quality") < 0.45).count() == 0)
     assert(out.dropped.count() == planted.count() - out.kept.count())
+    assertPartition(planted, out)
+  }
+
+  test("the _stages settings disable stages 3-5: they pass through with " +
+      "in = out and label no drop") {
+    val (_, planted, _) = corpus
+    val out = TrainingDataPrep.prepare(planted,
+      neardupThreshold = 1.01, chunkDupMax = 1.0, evalNgrams = None)
+    val rows = out.attrition.orderBy(col("stage_ord")).collect()
+      .map(r => (r.getInt(0), r.getLong(2), r.getLong(3)))
+    assert(rows.map(_._1).toSeq == (1 to 5))
+    assert(rows(1)._3 < rows(0)._2, "stages 1-2 must drop something")
+    rows.drop(2).foreach { case (ord, in, o) =>
+      assert(in == o && o == rows(1)._3, s"stage $ord: in $in, out $o")
+    }
+    val stages = out.dropped.select("stage").distinct().collect().map(_.getString(0)).toSet
+    assert(stages.subsetOf(Set("exact_dup", "low_quality")), stages)
+    assertPartition(planted, out)
   }
 }

@@ -19,6 +19,17 @@ A footer sums jobs, broadcast builds, stages, tasks and CPU. Given a
 directory of logs, the newest is read; a rolling log (an `eventlog_v2_*`
 directory, Spark's default) is read part by part. The log must be
 uncompressed (`spark.eventLog.compress=false`).
+
+    python3 tools/joblog.py <log> --blocks
+
+checks instead that no cached or checkpointed partition was computed
+twice. It reads the `SparkListenerBlockUpdated` events a log carries when
+the session sets `spark.eventLog.logBlockUpdates.enabled=true`, and for
+each RDD whose partition blocks were put more than once at the same
+storage level (memory, disk, or both) it lists those partitions: the
+stage checkpoint or cache was recomputed. Blocks dropped from memory to
+disk are listed separately; a drop is a spill, not a recompute. The exit
+status is 1 if any block was put twice.
 """
 import argparse
 import json
@@ -113,12 +124,65 @@ def read_events(path):
                     yield json.loads(line)
 
 
+def block_level(info):
+    sl = info.get("Storage Level") or {}
+    mem, disk = sl.get("Use Memory"), sl.get("Use Disk")
+    return "memory+disk" if mem and disk else "memory" if mem else "disk" if disk else None
+
+
+def blocks(log):
+    """Print the RDD partition blocks put twice at one storage level, and
+    the memory-to-disk drops; return the number of blocks put twice."""
+    levels = defaultdict(list)       # (rdd, partition) -> levels, in order
+    rdds = {}                        # rdd id -> RDD Info
+    for e in read_events(log):
+        ev = e.get("Event")
+        if ev == "SparkListenerBlockUpdated":
+            info = e["Block Updated Info"]
+            kind, _, rest = info["Block ID"].partition("_")
+            if kind == "rdd":
+                rdd, part = rest.split("_")
+                levels[(int(rdd), int(part))].append(block_level(info))
+        elif ev == "SparkListenerStageSubmitted":
+            for r in e["Stage Info"].get("RDD Info", []):
+                rdds.setdefault(r["RDD ID"], r)
+    if not levels:
+        sys.exit("no rdd block updates: set spark.eventLog.logBlockUpdates.enabled=true")
+    twice, dropped = defaultdict(list), defaultdict(list)
+    for (rdd, part), seq in sorted(levels.items()):
+        puts = [lv for lv in seq if lv]
+        if len(puts) != len(set(puts)):
+            twice[rdd].append(part)
+        if any(a and "memory" in a and b == "disk" for a, b in zip(seq, seq[1:])):
+            dropped[rdd].append(part)
+
+    def describe(rdd):
+        r = rdds.get(rdd, {})
+        kind = "checkpoint" if scope_name(r) == "map" else "cache"
+        return f"{rdd:>5} {kind:<10} {r.get('Callsite', '?')}"
+
+    n_rdds = len({rdd for rdd, _ in levels})
+    print(f"{len(levels)} rdd blocks in {n_rdds} RDDs; "
+          f"{sum(map(len, twice.values()))} put twice at one level in {len(twice)} RDDs; "
+          f"{sum(map(len, dropped.values()))} dropped memory->disk in {len(dropped)} RDDs")
+    for title, sel in (("put twice (recomputed)", twice), ("dropped memory->disk", dropped)):
+        if sel:
+            print(f"{title}:\n{'rdd':>5} {'kind':<10} call site: partitions")
+            for rdd, parts in sorted(sel.items()):
+                print(f"{describe(rdd)}: {','.join(map(str, parts))}")
+    return sum(map(len, twice.values()))
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("log")
     ap.add_argument("--from-job", type=int, default=None)
     ap.add_argument("--to-job", type=int, default=None)
+    ap.add_argument("--blocks", action="store_true",
+                    help="report recomputed and spilled RDD blocks instead of jobs")
     a = ap.parse_args()
+    if a.blocks:
+        sys.exit(1 if blocks(a.log) else 0)
 
     jobs = {}
     stage_job = {}
