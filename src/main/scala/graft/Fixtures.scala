@@ -28,7 +28,7 @@ object Fixtures {
   private val FixtureVersion = 2
 
   /** CONTENT signature of a source parquet (r6 verdict item 7): the
-    * size+mtime sourceSig rotated on every driver testdata regeneration
+    * size+mtime signature rotated on every driver testdata regeneration
     * even when the bytes were identical, and the two expensive model
     * fixtures (cpsig ~3 s, sdcents ~3 s) dominate fixture builds — so an
     * unchanged-content vintage rebuilt them for nothing. Hashing the
@@ -60,13 +60,19 @@ object Fixtures {
     else fileMd5(f)
   }
 
+  /** Every fixture lives at `<PathPrefix><name>_<data dir basename>`. */
+  private val PathPrefix = "/tmp/graft_fixture_"
+
+  /** The DuckDB scan of fixture `name` as the sf0.01 oracles read it. */
+  def oracleScan(name: String): String =
+    s"read_parquet('$PathPrefix${name}_sf0.01/*.parquet')"
+
   private def ensure(s: SparkSession, dir: String, name: String,
       srcTable: String = "documents")
       (build: => DataFrame): String = {
     val src = new java.io.File(s"$dir/$srcTable.parquet")
     val sig = s"v$FixtureVersion|${contentSig(src)}"
-    val base = new java.io.File(dir).getName
-    val path = s"/tmp/graft_fixture_${name}_$base"
+    val path = s"$PathPrefix${name}_${new java.io.File(dir).getName}"
     val sigFile = java.nio.file.Paths.get(s"$path/_graft_sig")
     val fresh = new java.io.File(s"$path/_SUCCESS").exists &&
       java.nio.file.Files.exists(sigFile) &&

@@ -213,7 +213,7 @@ object Pq {
     * the previous m-chained `element_at(typedlit)` nodes and ~3·m fewer
     * plan nodes in every freshly-planned probe query). Summation order is
     * j-ascending, bit-identical to the old `reduce(_ + _)` composition
-    * (AdcDotSpec pins the parity), so the persisted≡inline agreement
+    * (NativeExprSpec's adc_dot case pins the parity), so the persisted≡inline agreement
     * PqSpec pins cannot drift; the zero-reconstruction guard mirrors
     * llm_embed_pq's; subspace width derives from q.length and books.size
     * (never hardcoded). */

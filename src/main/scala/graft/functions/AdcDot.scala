@@ -28,9 +28,9 @@ import org.apache.spark.sql.types._
   * probe plan (20–34 % lower single-query ADC latency across the
   * m × nprobe grid).
   *
-  * BIT-EXACT parity contract with the composition (AdcDotSpec): the
-  * sum runs j ascending — the same left-fold order as the
-  * `reduce(_ + _)` it replaces — so scores are bit-identical and the
+  * BIT-EXACT parity contract with the composition (NativeExprSpec's
+  * adc_dot case): the sum runs j ascending — the same left-fold order as
+  * the `reduce(_ + _)` it replaces — so scores are bit-identical and the
   * persisted≡inline agreement pins (PqSpec) are unaffected.
   *
   * Null contract (mirrors the composition's element_at semantics):

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Word bigram MULTISET of a (normalized, single-spaced) string in one
+/** Word bigram MULTISET of a string in one
   * JVM pass — native twin of the
   * `zip_with(slice(words, 1, n−1), slice(words, 2, n−1), (a,b) →
   * concat(a, ' ', b))` composition the bigram-LM row exploded (r18): that
@@ -16,14 +16,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * materializing it), so the per-pass kernel cost is paid 2–3×.
   *
   * Unlike [[WordShingles]] this keeps DUPLICATES (counts feed the LM) —
-  * no distinct filter at all. For single-spaced text every bigram is a
-  * contiguous byte range of the input (split-on-' ' equals byte-split;
-  * the concat with one space is byte-identical to the slice), so the hot
-  * path is one defensive byte copy plus zero-copy `fromBytes` views.
-  * Texts with fewer than two words yield an EMPTY array (`explode` drops
-  * them — the zip_with-of-empty-slices behavior). Non-single-spaced
-  * inputs take [[slowEval]], a verbatim replication of the declarative
-  * form's semantics (NativeExprSpec pins both paths). */
+  * no distinct filter at all. Every bigram is a contiguous byte range of
+  * the input whatever the spacing (the words of `split(" ", -1)` are the
+  * byte runs between single 0x20 bytes, empty runs included, and the
+  * concat with one space is byte-identical to the slice), so the kernel
+  * is one defensive byte copy plus zero-copy `fromBytes` views. Texts
+  * with fewer than two words yield an EMPTY array (`explode` drops them —
+  * the zip_with-of-empty-slices behavior). NativeExprSpec compares it
+  * with the declarative form on irregularly spaced input. */
 case class WordBigrams(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
@@ -42,14 +42,10 @@ case class WordBigrams(child: Expression)
     val bytes = u.getBytes
     val n = bytes.length
     if (n == 0) return new GenericArrayData(new Array[Any](0))
-    if (bytes(0) == ' ' || bytes(n - 1) == ' ') return slowEval(u)
     var nWords = 1
-    var i = 1
+    var i = 0
     while (i < n) {
-      if (bytes(i) == ' ') {
-        if (bytes(i - 1) == ' ') return slowEval(u)
-        nWords += 1
-      }
+      if (bytes(i) == ' ') nWords += 1
       i += 1
     }
     if (nWords < 2) return new GenericArrayData(new Array[Any](0))
@@ -67,21 +63,6 @@ case class WordBigrams(child: Expression)
       val off = starts(b)
       out(b) = UTF8String.fromBytes(bytes, off, starts(b + 2) - 1 - off)
       b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Exact-semantics fallback replicating the declarative
-    * zip_with(slice, slice, concat-with-space) form for inputs that are
-    * not single-spaced. */
-  private[graft] def slowEval(u: UTF8String): Any = {
-    val words = u.toString.split(" ", -1)
-    if (words.length < 2) return new GenericArrayData(new Array[Any](0))
-    val out = new Array[Any](words.length - 1)
-    var i = 0
-    while (i < words.length - 1) {
-      out(i) = UTF8String.fromString(words(i) + " " + words(i + 1))
-      i += 1
     }
     new GenericArrayData(out)
   }

@@ -7,28 +7,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DISTINCT word k-shingles of a (normalized, single-spaced) string in one
-  * JVM pass — native twin of `array_distinct(TextOps.wordShingles(text, k))`
-  * whose interpreted slice/concat_ws per position was the residual cost of
-  * the MinHash pipeline at sf0.1 (the shingle subtree is evaluated three
-  * times: banding + both sides of the candidate join). Same shingles, same
+/** DISTINCT word k-shingles of a string in one JVM pass — native twin of
+  * `array_distinct(TextOps.wordShingles(text, k))` whose interpreted
+  * slice/concat_ws per position was the residual cost of the MinHash
+  * pipeline at sf0.1 (the shingle subtree is evaluated three times:
+  * banding + both sides of the candidate join). Same shingles, same
   * first-occurrence order: texts shorter than k words yield their single
-  * full window.
+  * full window, and k ≤ 0 yields one empty shingle.
   *
   * r18 allocation-path note: the text kernels are allocation/memory-
   * bandwidth-bound (the r17 stage-widening A/B lost 5.4→33.9 s task time),
-  * so this kernel now runs BYTE-SLICE-ONLY on its hot path. For
-  * single-spaced text (no leading/trailing/double space — exactly what
-  * `TextOps.normalize` produces) every k-word window is a CONTIGUOUS byte
-  * range of the input: split-on-' ' equals byte-split (0x20 never occurs
-  * inside a multi-byte UTF-8 sequence) and the StringBuilder join of k
-  * words with single spaces is byte-identical to the input slice. One
-  * defensive byte copy (`getBytes`), one open-addressed offset table for
-  * the distinct filter (hash + byte-compare, no 64-bit-collision risk),
-  * and each emitted shingle is a zero-copy `UTF8String.fromBytes` view of
-  * that copy. Inputs that violate the single-spaced precondition take
-  * [[slowEval]] — the previous implementation, kept verbatim so results
-  * are bit-identical for every input (NativeExprSpec pins both paths). */
+  * so this kernel runs BYTE-SLICE-ONLY. The words of `split(" ", -1)` are
+  * exactly the byte runs between single 0x20 bytes, empty runs included
+  * (0x20 never occurs inside a multi-byte UTF-8 sequence), so joining k
+  * consecutive words with one space reproduces a CONTIGUOUS byte range of
+  * the input whatever the spacing. One defensive byte copy (`getBytes`),
+  * one open-addressed offset table for the distinct filter (hash +
+  * byte-compare, no 64-bit-collision risk), and each emitted shingle is a
+  * zero-copy `UTF8String.fromBytes` view of that copy. NativeExprSpec
+  * compares it with the declarative form on irregularly spaced input. */
 case class WordShingles(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
 
@@ -49,21 +46,16 @@ case class WordShingles(left: Expression, right: Expression)
     // (the UnsafeRow/column-vector case), so views into it stay stable.
     val bytes = u.getBytes
     val n = bytes.length
-    if (n == 0 || k <= 0) return slowEval(u, k)
-    // Fast path precondition: single-spaced (no leading/trailing/double
-    // space). Count words in the same pass.
-    if (bytes(0) == ' ' || bytes(n - 1) == ' ') return slowEval(u, k)
+    // k ≤ 0 windows are all empty; empty text is one empty word
+    if (n == 0 || k <= 0) return new GenericArrayData(Array[Any](UTF8String.EMPTY_UTF8))
     var nWords = 1
-    var i = 1
+    var i = 0
     while (i < n) {
-      if (bytes(i) == ' ') {
-        if (bytes(i - 1) == ' ') return slowEval(u, k)
-        nWords += 1
-      }
+      if (bytes(i) == ' ') nWords += 1
       i += 1
     }
     if (nWords <= k) {
-      // single full window — the whole (already trimmed) string
+      // single full window — the whole string
       return new GenericArrayData(Array[Any](UTF8String.fromBytes(bytes, 0, n)))
     }
     // word start offsets, plus a sentinel one past the end so window w's
@@ -115,37 +107,6 @@ case class WordShingles(left: Expression, right: Expression)
       arr(j) = UTF8String.fromBytes(bytes, outOff(j), outLen(j))
       j += 1
     }
-    new GenericArrayData(arr)
-  }
-
-  /** The original String-based implementation — the exact-semantics
-    * fallback for inputs the byte fast path refuses (empty, k ≤ 0, or not
-    * single-spaced). */
-  private[graft] def slowEval(u: UTF8String, k: Int): Any = {
-    val words = u.toString.split(" ", -1)
-    val out = new java.util.LinkedHashSet[String]()
-    if (words.length <= k) {
-      out.add(words.mkString(" "))
-    } else {
-      val sb = new java.lang.StringBuilder()
-      var i = 0
-      val end = words.length - k
-      while (i <= end) {
-        sb.setLength(0)
-        var j = 0
-        while (j < k) {
-          if (j > 0) sb.append(' ')
-          sb.append(words(i + j))
-          j += 1
-        }
-        out.add(sb.toString)
-        i += 1
-      }
-    }
-    val arr = new Array[Any](out.size)
-    val it = out.iterator()
-    var j = 0
-    while (it.hasNext) { arr(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(arr)
   }
 

@@ -1089,7 +1089,8 @@ object Bucketed {
     * THE SAME batchId, so the replay hits the stamp and is a no-op: the
     * layout holds exactly one copy of every micro-batch even across
     * kill-and-restart, and consumers keep the zero-exchange plans the
-    * layout exists for (StreamLayoutIngestSpec pins both). `targets`
+    * layout exists for (LayoutLifecycleSpec's exactly-once streaming
+    * ingest case pins both). `targets`
     * maps the micro-batch to each member's delta rows (derive columns,
     * project to the layout schema); `tagPrefix` must be unique per
     * (streaming query → family) pairing — include the query name/id.
@@ -1410,9 +1411,7 @@ object Bucketed {
       s"${sp.name}:${sp.key}:${sp.effectiveSortCols.mkString("+")}:" +
         sp.src.schema.map(f => f.name + ":" + f.dataType.sql).mkString(","))
       .mkString(";")
-    // MD5, not String.hashCode: a 32-bit tag collision would silently
-    // serve a WRONG cached layout (the ZOrder.cacheTag argument)
-    val tag = ZOrder.cacheTag(s"$dir|$sig|$buckets|$specSig")
+    val tag = LayoutUtil.cacheId(s"$dir|$sig|$buckets|$specSig")
     val db = s"graftbuckets_$tag"
     val loc = s"${layoutRoot(s)}/graft_bucket_wh_$tag"
     val locPath = new Path(loc)

@@ -31,9 +31,9 @@ object LayoutUtil {
   def artifactRoot(s: org.apache.spark.sql.SparkSession): String =
     s.conf.get("spark.graft.layout.root", "/tmp")
 
-  /** Collision-safe cache id for a layout key (the hardened ZOrder
-    * convention: a 32-bit String.hashCode collision would silently serve
-    * a wrong layout). */
+  /** Collision-safe cache id for a layout key: MD5 as lowercase hex (a
+    * 32-bit String.hashCode collision would silently serve a wrong
+    * layout). Every layout's cache tag is built with it. */
   def cacheId(key: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString

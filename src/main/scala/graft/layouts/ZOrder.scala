@@ -20,13 +20,14 @@ import org.apache.spark.sql.types.LongType
   *
   * 100 TB shape: the layout is one range-shuffle + sorted write, paid
   * once, owned by this helper (query builders stay pure — the Bucketed
-  * convention, cached by source size+mtime). `repartitionByRange` on the
-  * z-value distributes the global sort; `maxRecordsPerFile` bounds file
-  * size so every file spans a narrow z-range and min/max stays tight.
+  * convention, cached by the source's data-file signature).
+  * `repartitionByRange` on the z-value distributes the global sort;
+  * `maxRecordsPerFile` bounds file size so every file spans a narrow
+  * z-range and min/max stays tight.
   */
 object ZOrder {
 
-  /** One shared Hadoop configuration for the sidecar/signature probes
+  /** One shared Hadoop configuration for the marker and sidecar probes
     * (construction parses the default XML resources — not something to
     * repeat twice per ensure call). */
   private lazy val hconf = new org.apache.hadoop.conf.Configuration()
@@ -44,39 +45,10 @@ object ZOrder {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Size+max-mtime of a parquet source that may be a single file (the
-    * driver testdata) or a directory of part files (any Spark-written
-    * source) — the signature is derived from the DATA files, not the
-    * filesystem's directory entry, whose length/mtime are fs-dependent.
-    * Resolved through the [[LayoutFs]] seam so an hdfs://-backed source
-    * signs identically to a local one (r10 verdict item 2). */
-  private[graft] def sourceSig(path: String): String = {
-    val conf = hconf
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!LayoutFs.exists(p, conf)) "0_0"
-    else {
-      val st = LayoutFs.fs(p, conf).getFileStatus(p)
-      if (st.isDirectory) {
-        val parts = LayoutFs.list(p, conf)
-          .filter(c => c.isFile && !c.getPath.getName.startsWith("_") &&
-            !c.getPath.getName.startsWith("."))
-        s"${parts.map(_.getLen).sum}_${
-          if (parts.isEmpty) 0L else parts.map(_.getModificationTime).max}"
-      } else s"${st.getLen}_${st.getModificationTime}"
-    }
-  }
-
-  /** Collision-safe cache tag: MD5 of the full key string (a 32-bit
-    * String.hashCode tag could silently serve a WRONG cached layout on
-    * collision — a correctness hazard, not a perf one). */
-  private[graft] def cacheTag(key: String): String =
-    java.security.MessageDigest.getInstance("MD5").digest(
-      key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-
   /** Ensure a z-ordered parquet copy of `src` (derived from
     * `dir/srcTable.parquet`) exists; returns its path. Idempotent, cached
-    * by source size+mtime so regenerated testdata is never served stale.
+    * by the source's per-file signature (`LayoutUtil.dataSig`), so
+    * regenerated testdata is never served stale.
     *
     * The layout stores the two key columns' min/max as a sidecar written
     * at build time ([[stats]]) — the lakehouse-metadata convention: a box
@@ -90,7 +62,8 @@ object ZOrder {
              srcTable: String, xCol: String, yCol: String,
              rangePartitions: Int = 4, targetFiles: Int = 64): String = {
     val conf = hconf
-    val tag = cacheTag(s"$dir|$name|${sourceSig(s"$dir/$srcTable.parquet")}")
+    val tag = LayoutUtil.cacheId(
+      s"$dir|$name|${LayoutUtil.dataSig(s"$dir/$srcTable.parquet")}")
     val path = s"${LayoutUtil.artifactRoot(s)}/graft_zorder_${name}_$tag"
     if (!LayoutFs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"), conf)
         || !LayoutFs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_minmax"), conf)) {

@@ -244,6 +244,16 @@ object Joins extends QueryGroup {
       GROUP BY label
       ORDER BY label ASC NULLS FIRST"""))
 
+  /** The as-of rows' oracle: DuckDB's native ASOF LEFT JOIN over the raw
+    * events. Every as-of row, layout variants included, answers it. */
+  private val AsofOracle = """
+      SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
+             CAST(c.ts AS TIMESTAMP) AS prior_click_ts
+      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        ON p.user_id = c.user_id AND c.ts <= p.ts
+      ORDER BY p.event_id ASC NULLS FIRST"""
+
   /** op 25 — as-of join (sorted MERGE + RETAIN carry-forward): each
     * purchase event gets the user's most recent click at-or-before it.
     * Implemented as union + ordered window `last(ignoreNulls)` — a single
@@ -270,32 +280,26 @@ object Joins extends QueryGroup {
         .select(col("event_id"), col("user_id"), col("ts"), col("prior_click_ts"))
         .orderBy(col("event_id").asc_nulls_first)
     },
-    Some("""
-      SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-             CAST(c.ts AS TIMESTAMP) AS prior_click_ts
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON p.user_id = c.user_id AND c.ts <= p.ts
-      ORDER BY p.event_id ASC NULLS FIRST"""))
+    Some(AsofOracle))
 
   /** op 26 — interval containment: error events within 1 hour after a
-    * signup by the same user (equi on user + time band). */
-  private val joinInterval = GraftQuery(
-    "join_interval",
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val signups = e.filter(col("event_type") === "signup")
-        .select(col("user_id").as("su"), col("ts").as("signup_ts"))
-      val errors = e.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-      errors.join(signups,
-          col("user_id") === col("su") &&
-            col("error_ts") >= col("signup_ts") &&
-            col("error_ts") < col("signup_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("user_id"), col("error_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_ts").asc_nulls_first)
-    },
-    Some("""
+    * signup by the same user (equi on user + time band). `errorsHint`
+    * shapes the error side before the join. */
+  private def intervalJoin(e: DataFrame, errorsHint: DataFrame => DataFrame): DataFrame = {
+    val signups = e.filter(col("event_type") === "signup")
+      .select(col("user_id").as("su"), col("ts").as("signup_ts"))
+    val errors = e.filter(col("event_type") === "error")
+      .select(col("user_id"), col("event_id").as("error_id"), col("ts").as("error_ts"))
+    errorsHint(errors).join(signups,
+        col("user_id") === col("su") &&
+          col("error_ts") >= col("signup_ts") &&
+          col("error_ts") < col("signup_ts") + expr("INTERVAL 1 HOUR"))
+      .select(col("user_id"), col("error_id"), col("error_ts"), col("signup_ts"))
+      .orderBy(col("error_id").asc_nulls_first, col("signup_ts").asc_nulls_first)
+  }
+
+  /** The interval rows' oracle: the plain equi + band join over raw events. */
+  private val IntervalOracle = """
       SELECT e.user_id, e.event_id AS error_id,
              CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
       FROM (SELECT * FROM events WHERE event_type = 'error') e
@@ -303,33 +307,33 @@ object Joins extends QueryGroup {
         ON e.user_id = s.user_id
        AND CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
        AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-      ORDER BY error_id ASC NULLS FIRST, signup_ts ASC NULLS FIRST"""))
+      ORDER BY error_id ASC NULLS FIRST, signup_ts ASC NULLS FIRST"""
+
+  private val joinInterval = GraftQuery(
+    "join_interval",
+    (s, dir) => intervalJoin(Tables.events(s, dir), identity),
+    Some(IntervalOracle))
 
   /** op 25 via the custom operator path (c): the SAME as-of semantics
     * executed by graft's native AsOfJoinPlan/AsOfJoinExec (logical node →
     * strategy → co-partitioned one-pass merge exec) instead of the
     * union+window formulation — both hash-verified against DuckDB's native
-    * ASOF JOIN. */
+    * ASOF JOIN. The body of every native as-of row over events `e`. */
+  private def asofMerge(e: DataFrame): DataFrame = {
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
+    graft.plans.AsOf.join(purchases, clicks, "user_id", "c_user", "ts", "click_ts")
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("click_ts").as("prior_click_ts"))
+      .orderBy(col("event_id").asc_nulls_first)
+  }
+
   private val joinAsofNative = GraftQuery(
     "join_asof_native",
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-      graft.plans.AsOf.join(purchases, clicks, "user_id", "c_user", "ts", "click_ts")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("click_ts").as("prior_click_ts"))
-        .orderBy(col("event_id").asc_nulls_first)
-    },
-    Some("""
-      SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-             CAST(c.ts AS TIMESTAMP) AS prior_click_ts
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON p.user_id = c.user_id AND c.ts <= p.ts
-      ORDER BY p.event_id ASC NULLS FIRST"""))
+    (s, dir) => asofMerge(Tables.events(s, dir)),
+    Some(AsofOracle))
 
   /** TIME-SERIES layout (r8 verdict item 1 — the asof/interval-family
     * analogue of the equi-key fact layouts): events bucketed by the
@@ -384,25 +388,8 @@ object Joins extends QueryGroup {
     * plan); PlanSpec pins zero exchange / zero sort under AsOfJoinExec. */
   private val joinAsofColocated = GraftQuery(
     "join_asof_colocated",
-    (s, dir) => {
-      val eventsB = bucketedEvents(s, dir)
-      val e = s.table(eventsB)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-      graft.plans.AsOf.join(purchases, clicks, "user_id", "c_user", "ts", "click_ts")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("click_ts").as("prior_click_ts"))
-        .orderBy(col("event_id").asc_nulls_first)
-    },
-    Some("""
-      SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-             CAST(c.ts AS TIMESTAMP) AS prior_click_ts
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON p.user_id = c.user_id AND c.ts <= p.ts
-      ORDER BY p.event_id ASC NULLS FIRST"""))
+    (s, dir) => asofMerge(s.table(bucketedEvents(s, dir))),
+    Some(AsofOracle))
 
   /** The as-of merge over the INCREMENTALLY-MAINTAINED time-series layout
     * ([[bucketedEventsIncremental]]: 7/8 base build + a 1/8 appendOnce
@@ -416,25 +403,8 @@ object Joins extends QueryGroup {
     * `Bucketed.compact` removes (IncrementalLayoutSpec). */
   private val joinAsofColocatedIncr = GraftQuery(
     "join_asof_colocated_incr",
-    (s, dir) => {
-      val eventsB = bucketedEventsIncremental(s, dir)
-      val e = s.table(eventsB)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-      graft.plans.AsOf.join(purchases, clicks, "user_id", "c_user", "ts", "click_ts")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("click_ts").as("prior_click_ts"))
-        .orderBy(col("event_id").asc_nulls_first)
-    },
-    Some("""
-      SELECT p.event_id, p.user_id, CAST(p.ts AS TIMESTAMP) AS ts,
-             CAST(c.ts AS TIMESTAMP) AS prior_click_ts
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON p.user_id = c.user_id AND c.ts <= p.ts
-      ORDER BY p.event_id ASC NULLS FIRST"""))
+    (s, dir) => asofMerge(s.table(bucketedEventsIncremental(s, dir))),
+    Some(AsofOracle))
 
   /** op 26 over the TIME-SERIES layout: the interval-containment join as
     * a zero-exchange zero-sort merge join — both sides scan `events_bu`
@@ -445,45 +415,9 @@ object Joins extends QueryGroup {
     * same oracle as join_interval. */
   private val joinIntervalColocated = GraftQuery(
     "join_interval_colocated",
-    (s, dir) => {
-      val eventsB = bucketedEvents(s, dir)
-      val e = s.table(eventsB)
-      val signups = e.filter(col("event_type") === "signup")
-        .select(col("user_id").as("su"), col("ts").as("signup_ts"))
-      val errors = e.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-      errors.hint("merge").join(signups,
-          col("user_id") === col("su") &&
-            col("error_ts") >= col("signup_ts") &&
-            col("error_ts") < col("signup_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("user_id"), col("error_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_ts").asc_nulls_first)
-    },
-    Some("""
-      SELECT e.user_id, e.event_id AS error_id,
-             CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
-      FROM (SELECT * FROM events WHERE event_type = 'error') e
-      JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        ON e.user_id = s.user_id
-       AND CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
-       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-      ORDER BY error_id ASC NULLS FIRST, signup_ts ASC NULLS FIRST"""))
+    (s, dir) => intervalJoin(s.table(bucketedEvents(s, dir)), _.hint("merge")),
+    Some(IntervalOracle))
 
-  /** PURE-RANGE join (NO equi key) over the RANGE-BANDED layout — the
-    * non-equi storage analogue of the bucketed equi layouts (r8 verdict
-    * item 1, layouts.RangeBanded): every error event paired with EVERY
-    * signup (any user) in the preceding hour. Without a layout Spark
-    * must plan this as BroadcastNestedLoopJoin — probe × corpus
-    * comparisons. The banded layout stores events bucketed+sorted on
-    * `band = ts div 1h`, turning the range predicate into a band EQUI
-    * join (probe rows explode to their two candidate bands) with the
-    * range as a residual: the banded side is never shuffled and never
-    * sorted, the probe pays one shuffle of 2× its own rows, and the
-    * merge hint pins the at-scale SMJ shape (under the broadcast
-    * threshold the small probe would legitimately broadcast — cheaper
-    * still, and still zero corpus shuffle). Oracle: the plain range-join
-    * SQL (the layout changes only the physical plan); PlanSpec pins
-    * no BNLJ, no banded-side exchange, no banded-side sort. */
   /** 1 h in µs — the band width every range-banded events layout here
     * uses. */
   private[graft] val HourMicros = 3600000000L
@@ -518,29 +452,53 @@ object Joins extends QueryGroup {
     t
   }
 
-  private val joinRangeBanded = GraftQuery(
-    "join_range_banded",
-    (s, dir) => {
-      val hourMicros = HourMicros
-      val t = rangeBandedEvents(s, dir)
-      val errors = s.table(t).filter(col("event_type") === "error")
-        .select(col("band"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-        .hint("merge")
-      val signups = Tables.events(s, dir).filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("ts").as("signup_ts"))
-      graft.layouts.RangeBanded.rangeJoin(errors, signups,
-          "error_ts", "signup_ts", windowMicros = hourMicros, bandMicros = hourMicros)
-        .select(col("error_id"), col("signup_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_id").asc_nulls_first)
-    },
-    Some("""
+  /** PURE-RANGE join (NO equi key) over the RANGE-BANDED layout — the
+    * non-equi storage analogue of the bucketed equi layouts (r8 verdict
+    * item 1, layouts.RangeBanded): every error event paired with EVERY
+    * signup (any user) in the preceding hour. Without a layout Spark
+    * must plan this as BroadcastNestedLoopJoin — probe × corpus
+    * comparisons. The banded layout stores events bucketed+sorted on
+    * `band = ts div 1h`, turning the range predicate into a band EQUI
+    * join (probe rows explode to their two candidate bands) with the
+    * range as a residual: the banded side is never shuffled and never
+    * sorted, the probe pays one shuffle of 2× its own rows, and the
+    * merge hint pins the at-scale SMJ shape (under the broadcast
+    * threshold the small probe would legitimately broadcast — cheaper
+    * still, and still zero corpus shuffle). Oracle: the plain range-join
+    * SQL (the layout changes only the physical plan); PlanSpec pins
+    * no BNLJ, no banded-side exchange, no banded-side sort.
+    *
+    * The body of every range-banded row: banded table `t`, a window of
+    * `windowMicros`, and `salt` residues enumerated per candidate band. */
+  private def rangeBandedJoin(s: org.apache.spark.sql.SparkSession, dir: String, t: String,
+      windowMicros: Long, salt: Int = 1): DataFrame = {
+    val errors = s.table(t).filter(col("event_type") === "error")
+      .select(col("band"), col("event_id").as("error_id"), col("ts").as("error_ts"))
+      .hint("merge")
+    val signups = Tables.events(s, dir).filter(col("event_type") === "signup")
+      .select(col("event_id").as("signup_id"), col("ts").as("signup_ts"))
+    graft.layouts.RangeBanded.rangeJoin(errors, signups,
+        "error_ts", "signup_ts", windowMicros = windowMicros,
+        bandMicros = HourMicros, salt = salt)
+      .select(col("error_id"), col("signup_id"), col("error_ts"), col("signup_ts"))
+      .orderBy(col("error_id").asc_nulls_first, col("signup_id").asc_nulls_first)
+  }
+
+  /** The range-banded rows' oracle: the plain range join over raw events
+    * with a window of `interval` (a DuckDB interval literal). */
+  private def rangeOracle(interval: String): String = s"""
       SELECT e.event_id AS error_id, s.event_id AS signup_id,
              CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
       FROM (SELECT * FROM events WHERE event_type = 'error') e
       JOIN (SELECT * FROM events WHERE event_type = 'signup') s
         ON CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
-       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-      ORDER BY error_id ASC NULLS FIRST, signup_id ASC NULLS FIRST"""))
+       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL $interval
+      ORDER BY error_id ASC NULLS FIRST, signup_id ASC NULLS FIRST"""
+
+  private val joinRangeBanded = GraftQuery(
+    "join_range_banded",
+    (s, dir) => rangeBandedJoin(s, dir, rangeBandedEvents(s, dir), HourMicros),
+    Some(rangeOracle("1 HOUR")))
 
   /** [[joinRangeBanded]] with a window WIDER than the layout's band
     * (2.5 h over 1 h bands — r9 verdict item 2): a user whose query
@@ -554,28 +512,8 @@ object Joins extends QueryGroup {
     * shuffled and never sorted. */
   private val joinRangeBandedWide = GraftQuery(
     "join_range_banded_wide",
-    (s, dir) => {
-      val hourMicros = HourMicros
-      val t = rangeBandedEvents(s, dir)
-      val errors = s.table(t).filter(col("event_type") === "error")
-        .select(col("band"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-        .hint("merge")
-      val signups = Tables.events(s, dir).filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("ts").as("signup_ts"))
-      graft.layouts.RangeBanded.rangeJoin(errors, signups,
-          "error_ts", "signup_ts", windowMicros = hourMicros * 5 / 2,
-          bandMicros = hourMicros)
-        .select(col("error_id"), col("signup_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_id").asc_nulls_first)
-    },
-    Some("""
-      SELECT e.event_id AS error_id, s.event_id AS signup_id,
-             CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
-      FROM (SELECT * FROM events WHERE event_type = 'error') e
-      JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        ON CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
-       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 150 MINUTE
-      ORDER BY error_id ASC NULLS FIRST, signup_id ASC NULLS FIRST"""))
+    (s, dir) => rangeBandedJoin(s, dir, rangeBandedEvents(s, dir), HourMicros * 5 / 2),
+    Some(rangeOracle("150 MINUTE")))
 
   /** The INCREMENTALLY-MAINTAINED banded layout (r10): built from a
     * deterministic 7/8 base of events, the remaining 1/8 folded in as a
@@ -587,27 +525,8 @@ object Joins extends QueryGroup {
     * fail the hash gate. */
   private val joinRangeBandedIncr = GraftQuery(
     "join_range_banded_incr",
-    (s, dir) => {
-      val hourMicros = HourMicros
-      val t = rangeBandedEventsIncremental(s, dir)
-      val errors = s.table(t).filter(col("event_type") === "error")
-        .select(col("band"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-        .hint("merge")
-      val signups = Tables.events(s, dir).filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("ts").as("signup_ts"))
-      graft.layouts.RangeBanded.rangeJoin(errors, signups,
-          "error_ts", "signup_ts", windowMicros = hourMicros, bandMicros = hourMicros)
-        .select(col("error_id"), col("signup_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_id").asc_nulls_first)
-    },
-    Some("""
-      SELECT e.event_id AS error_id, s.event_id AS signup_id,
-             CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
-      FROM (SELECT * FROM events WHERE event_type = 'error') e
-      JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        ON CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
-       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-      ORDER BY error_id ASC NULLS FIRST, signup_id ASC NULLS FIRST"""))
+    (s, dir) => rangeBandedJoin(s, dir, rangeBandedEventsIncremental(s, dir), HourMicros),
+    Some(rangeOracle("1 HOUR")))
 
   /** [[joinRangeBanded]] over an AUTO-SALTED layout (r10):
     * `RangeBanded.ensureAuto` derives the salt factor from the observed
@@ -621,27 +540,10 @@ object Joins extends QueryGroup {
   private val joinRangeBandedAuto = GraftQuery(
     "join_range_banded_autosalt",
     (s, dir) => {
-      val hourMicros = HourMicros
       val (t, k) = rangeBandedEventsAuto(s, dir)
-      val errors = s.table(t).filter(col("event_type") === "error")
-        .select(col("band"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-        .hint("merge")
-      val signups = Tables.events(s, dir).filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("ts").as("signup_ts"))
-      graft.layouts.RangeBanded.rangeJoin(errors, signups,
-          "error_ts", "signup_ts", windowMicros = hourMicros,
-          bandMicros = hourMicros, salt = k)
-        .select(col("error_id"), col("signup_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_id").asc_nulls_first)
+      rangeBandedJoin(s, dir, t, HourMicros, salt = k)
     },
-    Some("""
-      SELECT e.event_id AS error_id, s.event_id AS signup_id,
-             CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
-      FROM (SELECT * FROM events WHERE event_type = 'error') e
-      JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        ON CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
-       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-      ORDER BY error_id ASC NULLS FIRST, signup_id ASC NULLS FIRST"""))
+    Some(rangeOracle("1 HOUR")))
 
   /** The SALTED form of [[joinRangeBanded]] (r9: hot-band skew): the
     * layout stores `band·4 + hash(event_id) mod 4`, spreading a peak
@@ -652,40 +554,9 @@ object Joins extends QueryGroup {
     * corpus in a past round's salt A/B, CROSSOVER.md). */
   private val joinRangeBandedSalted = GraftQuery(
     "join_range_banded_salted",
-    (s, dir) => {
-      val hourMicros = HourMicros
-      val t = rangeBandedEventsSalted(s, dir)
-      val errors = s.table(t).filter(col("event_type") === "error")
-        .select(col("band"), col("event_id").as("error_id"), col("ts").as("error_ts"))
-        .hint("merge")
-      val signups = Tables.events(s, dir).filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("ts").as("signup_ts"))
-      graft.layouts.RangeBanded.rangeJoin(errors, signups,
-          "error_ts", "signup_ts", windowMicros = hourMicros,
-          bandMicros = hourMicros, salt = 4)
-        .select(col("error_id"), col("signup_id"), col("error_ts"), col("signup_ts"))
-        .orderBy(col("error_id").asc_nulls_first, col("signup_id").asc_nulls_first)
-    },
-    Some("""
-      SELECT e.event_id AS error_id, s.event_id AS signup_id,
-             CAST(e.ts AS TIMESTAMP) AS error_ts, CAST(s.ts AS TIMESTAMP) AS signup_ts
-      FROM (SELECT * FROM events WHERE event_type = 'error') e
-      JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        ON CAST(e.ts AS TIMESTAMP) >= CAST(s.ts AS TIMESTAMP)
-       AND CAST(e.ts AS TIMESTAMP) < CAST(s.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-      ORDER BY error_id ASC NULLS FIRST, signup_id ASC NULLS FIRST"""))
+    (s, dir) => rangeBandedJoin(s, dir, rangeBandedEventsSalted(s, dir), HourMicros, salt = 4),
+    Some(rangeOracle("1 HOUR")))
 
-  /** Co-located fact⋈fact join over BUCKETED tables: both facts are laid
-    * out bucketBy(8, key) + sortBy(key), so the sort-merge join reads
-    * matching buckets directly — NO shuffle exchange and no per-task sort
-    * on either side. This is the storage-layout answer to repeated
-    * fact⋈fact joins at 100 TB (SCALE.md §C): pay one bucketed write, then
-    * every subsequent join on that key is exchange-free. The layout is
-    * (re)built once per source state by `layouts.Bucketed.ensure` (which
-    * owns the side effects — the query builder itself stays pure); the
-    * oracle is the plain SQL join on the raw tables — identical result, the
-    * bucketing changes only the physical plan. The merge hint pins SMJ so
-    * the co-location (not a broadcast) is what's exercised. */
   /** The bucketed fact layout the co-located-join row reads — exposed so
     * the bench prewarms it with the IDENTICAL cache key and reports the
     * one-time build separately from the per-query cost. */
@@ -734,22 +605,39 @@ object Joins extends QueryGroup {
     }
   }
 
-  private val joinBucketedColocated = GraftQuery(
-    "join_bucketed_colocated",
-    (s, dir) => {
-      val Seq(ordersB, lineitemB) = bucketedFacts(s, dir)
-      s.table(lineitemB).hint("merge")
-        .join(s.table(ordersB), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_lines"), Det.dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy(col("o_orderpriority").asc_nulls_first)
-    },
-    Some(s"""
+  /** Co-located fact⋈fact join over BUCKETED tables: both facts are laid
+    * out bucketBy(8, key) + sortBy(key), so the sort-merge join reads
+    * matching buckets directly — NO shuffle exchange and no per-task sort
+    * on either side. This is the storage-layout answer to repeated
+    * fact⋈fact joins at 100 TB (SCALE.md §C): pay one bucketed write, then
+    * every subsequent join on that key is exchange-free. The layout is
+    * (re)built once per source state by `layouts.Bucketed.ensure` (which
+    * owns the side effects — the query builder itself stays pure); the
+    * oracle is the plain SQL join on the raw tables — identical result, the
+    * bucketing changes only the physical plan. The merge hint pins SMJ so
+    * the co-location (not a broadcast) is what's exercised. `facts` is
+    * the bucketed (orders, lineitem) pair. */
+  private def bucketedJoin(s: org.apache.spark.sql.SparkSession, facts: Seq[String]): DataFrame = {
+    val Seq(ordersB, lineitemB) = facts
+    s.table(lineitemB).hint("merge")
+      .join(s.table(ordersB), col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_lines"), Det.dsum(col("l_extendedprice")).as("sum_price"))
+      .orderBy(col("o_orderpriority").asc_nulls_first)
+  }
+
+  /** The co-located rows' oracle: the plain join over the raw tables. */
+  private val BucketedJoinOracle = s"""
       SELECT o_orderpriority, COUNT(*) AS n_lines,
              ${Det.sqlSum("l_extendedprice")} AS sum_price
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY o_orderpriority
-      ORDER BY o_orderpriority ASC NULLS FIRST"""))
+      ORDER BY o_orderpriority ASC NULLS FIRST"""
+
+  private val joinBucketedColocated = GraftQuery(
+    "join_bucketed_colocated",
+    (s, dir) => bucketedJoin(s, bucketedFacts(s, dir)),
+    Some(BucketedJoinOracle))
 
   /** The co-located fact⋈fact join over the INCREMENTALLY-MAINTAINED
     * layouts ([[bucketedFactsIncremental]]): same aggregation and same
@@ -760,20 +648,8 @@ object Joins extends QueryGroup {
     * sort order waits for compaction — IncrementalLayoutSpec). */
   private val joinBucketedColocatedIncr = GraftQuery(
     "join_bucketed_colocated_incr",
-    (s, dir) => {
-      val Seq(ordersB, lineitemB) = bucketedFactsIncremental(s, dir)
-      s.table(lineitemB).hint("merge")
-        .join(s.table(ordersB), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_lines"), Det.dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy(col("o_orderpriority").asc_nulls_first)
-    },
-    Some(s"""
-      SELECT o_orderpriority, COUNT(*) AS n_lines,
-             ${Det.sqlSum("l_extendedprice")} AS sum_price
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority ASC NULLS FIRST"""))
+    (s, dir) => bucketedJoin(s, bucketedFactsIncremental(s, dir)),
+    Some(BucketedJoinOracle))
 
   /** The BIG-DIMENSION co-located layout (r4 verdict item 1): at sf12 the
     * q5 star join's dominant measured cost is building+shipping the

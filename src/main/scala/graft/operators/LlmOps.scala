@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, QueryGroup, Tables}
+import graft.{Fixtures, GraftQuery, QueryGroup, Tables}
 import graft.etl.StageCheckpoint.StageCheckpointOps
 import graft.functions.{TextOps, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -78,6 +78,60 @@ object LlmOps extends QueryGroup {
         sort_array(collect_list(col("vec_id"))).as("members"))
       .stageCheckpoint()
 
+  // DuckDB oracle fragments (here and beside the ANN and corpus-prep
+  // rows): each CTE fragment is written without its first line's indent
+  // and closed by `),`, for a line of its own at the oracle's 6-space CTE
+  // indent; a fragment that opens an oracle starts with its newline.
+
+  /** Oracle CTE `name (rep, shs)`: the distinct 5-word shingles of each
+    * `src (rep, t)` text. */
+  private[operators] def shingleSetCte(name: String, src: String): String =
+    s"""$name AS (
+        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
+          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
+        FROM (SELECT rep, string_split(t, ' ') AS words FROM $src)),"""
+
+  /** Oracle CTE `shh (sh, h, seed)`: the per-shingle MinHash values of
+    * shingle-hash fixture `fixture`, one row per seed. */
+  private def shingleHashCte(fixture: String): String =
+    s"""shh AS (
+        SELECT sh, unnest(hs) AS h, unnest(generate_series(0, 63)) AS seed
+        FROM ${Fixtures.oracleScan(fixture)}),"""
+
+  /** Oracle CTE `name (rep, sig)`: each rep's 64-value MinHash signature
+    * over its shingles in `shingles`, from `shh`. */
+  private def repSigCte(name: String, shingles: String): String =
+    s"""$name AS (
+        SELECT rep, list(m ORDER BY seed ASC) AS sig
+        FROM (SELECT t.rep, s.seed, min(s.h) AS m
+              FROM (SELECT rep, unnest(shs) AS sh FROM $shingles) t
+              JOIN shh s USING (sh) GROUP BY t.rep, s.seed)
+        GROUP BY rep),"""
+
+  /** Oracle CTE `name (rep, b, bk)`: the 16 band keys of signatures
+    * `sigs` — 4 signature values each, comma-joined, exactly the
+    * MinHash index's stored bkey. */
+  private def bandKeyCte(name: String, sigs: String): String =
+    s"""$name AS (
+        SELECT rep, b.b, array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bk
+        FROM $sigs CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),"""
+
+  /** Oracle CTEs `tok`, `shh`, `sig (rep, seed, m)`, `sigarr (rep, sig)`
+    * and `bandrows (rep, b, bkey)`: the signatures and band keys of the
+    * shingle set `shing` over the neardup fixture's shingle hashes. */
+  private[operators] val MinhashBandRows: String =
+    s"""tok AS (SELECT rep, unnest(shs) AS sh FROM shing),
+      ${shingleHashCte("mhsig")}
+      sig AS (
+        SELECT t.rep, s.seed, min(s.h) AS m
+        FROM tok t JOIN shh s USING (sh)
+        GROUP BY t.rep, s.seed),
+      sigarr AS (SELECT rep, list(m ORDER BY seed ASC) AS sig FROM sig GROUP BY rep),
+      bandrows AS (
+        SELECT rep, b.b,
+               array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bkey
+        FROM sigarr CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),"""
+
   /** op 69 — exact dedup: normalize → sha256 → keep min doc_id per hash.
     * groupBy+min instead of a per-hash window: the partial aggregate
     * collapses duplicate groups MAP-SIDE, so the one shuffle carries only
@@ -117,7 +171,7 @@ object LlmOps extends QueryGroup {
     * buckets band 4-TUPLES (tuple equality ⊆ band-hash equality — a hash
     * collision can only ADD candidates, and exact-Jaccard verification
     * removes them), verifies at ≥ 0.5, and expands identity groups.
-    * LlmOpsSpec still asserts the planted pairs are recovered. */
+    * DedupSpec's neardup4 cases check the kernel finds a planted pair. */
   private val llmDedupMinhash = GraftQuery(
     "llm_dedup_minhash",
     (s, dir) => {
@@ -129,10 +183,10 @@ object LlmOps extends QueryGroup {
           nBands = LSH_BANDS, rowsPerBand = LSH_ROWS, threshold = 0.5)
         .orderBy(col("doc_a").asc_nulls_first, col("doc_b").asc_nulls_first)
     },
-    Some("""
+    Some(raw"""
       WITH docs AS (
         SELECT id, text
-        FROM read_parquet('/tmp/graft_fixture_neardup_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("neardup")}),
       nrm AS (
         SELECT id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
         FROM docs),
@@ -140,23 +194,8 @@ object LlmOps extends QueryGroup {
         SELECT t, min(id) AS rep, list_sort(list(id)) AS members
         FROM nrm GROUP BY t),
       mem AS (SELECT rep, unnest(members) AS m FROM grp),
-      shing AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM grp)),
-      tok AS (SELECT rep, unnest(shs) AS sh FROM shing),
-      shh AS (
-        SELECT sh, unnest(hs) AS h, unnest(generate_series(0, 63)) AS seed
-        FROM read_parquet('/tmp/graft_fixture_mhsig_sf0.01/*.parquet')),
-      sig AS (
-        SELECT t.rep, s.seed, min(s.h) AS m
-        FROM tok t JOIN shh s USING (sh)
-        GROUP BY t.rep, s.seed),
-      sigarr AS (SELECT rep, list(m ORDER BY seed ASC) AS sig FROM sig GROUP BY rep),
-      bandrows AS (
-        SELECT rep, b.b,
-               array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bkey
-        FROM sigarr CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
+      ${shingleSetCte("shing", "grp")}
+      $MinhashBandRows
       cand AS (
         SELECT DISTINCT a.rep AS ra, c.rep AS rb
         FROM bandrows a JOIN bandrows c
@@ -247,10 +286,10 @@ object LlmOps extends QueryGroup {
         .select(col("id").as("doc_id"), col("crep").as("corpus_id"), col("jaccard"))
         .orderBy(col("doc_id").asc_nulls_first, col("corpus_id").asc_nulls_first)
     },
-    Some("""
+    Some(raw"""
       WITH all0 AS (
         SELECT id, text
-        FROM read_parquet('/tmp/graft_fixture_neardup_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("neardup")}),
       corpus AS (SELECT id, text FROM all0 WHERE id % 1000000000 < 1000000),
       batch AS (
         SELECT id, text FROM all0 WHERE id % 1000000000 >= 1000000
@@ -264,35 +303,13 @@ object LlmOps extends QueryGroup {
         SELECT t, min(id) AS rep, list_sort(list(id)) AS members
         FROM (SELECT id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM batch)
         GROUP BY t),
-      cs AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM crep)),
-      bs AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM brep)),
-      shh AS (
-        SELECT sh, unnest(hs) AS h, unnest(generate_series(0, 63)) AS seed
-        FROM read_parquet('/tmp/graft_fixture_mhsig_sf0.01/*.parquet')),
-      csig AS (
-        SELECT rep, list(m ORDER BY seed ASC) AS sig
-        FROM (SELECT t.rep, s.seed, min(s.h) AS m
-              FROM (SELECT rep, unnest(shs) AS sh FROM cs) t
-              JOIN shh s USING (sh) GROUP BY t.rep, s.seed)
-        GROUP BY rep),
-      bsig AS (
-        SELECT rep, list(m ORDER BY seed ASC) AS sig
-        FROM (SELECT t.rep, s.seed, min(s.h) AS m
-              FROM (SELECT rep, unnest(shs) AS sh FROM bs) t
-              JOIN shh s USING (sh) GROUP BY t.rep, s.seed)
-        GROUP BY rep),
-      cbands AS (
-        SELECT rep, b.b, array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bk
-        FROM csig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
-      bbands AS (
-        SELECT rep, b.b, array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bk
-        FROM bsig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
+      ${shingleSetCte("cs", "crep")}
+      ${shingleSetCte("bs", "brep")}
+      ${shingleHashCte("mhsig")}
+      ${repSigCte("csig", "cs")}
+      ${repSigCte("bsig", "bs")}
+      ${bandKeyCte("cbands", "csig")}
+      ${bandKeyCte("bbands", "bsig")}
       cand AS (
         SELECT DISTINCT bb.rep AS brep_, cb.rep AS crep_
         FROM bbands bb JOIN cbands cb ON bb.b = cb.b AND bb.bk = cb.bk),
@@ -311,9 +328,6 @@ object LlmOps extends QueryGroup {
       WHERE v.j >= 0.5
       ORDER BY doc_id ASC NULLS FIRST, corpus_id ASC NULLS FIRST"""))
 
-  /** SimHash dedup signature: 64-bit per doc from token hashes; near-dups
-    * differ in few bits (Hamming). Oracle: none — LlmOpsSpec asserts mutant
-    * Hamming distance ≪ unrelated-pair distance. */
   /** Transitive near-dup CLUSTERING: pairwise near-dup edges (capped
     * source blocks, exact 3-word-shingle Jaccard ≥ 0.5 — the
     * llm_jaccard_pairs machinery) closed into connected components
@@ -377,10 +391,10 @@ object LlmOps extends QueryGroup {
         .select(explode(col("members")).as("doc_id"), col("cluster_id"))
         .orderBy(col("doc_id").asc_nulls_first)
     },
-    Some("""
+    Some(raw"""
       WITH RECURSIVE docs AS (
         SELECT doc_id, source, text
-        FROM read_parquet('/tmp/graft_fixture_cluster_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("cluster")}),
       capped AS (
         SELECT doc_id, source, text
         FROM (SELECT doc_id, source, text,
@@ -414,7 +428,9 @@ object LlmOps extends QueryGroup {
     * (graft.Fixtures.simhashTokens): the fixture carries one row per token
     * occurrence with its xxhash64, and the oracle recomputes the per-bit
     * ±1 majority and the MSB-first packing in SQL — bit 63 is the sign
-    * bit, added as the Long.MinValue literal (the Java shiftleft wrap). */
+    * bit, added as the Long.MinValue literal (the Java shiftleft wrap).
+    * DedupSpec's neardup4 simhash case checks that a near-dup sits fewer
+    * bits from its source than unrelated docs do. */
   private val llmDedupSimhash = GraftQuery(
     "llm_dedup_simhash",
     (s, dir) => {
@@ -424,10 +440,10 @@ object LlmOps extends QueryGroup {
         .select(col("id").as("doc_id"), col("simhash"))
         .orderBy(col("doc_id").asc_nulls_first)
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT doc_id, h
-        FROM read_parquet('/tmp/graft_fixture_simtok_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("simtok")}),
       bits AS (
         SELECT t.doc_id, b.b,
                CASE WHEN SUM(CASE WHEN ((t.h >> b.b) & 1) = 1 THEN 1 ELSE -1 END) >= 0
@@ -644,6 +660,58 @@ object LlmOps extends QueryGroup {
     base.unionByName(planted)
   }
 
+  /** Each distinct query vector's top-4 centroids: `(q_id, cent_id, qv)`
+    * rows from the query groups and a `(cent_id, cv)` centroid table. */
+  private def knnProbes(qGrouped: DataFrame, cents: DataFrame): DataFrame = {
+    val q = qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
+    val wProbe = Window.partitionBy(col("q_id"))
+      .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
+    q.crossJoin(broadcast(cents))
+      .withColumn("c", cosR("qv", "cv"))
+      .withColumn("pr", row_number().over(wProbe))
+      .filter(col("pr") <= 4)
+      .select(col("q_id"), col("cent_id"), col("qv"))
+  }
+
+  /** Member fan-out of the IVF kNN rows: `candExp` holds each distinct
+    * query's candidates expanded to member ids `(q_id, vec_id, cos_sim)`;
+    * re-rank them to the top 5 and fan the answer out to every query id
+    * sharing the vector. */
+  private def knnFanOut(qGrouped: DataFrame, candExp: DataFrame): DataFrame = {
+    val wFinal = Window.partitionBy(col("q_id"))
+      .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
+    val perRep = candExp
+      .withColumn("rn", row_number().over(wFinal))
+      .filter(col("rn") <= 5)
+    qGrouped.select(col("rep_id").as("q_id"), col("members").as("q_members"))
+      .join(perRep, "q_id")
+      .select(explode(col("q_members")).as("q_id"),
+        col("rn"), col("vec_id"), col("cos_sim"))
+      .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
+  }
+
+  /** The IVF kNN rows' oracle: exact brute force over the planted corpus. */
+  private val KnnIvfOracle = """
+      WITH base AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      qv AS (SELECT vec_id, v FROM base WHERE vec_id % 100 = 0),
+      corpus AS (
+        SELECT vec_id, v FROM base
+        UNION ALL SELECT vec_id + 1000000, list_transform(v, x -> x * 0.9 + 0.005) FROM qv
+        UNION ALL SELECT vec_id + 2000000, list_transform(v, x -> x * 0.9 + 0.010) FROM qv
+        UNION ALL SELECT vec_id + 3000000, list_transform(v, x -> x * 0.9 + 0.015) FROM qv
+        UNION ALL SELECT vec_id + 4000000, list_transform(v, x -> x * 0.9 + 0.020) FROM qv)
+      SELECT q_id, rn, vec_id, cos_sim
+      FROM (
+        SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
+               round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim,
+               ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                 ORDER BY round(list_cosine_similarity(c.v, q.v), 6) DESC NULLS LAST,
+                 c.vec_id ASC NULLS FIRST) AS rn
+        FROM qv q CROSS JOIN corpus c)
+      WHERE rn <= 5
+      ORDER BY q_id ASC NULLS FIRST, rn ASC NULLS FIRST"""
+
   private val llmKnnJoinIvf = GraftQuery(
     "llm_knn_join_ivf",
     (s, dir) => {
@@ -659,14 +727,7 @@ object LlmOps extends QueryGroup {
       val qGrouped = vecGroups(qIds)
       val cents = graft.etl.Ivf.train(reps, k = 16, iters = 2)
       val assigned = graft.etl.Ivf.assign(reps, cents)
-      val q = qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-      val probes = q.crossJoin(broadcast(cents))
-        .withColumn("c", cosR("qv", "cv"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("cent_id"), col("qv"))
+      val probes = knnProbes(qGrouped, cents)
       val wTop = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
       // top-5 REPS per distinct query vector (covers the true top-5 — see
@@ -686,40 +747,11 @@ object LlmOps extends QueryGroup {
         .withColumn("rn", row_number().over(wTop))
         .filter(col("rn") <= 5)
         .select("q_id", "vec_id", "cos_sim")
-      val candExp = grouped.select(col("rep_id").as("vec_id"), col("members"))
+      knnFanOut(qGrouped, grouped.select(col("rep_id").as("vec_id"), col("members"))
         .join(repTop, "vec_id")
-        .select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim"))
-      val wFinal = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-      val perRep = candExp
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= 5)
-      qGrouped.select(col("rep_id").as("q_id"), col("members").as("q_members"))
-        .join(perRep, "q_id")
-        .select(explode(col("q_members")).as("q_id"),
-          col("rn"), col("vec_id"), col("cos_sim"))
-        .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
+        .select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim")))
     },
-    Some("""
-      WITH base AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-      qv AS (SELECT vec_id, v FROM base WHERE vec_id % 100 = 0),
-      corpus AS (
-        SELECT vec_id, v FROM base
-        UNION ALL SELECT vec_id + 1000000, list_transform(v, x -> x * 0.9 + 0.005) FROM qv
-        UNION ALL SELECT vec_id + 2000000, list_transform(v, x -> x * 0.9 + 0.010) FROM qv
-        UNION ALL SELECT vec_id + 3000000, list_transform(v, x -> x * 0.9 + 0.015) FROM qv
-        UNION ALL SELECT vec_id + 4000000, list_transform(v, x -> x * 0.9 + 0.020) FROM qv)
-      SELECT q_id, rn, vec_id, cos_sim
-      FROM (
-        SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-               round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                 ORDER BY round(list_cosine_similarity(c.v, q.v), 6) DESC NULLS LAST,
-                 c.vec_id ASC NULLS FIRST) AS rn
-        FROM qv q CROSS JOIN corpus c)
-      WHERE rn <= 5
-      ORDER BY q_id ASC NULLS FIRST, rn ASC NULLS FIRST"""))
+    Some(KnnIvfOracle))
 
   /** op 72 at its SERVING shape — the k-NN join routed through the
     * PERSISTED IVF index (the corpus's resident cent_id-partitioned
@@ -765,14 +797,7 @@ object LlmOps extends QueryGroup {
       val (idxPath, centsPath) = persistedKnnIvfIndex(s, dir)
       val cents = graft.layouts.IvfIndex.serve(s, centsPath)
       val qGrouped = vecGroups(knnQueryVecs(s, dir))
-      val q = qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-      val probes = q.crossJoin(broadcast(cents))
-        .withColumn("c", cosR("qv", "cv"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("cent_id"), col("qv"))
+      val probes = knnProbes(qGrouped, cents)
       // the persisted layout: (vec_id = rep, v, members) under cent_id=
       // partition dirs (the partition column reads back type-inferred)
       val idx = graft.layouts.IvfIndex.serve(s, idxPath)
@@ -785,38 +810,10 @@ object LlmOps extends QueryGroup {
           cosR("v", "qv").as("cos_sim"))
         .withColumn("rn", row_number().over(wTop))
         .filter(col("rn") <= 5)
-      val wFinal = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-      val perRep = repTop
-        .select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim"))
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= 5)
-      qGrouped.select(col("rep_id").as("q_id"), col("members").as("q_members"))
-        .join(perRep, "q_id")
-        .select(explode(col("q_members")).as("q_id"),
-          col("rn"), col("vec_id"), col("cos_sim"))
-        .orderBy(col("q_id").asc_nulls_first, col("rn").asc_nulls_first)
+      knnFanOut(qGrouped,
+        repTop.select(col("q_id"), explode(col("members")).as("vec_id"), col("cos_sim")))
     },
-    Some("""
-      WITH base AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-      qv AS (SELECT vec_id, v FROM base WHERE vec_id % 100 = 0),
-      corpus AS (
-        SELECT vec_id, v FROM base
-        UNION ALL SELECT vec_id + 1000000, list_transform(v, x -> x * 0.9 + 0.005) FROM qv
-        UNION ALL SELECT vec_id + 2000000, list_transform(v, x -> x * 0.9 + 0.010) FROM qv
-        UNION ALL SELECT vec_id + 3000000, list_transform(v, x -> x * 0.9 + 0.015) FROM qv
-        UNION ALL SELECT vec_id + 4000000, list_transform(v, x -> x * 0.9 + 0.020) FROM qv)
-      SELECT q_id, rn, vec_id, cos_sim
-      FROM (
-        SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-               round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                 ORDER BY round(list_cosine_similarity(c.v, q.v), 6) DESC NULLS LAST,
-                 c.vec_id ASC NULLS FIRST) AS rn
-        FROM qv q CROSS JOIN corpus c)
-      WHERE rn <= 5
-      ORDER BY q_id ASC NULLS FIRST, rn ASC NULLS FIRST"""))
+    Some(KnnIvfOracle))
 
   /** Embedding-cosine near-dup: plant slightly-perturbed copies of every
     * 100th vector (affine 0.9x+0.02 keeps cosine ≈ 0.97–0.99 vs ≤ 0.52 for
@@ -958,6 +955,66 @@ object LlmOps extends QueryGroup {
       WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.9
       ORDER BY vec_a ASC NULLS FIRST, vec_b ASC NULLS FIRST"""))
 
+  /** The single-query ANN rows' top-4 probe cells: `(cent_id, c)` for a
+    * `(cent_id, cv)` centroid table and a one-row `qv` query. */
+  private def annProbes(cents: DataFrame, q: DataFrame): DataFrame =
+    cents.crossJoin(broadcast(q))
+      .select(col("cent_id"), cosR("cv", "qv").as("c"))
+      .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
+      .limit(4)
+
+  /** The persisted ANN rows' last stage: exact top-5 reps of `cands`
+    * `(vec_id, v, members)` against the one-row `qv` query, expanded to
+    * their members and re-ranked. */
+  private def exactTop5Members(cands: DataFrame, q: DataFrame): DataFrame =
+    cands.crossJoin(broadcast(q))
+      .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim"))
+      .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
+      .limit(5)
+      .select(explode(col("members")).as("vec_id"), col("cos_sim"))
+      .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
+      .limit(5)
+
+  /** The persisted ANN rows' oracle: the exact brute-force top-5 over the
+    * [[plantedVecCorpus]]. */
+  private val PlantedTop5Oracle = """
+      WITH base AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      qv AS (SELECT v FROM base WHERE vec_id = 0),
+      corpus AS (
+        SELECT vec_id, v FROM base
+        UNION ALL SELECT 1000000, list_transform(v, x -> x * 0.9 + 0.005) FROM qv
+        UNION ALL SELECT 2000000, list_transform(v, x -> x * 0.9 + 0.010) FROM qv
+        UNION ALL SELECT 3000000, list_transform(v, x -> x * 0.9 + 0.015) FROM qv
+        UNION ALL SELECT 4000000, list_transform(v, x -> x * 0.9 + 0.020) FROM qv)
+      SELECT c.vec_id, round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim
+      FROM corpus c CROSS JOIN qv q
+      ORDER BY cos_sim DESC NULLS LAST, c.vec_id ASC NULLS FIRST
+      LIMIT 5"""
+
+  /** Oracle CTEs of the model-input ANN rows: `emb`, the embeddings as
+    * doubles, and `grp`, their identity groups keyed by the min id. */
+  private val AnnEmbGrp = """
+      WITH emb AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        FROM embeddings),
+      grp AS (SELECT v, min(vec_id) AS rep FROM emb GROUP BY v),"""
+
+  /** Oracle CTE: the IVF centroid fixture as `cents (cent_id, cv)`. */
+  private val IvfCents = s"""cents AS (
+        SELECT cent_id, cv
+        FROM ${Fixtures.oracleScan("ivfcents")}),"""
+
+  /** Oracle CTE: each `grp` rep's rounded-cosine argmax cell. */
+  private val IvfAsg = """asg AS (
+        SELECT rep, cent_id FROM (
+          SELECT g.rep, c.cent_id,
+                 ROW_NUMBER() OVER (PARTITION BY g.rep
+                   ORDER BY round(list_cosine_similarity(g.v, c.cv), 6) DESC,
+                            c.cent_id ASC) AS rn
+          FROM grp g CROSS JOIN cents c)
+        WHERE rn = 1),"""
+
   /** IVF ANN: k-means-trained coarse quantizer (16 centroids, 2
     * deterministic Lloyd iterations — graft.etl.Ivf), nearest-centroid
     * assignment, query probes 4 of 16 buckets, exact rescoring inside the
@@ -983,11 +1040,7 @@ object LlmOps extends QueryGroup {
       val cents = graft.etl.Ivf.train(reps, k = 16, iters = 2)
       val assigned = graft.etl.Ivf.assign(reps, cents)
       val q = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val probes = cents.crossJoin(broadcast(q))
-        .select(col("cent_id"), cosR("cv", "qv").as("c"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-        .limit(4)
-        .select("cent_id")
+      val probes = annProbes(cents, q).select("cent_id")
       val repTop = assigned
         .join(broadcast(probes), "cent_id")
         .crossJoin(broadcast(q))
@@ -1000,23 +1053,10 @@ object LlmOps extends QueryGroup {
         .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
         .limit(10)
     },
-    Some("""
-      WITH emb AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      grp AS (SELECT v, min(vec_id) AS rep FROM emb GROUP BY v),
-      cents AS (
-        SELECT cent_id, cv
-        FROM read_parquet('/tmp/graft_fixture_ivfcents_sf0.01/*.parquet')),
+    Some(s"""$AnnEmbGrp
+      $IvfCents
       q AS (SELECT v FROM emb WHERE vec_id = 0),
-      asg AS (
-        SELECT rep, cent_id FROM (
-          SELECT g.rep, c.cent_id,
-                 ROW_NUMBER() OVER (PARTITION BY g.rep
-                   ORDER BY round(list_cosine_similarity(g.v, c.cv), 6) DESC,
-                            c.cent_id ASC) AS rn
-          FROM grp g CROSS JOIN cents c)
-        WHERE rn = 1),
+      $IvfAsg
       probes AS (
         SELECT cent_id FROM cents CROSS JOIN q
         ORDER BY round(list_cosine_similarity(cv, q.v), 6) DESC NULLS LAST,
@@ -1094,34 +1134,66 @@ object LlmOps extends QueryGroup {
       // probe selection: centroids are k×dims model params (the Ivf.assign
       // pattern) — a 16-row job picks the top-4 probe ids, which enter the
       // scan as LITERALS so Catalyst prunes partitions statically
-      val probeIds = graft.layouts.IvfIndex.serve(s, centsPath).crossJoin(broadcast(q))
-        .select(col("cent_id"), cosR("cv", "qv").as("c"))
-        .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-        .limit(4).collect().map(_.getLong(0)).toSeq
+      val probeIds = annProbes(graft.layouts.IvfIndex.serve(s, centsPath), q)
+        .collect().map(_.getLong(0)).toSeq
       val pruned = graft.layouts.IvfIndex.serve(s, idxPath)
         .filter(col("cent_id").isin(probeIds: _*))
-      pruned.crossJoin(broadcast(q))
-        .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
-        .select(explode(col("members")).as("vec_id"), col("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
+      exactTop5Members(pruned, q)
     },
-    Some("""
+    Some(PlantedTop5Oracle))
+
+  /** The LSH ANN rows' body: vec 0's top-10 by exact cosine among the
+    * candidates `probe` keeps of the `bits`-bit sign-bucketed corpus
+    * (embeddings plus one planted near-duplicate of vec 0) for the
+    * one-row `(qv, qbucket)` query. */
+  private def lshAnn(s: SparkSession, dir: String, bits: Int)
+      (probe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(s)
+    graft.Fixtures.lshPlanes(s, dir) // plane dump for the DuckDB oracle
+    val base = docVec(s, dir)
+    val planted = base.filter(col("vec_id") === 0)
+      .select(lit(9000000L).as("vec_id"),
+        transform(col("v"), x => x * 0.9 + 0.02).as("v"))
+    val bucketed = graft.etl.VectorLsh.withBucket(base.unionByName(planted), bits, 64)
+    val qRow = bucketed.filter(col("vec_id") === 0)
+      .select(col("v").as("qv"), col("bucket").as("qbucket"))
+    probe(bucketed, qRow)
+      .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
+      .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
+      .limit(10)
+  }
+
+  /** The LSH ANN rows' oracle: sign buckets from the plane fixture
+    * (`planesWhere` narrows the planes), then exact rescoring of the
+    * corpus within `maxHamming` bits of the query's bucket. */
+  private def lshOracle(planesWhere: String, maxHamming: Int): String = s"""
       WITH base AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-      qv AS (SELECT v FROM base WHERE vec_id = 0),
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        FROM embeddings),
+      qv0 AS (SELECT v FROM base WHERE vec_id = 0),
       corpus AS (
         SELECT vec_id, v FROM base
-        UNION ALL SELECT 1000000, list_transform(v, x -> x * 0.9 + 0.005) FROM qv
-        UNION ALL SELECT 2000000, list_transform(v, x -> x * 0.9 + 0.010) FROM qv
-        UNION ALL SELECT 3000000, list_transform(v, x -> x * 0.9 + 0.015) FROM qv
-        UNION ALL SELECT 4000000, list_transform(v, x -> x * 0.9 + 0.020) FROM qv)
-      SELECT c.vec_id, round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim
-      FROM corpus c CROSS JOIN qv q
+        UNION ALL
+        SELECT 9000000, list_transform(v, x -> x * 0.9 + 0.02) FROM qv0),
+      planes AS (
+        SELECT j, h
+        FROM ${Fixtures.oracleScan("lshplanes")}$planesWhere),
+      bkt AS (
+        SELECT c.vec_id,
+               CAST(SUM(CASE WHEN list_sum([c.v[i] * p.h[i]
+                                            FOR i IN range(1, len(p.h) + 1)]) > 0
+                             THEN (1 << p.j) ELSE 0 END) AS BIGINT) AS bucket
+        FROM corpus c CROSS JOIN planes p
+        GROUP BY c.vec_id),
+      qb AS (SELECT bucket AS qbucket FROM bkt WHERE vec_id = 0)
+      SELECT c.vec_id,
+             round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim
+      FROM corpus c
+      JOIN bkt ON bkt.vec_id = c.vec_id
+      CROSS JOIN qb CROSS JOIN qv0 q
+      WHERE bit_count(xor(bkt.bucket, qb.qbucket)) <= $maxHamming
       ORDER BY cos_sim DESC NULLS LAST, c.vec_id ASC NULLS FIRST
-      LIMIT 5"""))
+      LIMIT 10"""
 
   /** LSH-bucketed ANN (the prompt's "LSH-bucketed variant as the scale
     * path"): 8-bit random-hyperplane sign buckets, query probes Hamming≤1
@@ -1136,52 +1208,12 @@ object LlmOps extends QueryGroup {
     * rescoring. VectorSpec keeps planted-neighbor recall. */
   private val llmAnnLsh = GraftQuery(
     "llm_ann_lsh",
-    (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      graft.Fixtures.lshPlanes(s, dir) // plane dump for the DuckDB oracle
-      val base = docVec(s, dir)
-      val planted = base.filter(col("vec_id") === 0)
-        .select(lit(9000000L).as("vec_id"),
-          transform(col("v"), x => x * 0.9 + 0.02).as("v"))
-      val bucketed = graft.etl.VectorLsh.withBucket(base.unionByName(planted), 8, 64)
-      val qRow = bucketed.filter(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("bucket").as("qbucket"))
+    (s, dir) => lshAnn(s, dir, bits = 8) { (bucketed, qRow) =>
       bucketed
         .crossJoin(broadcast(qRow))
         .filter(bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= 1)
-        .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(10)
     },
-    Some("""
-      WITH base AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      qv0 AS (SELECT v FROM base WHERE vec_id = 0),
-      corpus AS (
-        SELECT vec_id, v FROM base
-        UNION ALL
-        SELECT 9000000, list_transform(v, x -> x * 0.9 + 0.02) FROM qv0),
-      planes AS (
-        SELECT j, h
-        FROM read_parquet('/tmp/graft_fixture_lshplanes_sf0.01/*.parquet')
-        WHERE j < 8),
-      bkt AS (
-        SELECT c.vec_id,
-               CAST(SUM(CASE WHEN list_sum([c.v[i] * p.h[i]
-                                            FOR i IN range(1, len(p.h) + 1)]) > 0
-                             THEN (1 << p.j) ELSE 0 END) AS BIGINT) AS bucket
-        FROM corpus c CROSS JOIN planes p
-        GROUP BY c.vec_id),
-      qb AS (SELECT bucket AS qbucket FROM bkt WHERE vec_id = 0)
-      SELECT c.vec_id,
-             round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim
-      FROM corpus c
-      JOIN bkt ON bkt.vec_id = c.vec_id
-      CROSS JOIN qb CROSS JOIN qv0 q
-      WHERE bit_count(xor(bkt.bucket, qb.qbucket)) <= 1
-      ORDER BY cos_sim DESC NULLS LAST, c.vec_id ASC NULLS FIRST
-      LIMIT 10"""))
+    Some(lshOracle("\n        WHERE j < 8", maxHamming = 1)))
 
   /** op 73 — text stats per language: doc/token/char totals + exact mean
     * tokens + top-3 terms. ONE tokenize/explode pass: the (lang, term)
@@ -1367,9 +1399,9 @@ object LlmOps extends QueryGroup {
   /** Language-ID (n-gram heuristic): self-trained top-50 char-trigram
     * profile per language, classify each doc by profile overlap. The
     * testdata's text is synthetic (vocabulary does not differ by lang), so
-    * accuracy against the lang column is not the assertion — LlmOpsSpec
-    * validates the classifier on genuinely distinct language fixtures;
-    * the full self-training pipeline is also DuckDB-oracled. */
+    * accuracy against the lang column is not the assertion; the full
+    * self-training pipeline is DuckDB-oracled, and DedupFirstSpec's
+    * llm_lang_id case pins it to the per-doc trigram formulation. */
   private val llmLangId = GraftQuery(
     "llm_lang_id",
     (s, dir) => {
@@ -1483,43 +1515,10 @@ object LlmOps extends QueryGroup {
       FROM f
       ORDER BY doc_id ASC NULLS FIRST"""))
 
-  /** The composed corpus-preparation job (examples.TrainingDataPrep):
-    * exact dedup → quality filter → LSH near-dup removal →
-    * chunk-boilerplate filter → chunk-level decontamination → token
-    * accounting, over a corpus planted with
-    * exact copies (every 50th doc), one-word mutants (every 25th),
-    * stitched docs (every 40th doc concatenated with its successor —
-    * ≈0.5 Jaccard with each source, so doc-level near-dup misses them;
-    * the chunk stage is what catches them), AND contaminated docs (the
-    * successor host's words REVERSED — a unique text with novel chunks,
-    * so stages 1–4 pass it — plus an eval snippet behind an 's' sentinel;
-    * only the decontamination stage can catch it) so every stage has work
-    * to do. Registered as its per-stage attrition report — the
-    * deterministic corpus-curation summary (docs in/out + surviving token
-    * volume per stage). Oracled IN FULL since r6 (the near-dup stage's
-    * minhash rests on the corpus-prep shingle-hash fixture — the
-    * llm_dedup_minhash pattern); the llm_corpus_prep_stages twin keeps
-    * the approx-stages-disabled variant, and TrainingDataPrepSpec pins
-    * stage-by-stage counts, that each planted copy/mutant/stitch/leak
-    * dies in its intended stage, and determinism. */
-  private val llmCorpusPrep = GraftQuery(
-    "llm_corpus_prep",
-    (s, dir) => {
-      graft.Fixtures.corpusPrepShingleHashes(s, dir) // primitive dump for the oracle
-      val (docs, planted, evalSh) = corpusPrepFixture(s, dir)
-      graft.examples.TrainingDataPrep
-        .prepare(docs.unionByName(planted), evalNgrams = Some(evalSh))
-        .attrition
-        .orderBy(col("stage_ord").asc_nulls_first)
-    },
-    // Oracled (r6): the full composite, assembled from stage oracles each
-    // proven green on its own row — the _stages corpus construction +
-    // stages 1–2, the llm_dedup_minhash banding/verification machinery at
-    // threshold 0.8 (via the corpus-prep shingle-hash fixture), the
-    // llm_chunk_dedup CDC first-occurrence ownership SQL, and the
-    // llm_decontaminate_chunks chunk-leak rule (incl. its pooled
-    // (doc, n_chsh) grouping, mirrored exactly).
-    Some("""
+  /** Oracle CTEs of the corpus-prep rows up to stage 2: the planted
+    * corpus (`corpusPrepFixture` in SQL), exact dedup `s1` and the
+    * quality filter `s2`. */
+  private val CorpusPrepStages12 = """
       WITH base AS (SELECT doc_id, text FROM documents),
       nrm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM base),
       copies AS (
@@ -1561,18 +1560,65 @@ object LlmOps extends QueryGroup {
         FROM (SELECT doc_id, text,
                      string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
               FROM s1)),
-      s2 AS (SELECT doc_id, text FROM q WHERE quality >= 0.45),
+      s2 AS (SELECT doc_id, text FROM q WHERE quality >= 0.45),"""
+
+  /** Oracle tail of the corpus-prep rows: the attrition report over
+    * `tk (k, n, tok)`, stages 3–5 writing `out3`, `out4` and `out5`. */
+  private def corpusPrepReport(out3: String, out4: String, out5: String): String = s"""
+      SELECT CAST(r.ord AS INTEGER) AS stage_ord, r.stage,
+             (SELECT n FROM tk WHERE k = r.kin) AS docs_in,
+             (SELECT n FROM tk WHERE k = r.kout) AS docs_out,
+             (SELECT tok FROM tk WHERE k = r.kout) AS tokens_out
+      FROM (VALUES (1, 'exact_dedup', 'corpus', 's1'),
+                   (2, 'quality_filter', 's1', 's2'),
+                   (3, 'neardup_removal', 's2', '$out3'),
+                   (4, 'chunk_boilerplate', '$out3', '$out4'),
+                   (5, 'decontaminate', '$out4', '$out5')) AS r(ord, stage, kin, kout)
+      ORDER BY stage_ord ASC NULLS FIRST"""
+
+  /** The composed corpus-preparation job (examples.TrainingDataPrep):
+    * exact dedup → quality filter → LSH near-dup removal →
+    * chunk-boilerplate filter → chunk-level decontamination → token
+    * accounting, over a corpus planted with
+    * exact copies (every 50th doc), one-word mutants (every 25th),
+    * stitched docs (every 40th doc concatenated with its successor —
+    * ≈0.5 Jaccard with each source, so doc-level near-dup misses them;
+    * the chunk stage is what catches them), AND contaminated docs (the
+    * successor host's words REVERSED — a unique text with novel chunks,
+    * so stages 1–4 pass it — plus an eval snippet behind an 's' sentinel;
+    * only the decontamination stage can catch it) so every stage has work
+    * to do. Registered as its per-stage attrition report — the
+    * deterministic corpus-curation summary (docs in/out + surviving token
+    * volume per stage). Oracled IN FULL since r6 (the near-dup stage's
+    * minhash rests on the corpus-prep shingle-hash fixture — the
+    * llm_dedup_minhash pattern); the llm_corpus_prep_stages twin keeps
+    * the approx-stages-disabled variant, and TrainingDataPrepSpec pins
+    * stage-by-stage counts, that each planted copy/mutant/stitch/leak
+    * dies in its intended stage, and determinism. */
+  private val llmCorpusPrep = GraftQuery(
+    "llm_corpus_prep",
+    (s, dir) => {
+      graft.Fixtures.corpusPrepShingleHashes(s, dir) // primitive dump for the oracle
+      val (docs, planted, evalSh) = corpusPrepFixture(s, dir)
+      graft.examples.TrainingDataPrep
+        .prepare(docs.unionByName(planted), evalNgrams = Some(evalSh))
+        .attrition
+        .orderBy(col("stage_ord").asc_nulls_first)
+    },
+    // Oracled (r6): the full composite, assembled from stage oracles each
+    // proven green on its own row — the _stages corpus construction +
+    // stages 1–2, the llm_dedup_minhash banding/verification machinery at
+    // threshold 0.8 (via the corpus-prep shingle-hash fixture), the
+    // llm_chunk_dedup CDC first-occurrence ownership SQL, and the
+    // llm_decontaminate_chunks chunk-leak rule (incl. its pooled
+    // (doc, n_chsh) grouping, mirrored exactly).
+    Some(raw"""$CorpusPrepStages12
       n2 AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM s2),
       g3 AS (SELECT t, min(doc_id) AS rep, list_sort(list(doc_id)) AS members FROM n2 GROUP BY t),
       mem3 AS (SELECT rep, unnest(members) AS m FROM g3),
-      sh3 AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM g3)),
+      ${shingleSetCte("sh3", "g3")}
       tok3 AS (SELECT rep, unnest(shs) AS sh FROM sh3),
-      shh AS (
-        SELECT sh, unnest(hs) AS h, unnest(generate_series(0, 63)) AS seed
-        FROM read_parquet('/tmp/graft_fixture_cpsig_sf0.01/*.parquet')),
+      ${shingleHashCte("cpsig")}
       sig3 AS (
         SELECT t.rep, s.seed, min(s.h) AS m
         FROM tok3 t JOIN shh s USING (sh) GROUP BY t.rep, s.seed),
@@ -1660,17 +1706,7 @@ object LlmOps extends QueryGroup {
         UNION ALL
         SELECT 's5', COUNT(*),
                CAST(SUM(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))) AS BIGINT)
-        FROM s5)
-      SELECT CAST(r.ord AS INTEGER) AS stage_ord, r.stage,
-             (SELECT n FROM tk WHERE k = r.kin) AS docs_in,
-             (SELECT n FROM tk WHERE k = r.kout) AS docs_out,
-             (SELECT tok FROM tk WHERE k = r.kout) AS tokens_out
-      FROM (VALUES (1, 'exact_dedup', 'corpus', 's1'),
-                   (2, 'quality_filter', 's1', 's2'),
-                   (3, 'neardup_removal', 's2', 's3'),
-                   (4, 'chunk_boilerplate', 's3', 's4'),
-                   (5, 'decontaminate', 's4', 's5')) AS r(ord, stage, kin, kout)
-      ORDER BY stage_ord ASC NULLS FIRST"""))
+        FROM s5)${corpusPrepReport("s3", "s4", "s5")}"""))
 
   /** Oracled twin of the composite row, covering its DETERMINISTIC
     * stages: the same planted corpus runs through the same pipeline with
@@ -1690,49 +1726,7 @@ object LlmOps extends QueryGroup {
         .attrition
         .orderBy(col("stage_ord").asc_nulls_first)
     },
-    Some("""
-      WITH base AS (SELECT doc_id, text FROM documents),
-      nrm AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM base),
-      copies AS (
-        SELECT doc_id + 2000000 AS doc_id, text FROM base WHERE doc_id % 50 = 0),
-      mutants AS (
-        SELECT doc_id + 1000000 AS doc_id,
-               regexp_replace(text, '^\w+ ', 'graftmutant ') AS text
-        FROM base WHERE doc_id % 25 = 0),
-      stitched AS (
-        SELECT d.doc_id + 4000000 AS doc_id, d.text || ' ' || n.text AS text
-        FROM base d JOIN base n ON n.doc_id = d.doc_id + 1
-        WHERE d.doc_id % 40 = 0),
-      evalq AS (
-        SELECT doc_id, array_to_string((string_split(t, ' '))[3:22], ' ') AS snip
-        FROM nrm WHERE doc_id % 97 = 0),
-      hosts AS (SELECT doc_id - 1 AS doc_id, string_split(t, ' ') AS hw FROM nrm),
-      contam AS (
-        SELECT e.doc_id + 5000000 AS doc_id,
-               concat(array_to_string([h.hw[i] FOR i IN range(len(h.hw), 0, -1)], ' '),
-                      ' ssentinel ', e.snip) AS text
-        FROM evalq e JOIN hosts h ON e.doc_id = h.doc_id
-        WHERE len(h.hw) >= 80),
-      corpus AS (
-        SELECT * FROM base UNION ALL SELECT * FROM copies UNION ALL
-        SELECT * FROM mutants UNION ALL SELECT * FROM stitched UNION ALL
-        SELECT * FROM contam),
-      s1 AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id ASC) AS rn
-          FROM corpus) WHERE rn = 1),
-      q AS (
-        SELECT doc_id, text,
-               0.4 * (CAST(len(list_filter(words, w -> w IN ('the','a','of','and','in','to','is'))) AS DOUBLE)
-                      / CAST(len(words) AS DOUBLE))
-               + 0.3 * least(CAST(len(words) AS DOUBLE) / 100.0, 1.0)
-               + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-                              / CAST(length(text) AS DOUBLE)) AS quality
-        FROM (SELECT doc_id, text,
-                     string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-              FROM s1)),
-      s2 AS (SELECT doc_id, text FROM q WHERE quality >= 0.45),
+    Some(raw"""$CorpusPrepStages12
       tk AS (
         SELECT 'corpus' AS k, COUNT(*) AS n, CAST(0 AS BIGINT) AS tok FROM corpus
         UNION ALL
@@ -1742,17 +1736,7 @@ object LlmOps extends QueryGroup {
         UNION ALL
         SELECT 's2' AS k, COUNT(*) AS n,
                CAST(SUM(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '))) AS BIGINT) AS tok
-        FROM s2)
-      SELECT CAST(r.ord AS INTEGER) AS stage_ord, r.stage,
-             (SELECT n FROM tk WHERE k = r.kin) AS docs_in,
-             (SELECT n FROM tk WHERE k = r.kout) AS docs_out,
-             (SELECT tok FROM tk WHERE k = r.kout) AS tokens_out
-      FROM (VALUES (1, 'exact_dedup', 'corpus', 's1'),
-                   (2, 'quality_filter', 's1', 's2'),
-                   (3, 'neardup_removal', 's2', 's2'),
-                   (4, 'chunk_boilerplate', 's2', 's2'),
-                   (5, 'decontaminate', 's2', 's2')) AS r(ord, stage, kin, kout)
-      ORDER BY stage_ord ASC NULLS FIRST"""))
+        FROM s2)${corpusPrepReport("s2", "s2", "s2")}"""))
 
   /** The corpus-prep fixture: (base docs, planted rows, eval 5-gram set).
     * Shared by the composite row, its oracled `_stages` twin, and
@@ -1820,8 +1804,7 @@ object LlmOps extends QueryGroup {
     * (position, gram-hash) row, and the oracle recomputes the window
     * minima (frame = CURRENT ROW..3 FOLLOWING, truncating at the tail
     * exactly like slice), the window-count rule max(n−3, 1), the distinct
-    * + ascending sort, and the first-4 head join in SQL. LlmOpsSpec still
-    * pins the edit-robustness properties. */
+    * + ascending sort, and the first-4 head join in SQL. */
   private val llmFingerprint = GraftQuery(
     "llm_fingerprint",
     (s, dir) => {
@@ -1834,14 +1817,14 @@ object LlmOps extends QueryGroup {
           col("doc_id"),
           size(col("fps")).as("n_fps"),
           // Stringified: the driver sorts/hashes even oracle-less outputs and
-          // chokes on array cells; LlmOpsSpec pins the array form.
+          // chokes on array cells.
           array_join(transform(slice(col("fps"), 1, 4), _.cast("string")), ",").as("fp_head"))
         .orderBy(col("doc_id").asc_nulls_first)
     },
-    Some("""
+    Some(s"""
       WITH g AS (
         SELECT doc_id, i, h
-        FROM read_parquet('/tmp/graft_fixture_fpgrams_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("fpgrams")}),
       n AS (SELECT doc_id, max(i) AS n FROM g GROUP BY doc_id),
       w AS (
         SELECT doc_id, i,
@@ -2376,52 +2359,11 @@ object LlmOps extends QueryGroup {
     * everything else is broadcast-sized. */
   private val llmAnnLshMultiprobe = GraftQuery(
     "llm_ann_lsh_multiprobe",
-    (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      graft.Fixtures.lshPlanes(s, dir) // plane dump for the DuckDB oracle
-      val base = docVec(s, dir)
-      val planted = base.filter(col("vec_id") === 0)
-        .select(lit(9000000L).as("vec_id"),
-          transform(col("v"), x => x * 0.9 + 0.02).as("v"))
-      val bucketed = graft.etl.VectorLsh.withBucket(base.unionByName(planted), 12, 64)
-      val qRow = bucketed.filter(col("vec_id") === 0)
-        .select(col("v").as("qv"), col("bucket").as("qbucket"))
-      graft.etl.VectorLsh.multiProbe(bucketed, qRow, 12, 2)
-        .select(col("vec_id"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(10)
-    },
+    (s, dir) => lshAnn(s, dir, bits = 12)(graft.etl.VectorLsh.multiProbe(_, _, 12, 2)),
     // Oracled (r6): the mask-join form is ≡ a Hamming≤2 filter on the
     // 12-bit sign buckets — same plane fixture as llm_ann_lsh, wider
     // geometry, bit_count(xor) ≤ 2.
-    Some("""
-      WITH base AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      qv0 AS (SELECT v FROM base WHERE vec_id = 0),
-      corpus AS (
-        SELECT vec_id, v FROM base
-        UNION ALL
-        SELECT 9000000, list_transform(v, x -> x * 0.9 + 0.02) FROM qv0),
-      planes AS (
-        SELECT j, h
-        FROM read_parquet('/tmp/graft_fixture_lshplanes_sf0.01/*.parquet')),
-      bkt AS (
-        SELECT c.vec_id,
-               CAST(SUM(CASE WHEN list_sum([c.v[i] * p.h[i]
-                                            FOR i IN range(1, len(p.h) + 1)]) > 0
-                             THEN (1 << p.j) ELSE 0 END) AS BIGINT) AS bucket
-        FROM corpus c CROSS JOIN planes p
-        GROUP BY c.vec_id),
-      qb AS (SELECT bucket AS qbucket FROM bkt WHERE vec_id = 0)
-      SELECT c.vec_id,
-             round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim
-      FROM corpus c
-      JOIN bkt ON bkt.vec_id = c.vec_id
-      CROSS JOIN qb CROSS JOIN qv0 q
-      WHERE bit_count(xor(bkt.bucket, qb.qbucket)) <= 2
-      ORDER BY cos_sim DESC NULLS LAST, c.vec_id ASC NULLS FIRST
-      LIMIT 10"""))
+    Some(lshOracle("", maxHamming = 2)))
 
   /** Scalar int8 EMBEDDING QUANTIZATION — the storage/serving format of a
     * large vector corpus (8× fewer scan bytes for ANN): per-vector min/max
@@ -2872,7 +2814,7 @@ object LlmOps extends QueryGroup {
     // over candidates, and the per-cell attrition counts in SQL.
     // VectorSpec keeps the independent JVM recompute of the pruned drop
     // rule plus the recall-vs-all-pairs pin.
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         FROM embeddings),
@@ -2886,10 +2828,10 @@ object LlmOps extends QueryGroup {
         FROM corpus GROUP BY v),
       cents AS (
         SELECT cent_id, cv
-        FROM read_parquet('/tmp/graft_fixture_sdcents_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("sdcents")}),
       planes AS (
         SELECT band, weight, h
-        FROM read_parquet('/tmp/graft_fixture_sdplanes_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("sdplanes")}),
       asg AS (
         SELECT rep, cent_id FROM (
           SELECT g.rep, c.cent_id,
@@ -2988,7 +2930,7 @@ object LlmOps extends QueryGroup {
     // `a` and the incoming one is `b` (a fresh fusion cannot re-combine
     // in the same round, exactly the Bpe.mergeStep contract) — then
     // rolls up per doc and fans out identity groups.
-    Some("""
+    Some(raw"""
       WITH d AS (
         SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
         FROM documents),
@@ -2997,7 +2939,7 @@ object LlmOps extends QueryGroup {
       dw AS (SELECT DISTINCT w FROM rw),
       m AS (
         SELECT list([a, b] ORDER BY ord ASC) AS ml
-        FROM read_parquet('/tmp/graft_fixture_bpemerges_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("bpemerges")}),
       seg AS (
         SELECT dw.w,
                len(list_reduce(
@@ -3073,7 +3015,7 @@ object LlmOps extends QueryGroup {
           col("recon_cos"))
         .orderBy(col("vec_id").asc_nulls_first)
     },
-    Some("""
+    Some(s"""
       WITH emb AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         FROM embeddings),
@@ -3081,7 +3023,7 @@ object LlmOps extends QueryGroup {
         SELECT v, min(vec_id) AS rep FROM emb GROUP BY v),
       books AS (
         SELECT j, cid, cv, halfcc, cc
-        FROM read_parquet('/tmp/graft_fixture_pqbooks_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("pqbooks")}),
       scored AS (
         SELECT g.rep, b.j, b.cid,
                b.halfcc - list_sum([g.v[len(b.cv) * b.j + i] * b.cv[i]
@@ -3189,6 +3131,53 @@ object LlmOps extends QueryGroup {
     cents.toDF("cent_id", "cv")
   }
 
+  /** Oracle CTE: the PQ codebook fixture as `books`. */
+  private val PqBooks = s"""books AS (
+        SELECT j, cid, cv, halfcc, cc
+        FROM ${Fixtures.oracleScan("pqbooks")}),"""
+
+  /** Oracle tail of the PQ ADC rows: re-derive each `grp` rep's codes by
+    * argmin against `books`, build the query `q`'s lookup table, and
+    * score codes-only; the caller adds FROM (and any cell filter). */
+  private val PqAdcScore = """scored AS (
+        SELECT g.rep, b.j, b.cid,
+               b.halfcc - list_sum([g.v[len(b.cv) * b.j + i] * b.cv[i]
+                                    FOR i IN range(1, len(b.cv) + 1)]) AS negscore,
+               b.cc
+        FROM grp g CROSS JOIN books b),
+      best AS (
+        SELECT rep, j, cid, cc
+        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY rep, j
+                ORDER BY negscore ASC, cid ASC) AS rn
+              FROM scored)
+        WHERE rn = 1),
+      adct AS (
+        SELECT b.j, b.cid,
+               list_sum([q.v[len(b.cv) * b.j + i] * b.cv[i]
+                         FOR i IN range(1, len(b.cv) + 1)]) AS t
+        FROM books b CROSS JOIN q),
+      stats AS (
+        SELECT best.rep,
+               list_sum(list(a.t ORDER BY best.j ASC)) AS adc_dot,
+               list_sum(list(best.cc ORDER BY best.j ASC)) AS recon_norm2
+        FROM best JOIN adct a ON a.j = best.j AND a.cid = best.cid
+        GROUP BY best.rep),
+      qn AS (SELECT sqrt(list_sum([x * x FOR x IN v])) AS qnorm FROM q)
+      SELECT stats.rep AS vec_id,
+             round(CASE WHEN qn.qnorm = 0 OR stats.recon_norm2 = 0 THEN 0.0
+                   ELSE stats.adc_dot / (qn.qnorm * sqrt(stats.recon_norm2))
+                   END, 6) AS adc_cos"""
+
+  /** The PQ ADC rows' top-10 by ADC cosine of `coded (vec_id, codes,
+    * recon_norm2)` against the driver-side query `q`. */
+  private def adcTop10(coded: DataFrame, books: Seq[graft.etl.Pq.Codebook],
+      q: Seq[Double]): DataFrame =
+    coded
+      .withColumn("adc_cos", adcCosCol(books, q))
+      .select(col("vec_id"), col("adc_cos"))
+      .orderBy(col("adc_cos").desc, col("vec_id").asc)
+      .limit(10)
+
   /** ADC (asymmetric distance computation) top-k over PQ codes — the
     * query path of an IVF-PQ system (Jégou et al. 2011 §IV): the query
     * stays un-quantized; per subspace, its dot product against each of
@@ -3230,54 +3219,17 @@ object LlmOps extends QueryGroup {
         .select(col("vec_id"), col("codes"), col("recon_norm2"))
         .stageCheckpoint()
       val q = docVec(s, dir).filter(col("vec_id") === 0).head.getSeq[Double](1)
-      coded
-        .withColumn("adc_cos", adcCosCol(books, q))
-        .select(col("vec_id"), col("adc_cos"))
-        .orderBy(col("adc_cos").desc, col("vec_id").asc)
-        .limit(10)
+      adcTop10(coded, books, q)
     },
     // Oracled (r6): same declared-model-input pattern as llm_embed_pq —
     // the oracle rebuilds the ADC lookup table from the codebook fixture
     // and the query vector IN SQL, re-derives each rep's codes by the
     // same argmin, and scores codes-only exactly like the row (j-ordered
     // sums, guarded cosine, (adc_cos DESC, vec_id ASC) top-10).
-    Some("""
-      WITH emb AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      grp AS (SELECT v, min(vec_id) AS rep FROM emb GROUP BY v),
-      books AS (
-        SELECT j, cid, cv, halfcc, cc
-        FROM read_parquet('/tmp/graft_fixture_pqbooks_sf0.01/*.parquet')),
+    Some(s"""$AnnEmbGrp
+      $PqBooks
       q AS (SELECT v FROM emb WHERE vec_id = 0),
-      scored AS (
-        SELECT g.rep, b.j, b.cid,
-               b.halfcc - list_sum([g.v[len(b.cv) * b.j + i] * b.cv[i]
-                                    FOR i IN range(1, len(b.cv) + 1)]) AS negscore,
-               b.cc
-        FROM grp g CROSS JOIN books b),
-      best AS (
-        SELECT rep, j, cid, cc
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY rep, j
-                ORDER BY negscore ASC, cid ASC) AS rn
-              FROM scored)
-        WHERE rn = 1),
-      adct AS (
-        SELECT b.j, b.cid,
-               list_sum([q.v[len(b.cv) * b.j + i] * b.cv[i]
-                         FOR i IN range(1, len(b.cv) + 1)]) AS t
-        FROM books b CROSS JOIN q),
-      stats AS (
-        SELECT best.rep,
-               list_sum(list(a.t ORDER BY best.j ASC)) AS adc_dot,
-               list_sum(list(best.cc ORDER BY best.j ASC)) AS recon_norm2
-        FROM best JOIN adct a ON a.j = best.j AND a.cid = best.cid
-        GROUP BY best.rep),
-      qn AS (SELECT sqrt(list_sum([x * x FOR x IN v])) AS qnorm FROM q)
-      SELECT stats.rep AS vec_id,
-             round(CASE WHEN qn.qnorm = 0 OR stats.recon_norm2 = 0 THEN 0.0
-                   ELSE stats.adc_dot / (qn.qnorm * sqrt(stats.recon_norm2))
-                   END, 6) AS adc_cos
+      $PqAdcScore
       FROM stats CROSS JOIN qn
       ORDER BY adc_cos DESC NULLS LAST, vec_id ASC NULLS FIRST
       LIMIT 10"""))
@@ -3326,65 +3278,18 @@ object LlmOps extends QueryGroup {
         .stageCheckpoint()
       val q = vecs.filter(col("vec_id") === 0).head.getSeq[Double](1)
       val probes = topProbes(mdl.cents, q, 4)
-      coded
-        .filter(col("cent_id").isin(probes: _*))
-        .withColumn("adc_cos", adcCosCol(books, q))
-        .select(col("vec_id"), col("adc_cos"))
-        .orderBy(col("adc_cos").desc, col("vec_id").asc)
-        .limit(10)
+      adcTop10(coded.filter(col("cent_id").isin(probes: _*)), books, q)
     },
-    Some("""
-      WITH emb AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      grp AS (SELECT v, min(vec_id) AS rep FROM emb GROUP BY v),
-      cents AS (
-        SELECT cent_id, cv
-        FROM read_parquet('/tmp/graft_fixture_ivfcents_sf0.01/*.parquet')),
-      books AS (
-        SELECT j, cid, cv, halfcc, cc
-        FROM read_parquet('/tmp/graft_fixture_pqbooks_sf0.01/*.parquet')),
+    Some(s"""$AnnEmbGrp
+      $IvfCents
+      $PqBooks
       q AS (SELECT v FROM emb WHERE vec_id = 0),
-      asg AS (
-        SELECT rep, cent_id FROM (
-          SELECT g.rep, c.cent_id,
-                 ROW_NUMBER() OVER (PARTITION BY g.rep
-                   ORDER BY round(list_cosine_similarity(g.v, c.cv), 6) DESC,
-                            c.cent_id ASC) AS rn
-          FROM grp g CROSS JOIN cents c)
-        WHERE rn = 1),
+      $IvfAsg
       probes AS (
         SELECT cent_id FROM cents CROSS JOIN q
         ORDER BY list_cosine_similarity(cv, q.v) DESC NULLS LAST, cent_id ASC
         LIMIT 4),
-      scored AS (
-        SELECT g.rep, b.j, b.cid,
-               b.halfcc - list_sum([g.v[len(b.cv) * b.j + i] * b.cv[i]
-                                    FOR i IN range(1, len(b.cv) + 1)]) AS negscore,
-               b.cc
-        FROM grp g CROSS JOIN books b),
-      best AS (
-        SELECT rep, j, cid, cc
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY rep, j
-                ORDER BY negscore ASC, cid ASC) AS rn
-              FROM scored)
-        WHERE rn = 1),
-      adct AS (
-        SELECT b.j, b.cid,
-               list_sum([q.v[len(b.cv) * b.j + i] * b.cv[i]
-                         FOR i IN range(1, len(b.cv) + 1)]) AS t
-        FROM books b CROSS JOIN q),
-      stats AS (
-        SELECT best.rep,
-               list_sum(list(a.t ORDER BY best.j ASC)) AS adc_dot,
-               list_sum(list(best.cc ORDER BY best.j ASC)) AS recon_norm2
-        FROM best JOIN adct a ON a.j = best.j AND a.cid = best.cid
-        GROUP BY best.rep),
-      qn AS (SELECT sqrt(list_sum([x * x FOR x IN v])) AS qnorm FROM q)
-      SELECT stats.rep AS vec_id,
-             round(CASE WHEN qn.qnorm = 0 OR stats.recon_norm2 = 0 THEN 0.0
-                   ELSE stats.adc_dot / (qn.qnorm * sqrt(stats.recon_norm2))
-                   END, 6) AS adc_cos
+      $PqAdcScore
       FROM stats
       JOIN asg ON asg.rep = stats.rep
       JOIN probes p ON p.cent_id = asg.cent_id
@@ -3485,32 +3390,12 @@ object LlmOps extends QueryGroup {
       // tools/PqServeProbe). Top-5 over reps covers the true top-5
       // (vecGroups proof), then identity groups re-expand and re-rank
       val qDf = docVec(s, dir).filter(col("vec_id") === 0).select(col("v").as("qv"))
-      graft.layouts.PqIndex.serve(s, art.floats)
+      exactTop5Members(graft.layouts.PqIndex.serve(s, art.floats)
         .filter(col("cent_id").isin(probes: _*))
         .filter(col("vec_id").isin(ids: _*))
-        .join(broadcast(shortDf), "vec_id")
-        .crossJoin(broadcast(qDf))
-        .select(col("vec_id"), col("members"), cosR("v", "qv").as("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
-        .select(explode(col("members")).as("vec_id"), col("cos_sim"))
-        .orderBy(col("cos_sim").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(5)
+        .join(broadcast(shortDf), "vec_id"), qDf)
     },
-    Some("""
-      WITH base AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-      qv AS (SELECT v FROM base WHERE vec_id = 0),
-      corpus AS (
-        SELECT vec_id, v FROM base
-        UNION ALL SELECT 1000000, list_transform(v, x -> x * 0.9 + 0.005) FROM qv
-        UNION ALL SELECT 2000000, list_transform(v, x -> x * 0.9 + 0.010) FROM qv
-        UNION ALL SELECT 3000000, list_transform(v, x -> x * 0.9 + 0.015) FROM qv
-        UNION ALL SELECT 4000000, list_transform(v, x -> x * 0.9 + 0.020) FROM qv)
-      SELECT c.vec_id, round(list_cosine_similarity(c.v, q.v), 6) AS cos_sim
-      FROM corpus c CROSS JOIN qv q
-      ORDER BY cos_sim DESC NULLS LAST, c.vec_id ASC NULLS FIRST
-      LIMIT 5"""))
+    Some(PlantedTop5Oracle))
 
   /** GRADEDNESS PREFLIGHT for PQ-coded ANN (`llm_ann_recall_floor`) —
     * the operator surface of [[graft.etl.AnnPreflight.recallFloor]]
@@ -3593,14 +3478,14 @@ object LlmOps extends QueryGroup {
           round(col("he.norm"), 6).as("raw_l2_norm")) ++ embCols: _*)
         .orderBy(col("doc_id").asc_nulls_first)
     },
-    Some("""
+    Some(raw"""
       WITH nrm AS (
         SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
         FROM documents),
       grp AS (SELECT t, min(doc_id) AS rep FROM nrm GROUP BY t),
       px AS (
         SELECT rep, dim, sign
-        FROM read_parquet('/tmp/graft_fixture_hepairs_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("hepairs")}),
       raw AS (SELECT rep, dim, CAST(SUM(sign) AS DOUBLE) AS r FROM px GROUP BY rep, dim),
       nm AS (SELECT rep, sqrt(SUM(r * r)) AS norm FROM raw GROUP BY rep),
       head AS (
@@ -3904,14 +3789,14 @@ object LlmOps extends QueryGroup {
         evalNgrams = Some(evalSh)).attrition
         .orderBy(col("stage_ord").asc_nulls_first)
     },
-    Some("""
+    Some(raw"""
       WITH corpus AS (
         SELECT id, text
-        FROM read_parquet('/tmp/graft_fixture_neardup_sf0.01/*.parquet')
+        FROM ${Fixtures.oracleScan("neardup")}
         WHERE id % 1000000000 < 1000000),
       batch AS (
         SELECT id, text
-        FROM read_parquet('/tmp/graft_fixture_incbatch_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("incbatch")}),
       b1 AS (
         SELECT id, text FROM (
           SELECT id, text,
@@ -3936,35 +3821,13 @@ object LlmOps extends QueryGroup {
         SELECT t, min(id) AS rep, list_sort(list(id)) AS members
         FROM (SELECT id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM b2)
         GROUP BY t),
-      cs AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM crep)),
-      bs2 AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM brep2)),
-      shh AS (
-        SELECT sh, unnest(hs) AS h, unnest(generate_series(0, 63)) AS seed
-        FROM read_parquet('/tmp/graft_fixture_incsig_sf0.01/*.parquet')),
-      csig AS (
-        SELECT rep, list(m ORDER BY seed ASC) AS sig
-        FROM (SELECT t.rep, s.seed, min(s.h) AS m
-              FROM (SELECT rep, unnest(shs) AS sh FROM cs) t
-              JOIN shh s USING (sh) GROUP BY t.rep, s.seed)
-        GROUP BY rep),
-      bsig2 AS (
-        SELECT rep, list(m ORDER BY seed ASC) AS sig
-        FROM (SELECT t.rep, s.seed, min(s.h) AS m
-              FROM (SELECT rep, unnest(shs) AS sh FROM bs2) t
-              JOIN shh s USING (sh) GROUP BY t.rep, s.seed)
-        GROUP BY rep),
-      cbands AS (
-        SELECT rep, b.b, array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bk
-        FROM csig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
-      bbands2 AS (
-        SELECT rep, b.b, array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bk
-        FROM bsig2 CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
+      ${shingleSetCte("cs", "crep")}
+      ${shingleSetCte("bs2", "brep2")}
+      ${shingleHashCte("incsig")}
+      ${repSigCte("csig", "cs")}
+      ${repSigCte("bsig2", "bs2")}
+      ${bandKeyCte("cbands", "csig")}
+      ${bandKeyCte("bbands2", "bsig2")}
       cand3 AS (
         SELECT DISTINCT bb.rep AS brep_, cb.rep AS crep_
         FROM bbands2 bb JOIN cbands cb ON bb.b = cb.b AND bb.bk = cb.bk),
@@ -3986,19 +3849,9 @@ object LlmOps extends QueryGroup {
         FROM (SELECT id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM b3)
         GROUP BY t),
       mem3 AS (SELECT rep, unnest(members) AS m FROM brep3),
-      bs3 AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM brep3)),
-      bsig3 AS (
-        SELECT rep, list(m ORDER BY seed ASC) AS sig
-        FROM (SELECT t.rep, s.seed, min(s.h) AS m
-              FROM (SELECT rep, unnest(shs) AS sh FROM bs3) t
-              JOIN shh s USING (sh) GROUP BY t.rep, s.seed)
-        GROUP BY rep),
-      bands3 AS (
-        SELECT rep, b.b, array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bk
-        FROM bsig3 CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
+      ${shingleSetCte("bs3", "brep3")}
+      ${repSigCte("bsig3", "bs3")}
+      ${bandKeyCte("bands3", "bsig3")}
       cand4 AS (
         SELECT DISTINCT a.rep AS ra, c.rep AS rb
         FROM bands3 a JOIN bands3 c ON a.b = c.b AND a.bk = c.bk AND a.rep < c.rep),

@@ -125,14 +125,43 @@ object Multimodal extends QueryGroup {
     .when(col("doc_id") % 3 === 1, "audio/wav")
     .otherwise("video/mp4")
 
+  /** The mm_* rows' media source: documents with the UTF-8 bytes of the
+    * text as `payload` (the "media" stand-in). */
+  private def payloadDocs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).withColumn("payload", encode(col("text"), "UTF-8"))
+
+  /** Oracle CTEs `h` and `b (doc_id, bytes)`: each document's UTF-8 byte
+    * stream, parsed back from `hex(encode(text))`. */
+  private val PayloadBytes = """WITH h AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents),
+      b AS (
+        SELECT doc_id,
+               [16 * (strpos('0123456789ABCDEF', hx[2*i-1]) - 1)
+                  + (strpos('0123456789ABCDEF', hx[2*i]) - 1)
+                FOR i IN range(1, len(hx) // 2 + 1)] AS bytes
+        FROM h),"""
+
+  /** Oracle column `chk_u`: the ×31 rolling checksum of byte list `bytes`
+    * in HUGEINT arithmetic mod 2^64. */
+  private def unsignedChecksum(bytes: String): String =
+    s"""list_reduce(
+                 list_prepend(CAST(0 AS HUGEINT),
+                              list_transform($bytes, x -> CAST(x AS HUGEINT))),
+                 (acc, x) -> (acc * 31 + x) % 18446744073709551616) AS chk_u"""
+
+  /** Oracle column `alias`: `chk_u` mapped back to the signed Long the
+    * codec emits. */
+  private def signedChecksum(alias: String): String =
+    s"""CAST(CASE WHEN chk_u >= 9223372036854775808
+                       THEN chk_u - 18446744073709551616 ELSE chk_u END AS BIGINT)
+               AS $alias"""
+
   /** Binary payload + metadata struct assembly and projection; payload is
     * the UTF-8 bytes of the text (the "media" stand-in). Oracle checks the
     * byte lengths and mime routing. */
   private val mmBinaryMeta = GraftQuery(
     "mm_binary_meta",
     (s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("payload", encode(col("text"), "UTF-8"))
+      payloadDocs(s, dir)
         .withColumn("media", struct(
           mimeOf.as("mime"),
           length(col("payload")).as("n_bytes"),
@@ -164,19 +193,11 @@ object Multimodal extends QueryGroup {
     "mm_decode_features",
     (s, dir) =>
       decodeFeatures(
-        Tables.documents(s, dir)
-          .withColumn("payload", encode(col("text"), "UTF-8"))
-          .withColumn("mime", mimeOf),
+        payloadDocs(s, dir).withColumn("mime", mimeOf),
         StubCodec)
         .orderBy(col("doc_id").asc_nulls_first),
-    Some("""
-      WITH h AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents),
-      b AS (
-        SELECT doc_id,
-               [16 * (strpos('0123456789ABCDEF', hx[2*i-1]) - 1)
-                  + (strpos('0123456789ABCDEF', hx[2*i]) - 1)
-                FOR i IN range(1, len(hx) // 2 + 1)] AS bytes
-        FROM h),
+    Some(s"""
+      $PayloadBytes
       f AS (
         SELECT doc_id,
                CASE WHEN doc_id % 3 = 0 THEN 'image/jpeg'
@@ -186,15 +207,10 @@ object Multimodal extends QueryGroup {
                CAST(len(list_filter(bytes, x -> x < 85)) AS INTEGER) AS b_low,
                CAST(len(list_filter(bytes, x -> x >= 85 AND x < 170)) AS INTEGER) AS b_mid,
                CAST(len(list_filter(bytes, x -> x >= 170)) AS INTEGER) AS b_high,
-               list_reduce(
-                 list_prepend(CAST(0 AS HUGEINT),
-                              list_transform(bytes, x -> CAST(x AS HUGEINT))),
-                 (acc, x) -> (acc * 31 + x) % 18446744073709551616) AS chk_u
+               ${unsignedChecksum("bytes")}
         FROM b)
       SELECT doc_id, mime, n_bytes, b_low, b_mid, b_high,
-             CAST(CASE WHEN chk_u >= 9223372036854775808
-                       THEN chk_u - 18446744073709551616 ELSE chk_u END AS BIGINT)
-               AS checksum
+             ${signedChecksum("checksum")}
       FROM f
       ORDER BY doc_id ASC NULLS FIRST"""))
 
@@ -206,21 +222,13 @@ object Multimodal extends QueryGroup {
     "mm_frame_sample",
     (s, dir) =>
       frameSample(
-        Tables.documents(s, dir)
-          .withColumn("payload", encode(col("text"), "UTF-8"))
-          .withColumn("mime", mimeOf),
+        payloadDocs(s, dir).withColumn("mime", mimeOf),
         StubCodec)
         .orderBy(col("doc_id").asc_nulls_first, col("frame_idx").asc_nulls_first),
     // Oracled (r6): same hex-parse byte stream + HUGEINT wrapping
     // checksum as mm_decode_features, per 64-byte frame at stride 4.
-    Some("""
-      WITH h AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents),
-      b AS (
-        SELECT doc_id,
-               [16 * (strpos('0123456789ABCDEF', hx[2*i-1]) - 1)
-                  + (strpos('0123456789ABCDEF', hx[2*i]) - 1)
-                FOR i IN range(1, len(hx) // 2 + 1)] AS bytes
-        FROM h),
+    Some(s"""
+      $PayloadBytes
       n AS (SELECT doc_id, bytes,
                    CAST((len(bytes) + 63) // 64 AS INTEGER) AS nf
             FROM b),
@@ -230,15 +238,10 @@ object Multimodal extends QueryGroup {
                bytes[u.i * 64 + 1 : least(u.i * 64 + 64, len(bytes))] AS fb
         FROM n, UNNEST(range(0, n.nf, 4)) AS u(i))
       SELECT doc_id, frame_idx, "offset",
-             CAST(CASE WHEN chk_u >= 9223372036854775808
-                       THEN chk_u - 18446744073709551616 ELSE chk_u END AS BIGINT)
-               AS checksum
+             ${signedChecksum("checksum")}
       FROM (
         SELECT doc_id, frame_idx, "offset",
-               list_reduce(
-                 list_prepend(CAST(0 AS HUGEINT),
-                              list_transform(fb, x -> CAST(x AS HUGEINT))),
-                 (acc, x) -> (acc * 31 + x) % 18446744073709551616) AS chk_u
+               ${unsignedChecksum("fb")}
         FROM fr)
       ORDER BY doc_id ASC NULLS FIRST, frame_idx ASC NULLS FIRST"""))
 
@@ -250,36 +253,23 @@ object Multimodal extends QueryGroup {
     "mm_resize",
     (s, dir) =>
       resizeMedia(
-        Tables.documents(s, dir)
-          .withColumn("payload", encode(col("text"), "UTF-8"))
-          .withColumn("mime", mimeOf),
+        payloadDocs(s, dir).withColumn("mime", mimeOf),
         StubCodec)
         .orderBy(col("doc_id").asc_nulls_first),
     // Oracled (r6): the 4:1 downsample is an index-stepped comprehension
     // over the hex-parsed byte stream; checksum as in mm_decode_features.
-    Some("""
-      WITH h AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents),
-      b AS (
-        SELECT doc_id,
-               [16 * (strpos('0123456789ABCDEF', hx[2*i-1]) - 1)
-                  + (strpos('0123456789ABCDEF', hx[2*i]) - 1)
-                FOR i IN range(1, len(hx) // 2 + 1)] AS bytes
-        FROM h),
+    Some(s"""
+      $PayloadBytes
       r AS (
         SELECT doc_id, CAST(len(bytes) AS INTEGER) AS orig_bytes,
                [bytes[i] FOR i IN range(1, len(bytes) + 1) IF (i - 1) % 4 = 0] AS rb
         FROM b)
       SELECT doc_id, orig_bytes,
              CAST(len(rb) AS INTEGER) AS resized_bytes,
-             CAST(CASE WHEN chk_u >= 9223372036854775808
-                       THEN chk_u - 18446744073709551616 ELSE chk_u END AS BIGINT)
-               AS resized_checksum
+             ${signedChecksum("resized_checksum")}
       FROM (
         SELECT doc_id, orig_bytes, rb,
-               list_reduce(
-                 list_prepend(CAST(0 AS HUGEINT),
-                              list_transform(rb, x -> CAST(x AS HUGEINT))),
-                 (acc, x) -> (acc * 31 + x) % 18446744073709551616) AS chk_u
+               ${unsignedChecksum("rb")}
         FROM r)
       ORDER BY doc_id ASC NULLS FIRST"""))
 

@@ -126,7 +126,8 @@ object RowOps extends QueryGroup {
       LIMIT 100 OFFSET 10"""))
 
   /** op 14 — RANUNI(seed)-style reproducible sample. Engines' RNGs differ →
-    * no oracle; RowOpsSpec asserts seed-stability and fraction bounds. */
+    * no oracle; GraftSessionSpec's sample_seeded case asserts
+    * seed-stability and the fraction bound. */
   private val sampleSeeded = GraftQuery(
     "sample_seeded",
     (s, dir) =>

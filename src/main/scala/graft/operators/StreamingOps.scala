@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, GraftQuery, QueryGroup, Tables}
+import graft.{Det, Fixtures, GraftQuery, QueryGroup, Tables}
 import graft.streaming.EventPipelines
 import org.apache.spark.sql.functions._
 
@@ -42,6 +42,16 @@ object StreamingOps extends QueryGroup {
       GROUP BY w_start, event_type
       ORDER BY w_start ASC NULLS FIRST, event_type ASC NULLS FIRST"""))
 
+  /** Oracle subquery of the session rows: each event with `new_session`
+    * = 1 where it opens a session (first event of its user, or more than
+    * 30 minutes after the previous one). */
+  private val NewSessionFlags = """FROM (
+          SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
+                 CASE WHEN LAG(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) IS NULL
+                        OR CAST(ts AS TIMESTAMP) > LAG(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) + INTERVAL 30 MINUTE
+                      THEN 1 ELSE 0 END AS new_session
+          FROM events))"""
+
   /** op 65 — sessionization (30-min gap), lag/gap/cumsum batch twin. */
   private val streamSessionWindows = GraftQuery(
     "stream_session_windows",
@@ -57,12 +67,7 @@ object StreamingOps extends QueryGroup {
                -- CAST: DuckDB SUM(int) is HUGEINT -> pandas float64; Spark emits int64.
                CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        FROM (
-          SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-                 CASE WHEN LAG(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) IS NULL
-                        OR CAST(ts AS TIMESTAMP) > LAG(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) + INTERVAL 30 MINUTE
-                      THEN 1 ELSE 0 END AS new_session
-          FROM events))
+        $NewSessionFlags
       GROUP BY user_id, session_id
       ORDER BY user_id ASC NULLS FIRST, session_id ASC NULLS FIRST"""))
 
@@ -126,12 +131,7 @@ object StreamingOps extends QueryGroup {
         SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
                SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        FROM (
-          SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-                 CASE WHEN LAG(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) IS NULL
-                        OR CAST(ts AS TIMESTAMP) > LAG(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) + INTERVAL 30 MINUTE
-                      THEN 1 ELSE 0 END AS new_session
-          FROM events))
+        $NewSessionFlags
       GROUP BY user_id, session_id
       ORDER BY user_id ASC NULLS FIRST, session_start ASC NULLS FIRST"""))
 
@@ -190,31 +190,16 @@ object StreamingOps extends QueryGroup {
         .nearDupPairs(docs.select(col("doc_id"), col("text")), threshold = 0.5)
         .orderBy(col("doc_a").asc_nulls_first, col("doc_b").asc_nulls_first)
     },
-    Some("""
+    Some(raw"""
       WITH docs AS (
         SELECT id, text
-        FROM read_parquet('/tmp/graft_fixture_neardup_sf0.01/*.parquet')),
+        FROM ${Fixtures.oracleScan("neardup")}),
       reps AS (SELECT min(id) AS rep, text FROM docs GROUP BY text),
       rnrm AS (
         SELECT rep, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
         FROM reps),
-      shing AS (
-        SELECT rep, list_distinct([array_to_string(words[i:i+4], ' ')
-          FOR i IN range(1, greatest(len(words) - 3, 2))]) AS shs
-        FROM (SELECT rep, string_split(t, ' ') AS words FROM rnrm)),
-      tok AS (SELECT rep, unnest(shs) AS sh FROM shing),
-      shh AS (
-        SELECT sh, unnest(hs) AS h, unnest(generate_series(0, 63)) AS seed
-        FROM read_parquet('/tmp/graft_fixture_mhsig_sf0.01/*.parquet')),
-      sig AS (
-        SELECT t.rep, s.seed, min(s.h) AS m
-        FROM tok t JOIN shh s USING (sh)
-        GROUP BY t.rep, s.seed),
-      sigarr AS (SELECT rep, list(m ORDER BY seed ASC) AS sig FROM sig GROUP BY rep),
-      bandrows AS (
-        SELECT rep, b.b,
-               array_to_string(sig[4 * b.b + 1 : 4 * b.b + 4], ',') AS bkey
-        FROM sigarr CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(16)) b),
+      ${LlmOps.shingleSetCte("shing", "rnrm")}
+      ${LlmOps.MinhashBandRows}
       rown AS (
         SELECT rep, b, bkey,
                ROW_NUMBER() OVER (PARTITION BY b, bkey ORDER BY rep ASC) AS rn

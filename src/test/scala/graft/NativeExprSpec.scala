@@ -147,10 +147,10 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
       "the declarative forms (fallback-trigger shapes included)") {
     GraftFunctions.register(spark)
     import spark.implicits._
-    // every fast-path branch + every fallback trigger: empty, whitespace
-    // edges (leading/trailing/double space → word_shingles fallback),
+    // every byte-path branch + every char_ngrams fallback trigger: empty,
+    // whitespace edges (leading/trailing/double space: empty words),
     // non-ASCII (→ char_ngrams fallback), short texts, exact-k windows,
-    // heavy repetition (distinct filter), single char
+    // heavy repetition (distinct filter), single char; k = 1 and k = 0
     val texts = Seq(
       "", " ", "a", "ab", "a b", "a b c", "a b c d e f",
       " a b c", "a b c ", "a  b c", "a b  c d",
@@ -159,12 +159,14 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
       "日本語 テスト 日本語",
       "one two three four five six seven eight nine ten")
     val df = texts.toDF("t")
-    val shBoth = df.select(
-        expr("word_shingles(t, 3)").as("fast"),
-        array_distinct(TextOps.wordShingles(col("t"), 3)).as("slow"))
-      .collect()
-    shBoth.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1),
-      s"word_shingles mismatch: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}"))
+    Seq(3, 1, 0).foreach { k =>
+      val shBoth = df.select(
+          expr(s"word_shingles(t, $k)").as("fast"),
+          array_distinct(TextOps.wordShingles(col("t"), k)).as("slow"))
+        .collect()
+      shBoth.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1),
+        s"word_shingles k=$k mismatch: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}"))
+    }
     val legacyTri = expr(
       """array_distinct(transform(sequence(1, greatest(length(t) - 2, 1)),
            i -> substr(t, i, 3)))""")
