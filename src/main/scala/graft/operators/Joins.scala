@@ -724,10 +724,10 @@ object Joins extends QueryGroup {
       // ns/row: per-row UnsafeRow key build + byte-map lookup) on the
       // full fact stream — ~5 s at sf12's 72 M rows. Aggregating first
       // shrinks the probe input 3000×, making the key shape irrelevant.
-      // Bit-exact vs the flat oracle: the partial revenue stays in the
-      // DECIMAL sum domain (sum of decimal(18,4) casts) and only the
-      // final re-aggregated sum is cast to double, so the two-level sum
-      // is the same exact decimal total Det.dsum computes in one level;
+      // Bit-exact vs the flat oracle: the partial revenue is an exact
+      // Det.dsumPartial and only the final re-aggregated Det.dsum is
+      // converted to double, so the two-level sum is the same exact
+      // total Det.dsum computes in one level;
       // counts re-aggregate by summation. Equivalent join-wise because
       // s_suppkey is the supplier primary key and the nationkey equality
       // drops whole (l_suppkey, c_nationkey) groups.
@@ -737,8 +737,7 @@ object Joins extends QueryGroup {
         .join(s.table(ordersCustB), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_suppkey"), col("c_nationkey"))
         .agg(count(lit(1)).as("pn"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast(Det.Money)).as("prev"))
+          Det.dsumPartial(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("prev"))
         .join(broadcast(Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")),
           col("l_suppkey") === col("s_suppkey"))
         .filter(col("c_nationkey") === col("s_nationkey"))
@@ -746,7 +745,7 @@ object Joins extends QueryGroup {
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(sum(col("pn")).cast(org.apache.spark.sql.types.LongType).as("n_lines"),
-          sum(col("prev")).cast(org.apache.spark.sql.types.DoubleType).as("revenue"))
+          Det.dsum(col("prev")).as("revenue"))
         .orderBy(col("n_name").asc_nulls_first)
     },
     Some(s"""

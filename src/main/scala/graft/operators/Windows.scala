@@ -25,8 +25,6 @@ object Windows extends QueryGroup {
 
   import graft.Det
 
-  private def money(c: org.apache.spark.sql.Column) = c.cast(Det.Money)
-
   /** op 37 — FIRST.k / LAST.k flags per BY group (user ordered by ts). */
   private val winRowNumberFirstLast = GraftQuery(
     "win_row_number_first_last",
@@ -101,7 +99,7 @@ object Windows extends QueryGroup {
         .orderBy(col("ts").asc, col("event_id").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.events(s, dir)
-        .withColumn("running_value", sum(money(col("value"))).over(w).cast(DoubleType))
+        .withColumn("running_value", Det.dsum(col("value")).over(w))
         .select("event_id", "user_id", "value", "running_value")
         .orderBy(col("event_id").asc_nulls_first)
     },
@@ -121,9 +119,7 @@ object Windows extends QueryGroup {
         .orderBy(col("ts").asc, col("event_id").asc)
         .rowsBetween(-6, Window.currentRow)
       Tables.events(s, dir)
-        .withColumn("avg7",
-          sum(money(col("value"))).over(w).cast(DoubleType) /
-            count(col("value")).over(w).cast(DoubleType))
+        .withColumn("avg7", Det.davg(col("value"), w))
         .select("event_id", "user_id", "value", "avg7")
         .orderBy(col("event_id").asc_nulls_first)
     },
@@ -144,7 +140,7 @@ object Windows extends QueryGroup {
       val w = Window.partitionBy(col("user_id"))
       Tables.events(s, dir)
         .withColumn("pct_of_user",
-          col("value") / sum(money(col("value"))).over(w).cast(DoubleType))
+          col("value") / Det.dsum(col("value")).over(w))
         .select("event_id", "user_id", "value", "pct_of_user")
         .orderBy(col("event_id").asc_nulls_first)
     },

@@ -22,4 +22,12 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Column of a Catalyst expression and back (`ExpressionUtils` is
+    * private[sql]): how `graft.Det` hands its native aggregate to the
+    * Column API without registering a SQL function. */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
+  def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 }

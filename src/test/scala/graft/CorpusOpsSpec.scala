@@ -217,8 +217,8 @@ class CorpusOpsSpec extends AnyFunSuite with SparkTestBase {
   test("sampling hash survives replica-offset id ranges (no ANSI long overflow)") {
     // The sf3/sf6 replica corpora offset doc_id by replica·10⁹, past the
     // ⌊2⁶³/2654435761⌋ ≈ 3.4×10⁹ point where a BIGINT Knuth multiply
-    // overflows and ANSI mode throws. Det.knuthU computes the hash in
-    // DECIMAL(38,0), so the sampling rows must evaluate cleanly here.
+    // overflows and ANSI mode throws. Det.knuthU computes the hash on
+    // 16-bit limbs, so the sampling rows must evaluate cleanly here.
     // collect(), NOT count(): count() lets Catalyst prune the aggregate
     // expressions (only group keys survive), which is exactly how the
     // original overflow hid from the count()-based scaling sweeps.
