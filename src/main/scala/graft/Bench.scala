@@ -13,12 +13,8 @@ import org.apache.spark.sql.types._
   * winner; crossover protocol pins 32), SPARK_DRIVER_MEM (heap, via
   * build.sbt), SPARK_GRAFT_HEADLINE_ONLY (skip the full-registry pass
   * AND the temporally-separated second headline pass — large-SF
-  * crossover sessions), SPARK_GRAFT_CLASSIC_ONLY (layout-free twins
-  * substitute for the 5 layout shapes, no resident format built —
-  * disk-frugal large-SF refreshes; publishes
-  * `headline_total_12q_classic` and mirrors to `.classic`-suffixed
-  * files). The session is `GraftSession.builder`, the same one Verify
-  * checks against the oracle.
+  * crossover sessions). The session is `GraftSession.builder`, the same
+  * one Verify checks against the oracle.
   *
   * Headline set = the 12 measured shapes in BASELINE.md, named identically
   * so BENCH_r{N}.json compares 1:1 against the DuckDB baseline, and
@@ -376,7 +372,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val classicOnly = sys.env.contains("SPARK_GRAFT_CLASSIC_ONLY")
     val spark = GraftSession.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -384,34 +379,12 @@ object Bench {
     // headline pass so the one-time cost lands in the `builds` record,
     // not in q5's first warmup (the same prewarm-with-identical-cache-key
     // contract the registry phase applies to every resident format)
-    // r15 verdict item 5 (sf96, disk-frugally): SPARK_GRAFT_CLASSIC_ONLY
-    // skips EVERY layout build — the r15 sf96 abort was the two
-    // ~288 M-row bucketBy shuffles exhausting /tmp, never the query pass
-    // — and times the raw-table twins plus the layout-free headline
-    // shapes only. No resident format anywhere, so the record compares
-    // like-for-like against a raw-parquet baseline engine; the layouts'
-    // wins stay quantified by the non-classic runs at the SFs that fit.
-    val preBuilds: Seq[(String, (Double, Option[String]))] =
-      if (classicOnly) Nil else Seq(
+    val preBuilds: Seq[(String, (Double, Option[String]))] = Seq(
         "build_bucketed_facts" -> clocked(operators.Joins.bucketedFacts(spark, sfDir)),
         "build_bucketed_dims" -> clocked(operators.Joins.bucketedDims(spark, sfDir)),
         "build_bucketed_events" -> clocked(operators.Joins.bucketedEvents(spark, sfDir)))
 
-    val classicHeadline: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      "q1_pricing_summary" -> (q1 _),
-      "grouping_sets"      -> (groupingSets _),
-      "pivot_transpose"    -> (pivotTranspose _),
-      "tumbling_window"    -> (tumbling _),
-      "text_tokens"        -> (textTokens _),
-      "dedup_exact"        -> (dedupExact _)) ++
-      fromRegistry.map { case (b, q) => b -> SparkEntry.queries(q) } :+
-      ("q3_join3_topk_classic" -> (q3Classic _)) :+
-      ("q5_join5_classic"  -> (q5Classic _)) :+
-      ("asof_like_merge_classic" -> (asofLikeMergeClassic _)) :+
-      ("window_rank_classic" -> (windowRankClassic _)) :+
-      ("sessionize_classic" -> (sessionizeClassic _))
-
-    val fullHeadline: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    val headline: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "q1_pricing_summary" -> (q1 _),
       "q3_join3_topk"      -> (q3 _),
       "q5_join5"           -> (q5 _),
@@ -429,8 +402,6 @@ object Bench {
       ("asof_like_merge_classic" -> (asofLikeMergeClassic _)) :+
       ("window_rank_classic" -> (windowRankClassic _)) :+
       ("sessionize_classic" -> (sessionizeClassic _))
-
-    val headline = if (classicOnly) classicHeadline else fullHeadline
 
     // error capture on the HEADLINE pass too (r9): without it a single
     // crashed shape (e.g. a classic contrast entry whose unspillable
@@ -455,12 +426,7 @@ object Bench {
     // `all_queries_once` stays in `queries` for cross-round comparability
     // and now equals the SUM of the per-row times (build costs excluded).
     // SPARK_GRAFT_HEADLINE_ONLY=1 skips the pass (crossover runs at larger
-    // SFs; the driver never sets it) — and so does classic-only mode,
-    // whose whole contract is "no resident format built anywhere": the
-    // registry rows build z-order/PQ/IVF/stream layouts and their
-    // co-located shapes trigger the very bucketBy shuffles the mode
-    // exists to avoid (r16 review catch — the first cut gated only the
-    // three preBuilds).
+    // SFs; the driver never sets it).
     // the three rows whose single-session cold numbers carry ±1 s
     // neighborhood-GC error bars (r4 verdict item 7): re-run once after
     // the full pass and publish min-of-2 alongside, the CROSSOVER
@@ -486,7 +452,7 @@ object Bench {
     }
 
     val (buildTimes, rowTimes, heavyMin2) =
-      if (sys.env.contains("SPARK_GRAFT_HEADLINE_ONLY") || classicOnly)
+      if (sys.env.contains("SPARK_GRAFT_HEADLINE_ONLY"))
         (preBuilds, Nil, Nil)
       else {
         val builds: Seq[(String, (Double, Option[String]))] = preBuilds ++ Seq(
@@ -550,7 +516,7 @@ object Bench {
     // pass1/pass2 per row makes that bias self-auditing instead of
     // requiring a judge re-run. The published min is unchanged in meaning.
     val pass2: Seq[(String, (Double, Option[String]))] =
-      if (sys.env.contains("SPARK_GRAFT_HEADLINE_ONLY") || classicOnly) Nil
+      if (sys.env.contains("SPARK_GRAFT_HEADLINE_ONLY")) Nil
       else {
         val fns = headline.toMap
         timed.map { case (name, _) =>
@@ -578,16 +544,9 @@ object Bench {
       kvs.collect { case (k, (_, Some(e))) => "\"" + k + "\":\"" + e + "\"" }
         .mkString("{", ",", "}")
     // the 12-query total compares 1:1 against BASELINE.md's 12 names —
-    // contrast entries (the *_classic rows) are timed but excluded.
-    // EXCEPT in classic-only mode, where the twins ARE the comparison
-    // set (they substitute for the 5 layout shapes): excluding them
-    // there published a 7-row sum labeled 12q (the r16 sf96 record)
-    val nonClassic =
-      if (classicOnly) timedFinal
-      else timedFinal.filterNot(_._1.endsWith("_classic"))
+    // contrast entries (the *_classic rows) are timed but excluded
+    val nonClassic = timedFinal.filterNot(_._1.endsWith("_classic"))
     val total = nonClassic.map(_._2._1).sum
-    val headlineMetric =
-      if (classicOnly) "headline_total_12q_classic" else "headline_total_12q"
     // `clean_total` (r9 ADVICE): a crashed non-classic shape contributes
     // its (fast) failure time to `value`, which deflates the cross-round
     // scalar for any consumer that never reads `errors`; the clean total
@@ -609,12 +568,12 @@ object Bench {
     // registry_detail record — the r4 "must not masquerade" contract
     // applied to the comparison artifact itself
     // both passes' raw values ride beside the min (r16 verdict item 5);
-    // empty objects in single-pass modes (headline-only / classic)
+    // absent in headline-only (single-pass) runs
     val passFields =
       if (pass2.isEmpty) ""
       else s""""queries_pass1":${objT(timed)},"queries_pass2":${objT(pass2)},"""
     val headlineLine =
-      s"""{"metric":"$headlineMetric","value":$total,"clean_total":$cleanTotal,""" +
+      s"""{"metric":"headline_total_12q","value":$total,"clean_total":$cleanTotal,""" +
         s""""unit":"sec","queries":$qs,$passFields""" +
         s""""errors":${objErrs(timedFinal)},"data_sig":"$dataSig","sf":"$sfDir"}"""
     val fullJson =
@@ -633,18 +592,11 @@ object Bench {
       // a sweep can never clobber the sf0.1 record (r13 verdict item 4:
       // two r13 commits were spent restoring it after sweep runs)
       val base = new java.io.File(sfDir).getName
-      // classic-only runs are a different comparison set (layout-free
-      // twins substituted for the 5 layout shapes) — suffix them too, or
-      // a classic-only smoke run at sf0.1 overwrites the quiet full-mode
-      // record with totals that aren't comparable (burned in r16: the
-      // ee7aa75 smoke run shipped a 1.32 s "record" built from twins)
-      // ... and headline-only runs likewise (r17: an sf0.1 headline-only
+      // headline-only runs are suffixed too (r17: an sf0.1 headline-only
       // session — e.g. a low-core-count scaling check — clobbered the
-      // full record with a registry-less one, the same bug class)
+      // full record with a registry-less one)
       val mode =
-        if (classicOnly) ".classic"
-        else if (sys.env.contains("SPARK_GRAFT_HEADLINE_ONLY")) ".headline"
-        else ""
+        if (sys.env.contains("SPARK_GRAFT_HEADLINE_ONLY")) ".headline" else ""
       val mirror =
         if (base == "sf0.1") s"BENCH_LOCAL$mode.json"
         else s"BENCH_LOCAL.$base$mode.json"

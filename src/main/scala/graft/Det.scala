@@ -64,7 +64,10 @@ object Det {
   /** Order-independent mean: exact sum, then one double division —
     * identical IEEE operands on both engines → identical result.
     * Oracle twin: `CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE)
-    *              / CAST(COUNT(x) AS DOUBLE)`. */
+    *              / CAST(COUNT(x) AS DOUBLE)`.
+    * NaN and ±Inf raise under ANSI, as in the oracle; outside ANSI the sum
+    * skips them while `COUNT(x)` still counts them, here and in [[dstd]],
+    * as Spark's decimal form does. */
   def davg(c: Column): Column = dsum(c) / count(c).cast(DoubleType)
 
   /** [[davg]] over a window frame: both aggregates run over `w`. */
@@ -133,7 +136,7 @@ object Det {
   * 2³⁷ and the ulp-off products of such values. Everything else — NaN,
   * ±Inf, |x| ≥ 2³⁷ (which holds the `Cast`'s overflow, |x| ≥ 10¹⁴) and
   * values near a .00005 boundary such as 0.03125 — goes through the `Cast`
-  * itself. */
+  * itself, except that NaN and ±Inf raise under ANSI (see [[slow]]). */
 case class MoneyUnscaled(child: Expression, evalMode: EvalMode.Value = EvalMode.fromSQLConf(SQLConf.get))
     extends UnaryExpression {
 
@@ -147,11 +150,17 @@ case class MoneyUnscaled(child: Expression, evalMode: EvalMode.Value = EvalMode.
   @transient private lazy val cast =
     Cast(BoundReference(0, DoubleType, nullable = false), Det.Money, None, evalMode)
 
-  /** The `Cast`'s unscaled value, or null where the `Cast` gives null. */
-  def slow(x: Double): Any = cast.eval(InternalRow(x)) match {
-    case null => null
-    case d: Decimal => d.toUnscaledLong
-  }
+  /** The `Cast`'s unscaled value, or null where the `Cast` gives null.
+    * NaN and ±Inf are the exception under ANSI: the `Cast` gives null for
+    * them, but they raise its out-of-range error here, as they do in the
+    * oracle (DuckDB cannot cast inf to DECIMAL(18,4) either). */
+  def slow(x: Double): Any =
+    if (evalMode == EvalMode.ANSI && (x.isNaN || x.isInfinite))
+      throw Bridge.decimalOutOfRange(x.toString, Det.Money.precision, Det.Money.scale)
+    else cast.eval(InternalRow(x)) match {
+      case null => null
+      case d: Decimal => d.toUnscaledLong
+    }
 
   override protected def nullSafeEval(input: Any): Any = {
     val x = input.asInstanceOf[Double]

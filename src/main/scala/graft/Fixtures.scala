@@ -5,19 +5,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Planted-mutant FIXTURE corpora for the no-oracle / closure dedup rows,
-  * written once as parquet and cached by source size+mtime (the layouts
-  * convention) — so the registry rows are PURE OPERATORS over a parquet
+  * written once as parquet and cached by an MD5 of the source table's
+  * content — so the registry rows are PURE OPERATORS over a parquet
   * input: nothing synthetic is manufactured inside the timed query, and
   * the bench reports fixture builds as separate line items.
   *
-  * Path stability: the directory name carries the sf-dir BASENAME only
-  * (`/tmp/graft_fixture_<name>_<basename>`), because the clusters oracle
-  * SQL must reference the same files from DuckDB as a static string (the
-  * driver oracles at sf0.01). Staleness is handled INSIDE the directory:
-  * a `_graft_sig` sidecar records the source signature + fixture version,
-  * and any mismatch rebuilds in place. The Spark query always runs before
-  * the DuckDB compare (the driver dumps parquet first), so the oracle
-  * never reads a stale or missing fixture.
+  * Path stability: every fixture lives at
+  * `<layout root>/graft_fixture_<name>_<data dir basename>` (the root is
+  * [[layouts.LayoutUtil.artifactRoot]]), because the oracle SQL of the
+  * fixture rows must reference the same files from DuckDB as a static
+  * string ([[oracleScan]]) — so the driver's sf0.01 oracle needs the
+  * default root, /tmp. Staleness is handled INSIDE the directory: the
+  * [[layouts.LayoutUtil.buildOnce]] stamp records the source content
+  * signature + fixture version, and any mismatch rebuilds in place. The
+  * Spark query always runs before the DuckDB compare (the driver dumps
+  * parquet first), so the oracle never reads a stale or missing fixture.
   */
 object Fixtures {
 
@@ -60,27 +62,18 @@ object Fixtures {
     else fileMd5(f)
   }
 
-  /** Every fixture lives at `<PathPrefix><name>_<data dir basename>`. */
-  private val PathPrefix = "/tmp/graft_fixture_"
-
-  /** The DuckDB scan of fixture `name` as the sf0.01 oracles read it. */
+  /** The DuckDB scan of fixture `name` as the sf0.01 oracles read it,
+    * at the default layout root. */
   def oracleScan(name: String): String =
-    s"read_parquet('$PathPrefix${name}_sf0.01/*.parquet')"
+    s"read_parquet('/tmp/graft_fixture_${name}_sf0.01/*.parquet')"
 
   private def ensure(s: SparkSession, dir: String, name: String,
       srcTable: String = "documents")
       (build: => DataFrame): String = {
-    val src = new java.io.File(s"$dir/$srcTable.parquet")
-    val sig = s"v$FixtureVersion|${contentSig(src)}"
-    val path = s"$PathPrefix${name}_${new java.io.File(dir).getName}"
-    val sigFile = java.nio.file.Paths.get(s"$path/_graft_sig")
-    val fresh = new java.io.File(s"$path/_SUCCESS").exists &&
-      java.nio.file.Files.exists(sigFile) &&
-      new String(java.nio.file.Files.readAllBytes(sigFile)) == sig
-    if (!fresh) {
-      build.write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(sigFile, sig)
-    }
+    val path = s"${layouts.LayoutUtil.artifactRoot(s)}/graft_fixture_${name}_" +
+      new org.apache.hadoop.fs.Path(dir).getName
+    val sig = s"v$FixtureVersion|${contentSig(new java.io.File(s"$dir/$srcTable.parquet"))}"
+    layouts.LayoutUtil.buildOnce(s, sig, Seq(path))(build.write.parquet(path))
     path
   }
 

@@ -21,8 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and GC — goes through the [[LayoutFs]] Hadoop-FileSystem seam, and
   * the compact swap is RENAME-FREE (stage a versioned sibling, repoint
   * the catalog, GC the old directory), so the whole lifecycle runs
-  * unchanged on `file://` (the default root, `spark.graft.layout.root` =
-  * /tmp), HDFS, or an object store with no atomic-rename semantics.
+  * unchanged on `file://` (the default `spark.graft.layout.root`, see
+  * [[LayoutUtil.artifactRoot]]), HDFS, or an object store with no
+  * atomic-rename semantics.
   *
   * WRITER EXCLUSION (r10 verdict item 3): append, compact, AND
   * ensure()'s rebuild path take a heartbeat lease on the layout family
@@ -98,13 +99,6 @@ object Bucketed {
     validatedLocations.clear()
 
   private def hconf(s: SparkSession) = s.sparkContext.hadoopConfiguration
-
-  /** Root under which layout warehouses live (`file://`-style local path
-    * by default; point it at an HDFS/object-store URI to relocate the
-    * whole store — every maintenance op resolves its FileSystem from
-    * the path's scheme). */
-  private def layoutRoot(s: SparkSession): String =
-    s.conf.get("spark.graft.layout.root", "/tmp")
 
   /** One table to lay out: (short name, source rows, bucket/sort key).
     * `srcTables` names the source parquet tables under `dir` whose content
@@ -183,7 +177,7 @@ object Bucketed {
             listedBuckets.remove(qname)
           }
       }
-    val root = new Path(layoutRoot(s))
+    val root = new Path(LayoutUtil.artifactRoot(s))
     LayoutFs.list(root, c)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("graft_bucket_wh_"))
       .flatMap(st => LayoutFs.list(st.getPath, c))
@@ -1413,7 +1407,7 @@ object Bucketed {
       .mkString(";")
     val tag = LayoutUtil.cacheId(s"$dir|$sig|$buckets|$specSig")
     val db = s"graftbuckets_$tag"
-    val loc = s"${layoutRoot(s)}/graft_bucket_wh_$tag"
+    val loc = s"${LayoutUtil.artifactRoot(s)}/graft_bucket_wh_$tag"
     val locPath = new Path(loc)
     s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
     specs.map { sp =>

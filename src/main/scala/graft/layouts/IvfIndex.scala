@@ -53,10 +53,7 @@ object IvfIndex {
     val root = LayoutUtil.artifactRoot(s)
     val idxPath = s"$root/graft_ivf_idx_$id"
     val centsPath = s"$root/graft_ivf_cents_$id"
-    if (!LayoutFs.existsAt(s"$idxPath/_SUCCESS")
-        || !LayoutFs.existsAt(s"$centsPath/_SUCCESS")) {
-      LayoutFs.deleteDirAt(idxPath)
-      LayoutFs.deleteDirAt(centsPath)
+    LayoutUtil.buildOnce(s, id, Seq(idxPath, centsPath)) {
       val grouped = LayoutUtil.repsWithMembers(corpus)
       val reps = grouped.select(col("vec_id"), col("v"))
       val cents = Ivf.train(reps, k, iters, trainSampleCap)
@@ -66,10 +63,6 @@ object IvfIndex {
         .repartition(k, col("cent_id"))
         .write.partitionBy("cent_id").mode("overwrite").parquet(idxPath)
       cents.write.mode("overwrite").parquet(centsPath)
-      // a rebuild at an existing path (crashed half-build) must not be
-      // served from a pre-rebuild cached listing
-      LayoutUtil.evictServed(idxPath)
-      LayoutUtil.evictServed(centsPath)
     }
     (idxPath, centsPath)
   }
@@ -134,7 +127,8 @@ object IvfIndex {
     * unaffected — IvfIndexSpec pins files-shrink + rows-identical. */
   def compact(s: SparkSession, idxPath: String, compactedPath: String,
       parallelism: Int = 32): Unit = {
-    LayoutFs.deleteDirAt(compactedPath)
+    LayoutFs.deleteDir(new org.apache.hadoop.fs.Path(compactedPath),
+      s.sparkContext.hadoopConfiguration)
     s.read.parquet(idxPath)
       .repartition(parallelism, col("cent_id"))
       .write.partitionBy("cent_id").mode("overwrite").parquet(compactedPath)

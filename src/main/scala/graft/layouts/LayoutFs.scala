@@ -30,8 +30,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    Spark's own committers.
   *
   * Callers pass the session's `sparkContext.hadoopConfiguration` so
-  * scheme resolution sees the deployment's credentials/filesystems; the
-  * zero-argument default serves plain `file:` paths. */
+  * scheme resolution sees the deployment's credentials/filesystems. */
 object LayoutFs {
 
   def fs(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)
@@ -203,13 +202,4 @@ object LayoutFs {
 
   def mtime(p: Path, conf: Configuration): Long =
     fs(p, conf).getFileStatus(p).getModificationTime
-
-  // String-path conveniences against the default configuration — for
-  // the sidecar/guard checks of the artifact layouts (ZOrder, PqIndex,
-  // IvfIndex), whose paths are plain strings end to end. `file:` and
-  // any classpath-configured scheme resolve; session-specific schemes
-  // go through the Path+conf forms above.
-  private lazy val defaultConf = new Configuration()
-  def existsAt(path: String): Boolean = exists(new Path(path), defaultConf)
-  def deleteDirAt(path: String): Boolean = deleteDir(new Path(path), defaultConf)
 }

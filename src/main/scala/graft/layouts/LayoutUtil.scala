@@ -2,34 +2,55 @@ package graft.layouts
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared pieces of the persisted-layout builders ([[IvfIndex]],
-  * [[PqIndex]]) — one definition so a hardening fix reaches every
-  * layout. Public because the operators' cached-artifact helpers key
-  * their caches with [[dataSig]] too.
+/** Shared pieces of the persisted-layout builders — one definition so a
+  * hardening fix reaches every layout. Public because the operators'
+  * cached-artifact helpers key their caches with [[dataSig]] too.
   *
-  * Path handling goes through Hadoop FileSystem (r10 verdict item 2,
-  * the [[LayoutFs]] seam): a signature or size probe over an
-  * `hdfs://`/`s3a://` dataset resolves the right filesystem from the
-  * path's scheme, while bare local paths keep working unchanged. These
-  * helpers take no SparkSession, so they resolve against the default
-  * Hadoop configuration — fine for `file:` and any scheme whose
-  * settings live in the classpath config; callers on an exotic store
-  * wire their conf into the JVM default the usual Hadoop way. */
+  * Every artifact graft builds lives under [[artifactRoot]], and its
+  * stamps, markers and sidecars go through the [[LayoutFs]] seam with the
+  * session's Hadoop configuration; every build-once artifact (fixtures,
+  * ZOrder copies, IVF/PQ indexes, the stream-ingest staging) is complete
+  * by one rule, [[buildOnce]]. Only
+  * the source-data probes [[pathBytes]] and [[dataSig]] take no session:
+  * they read the caller's input dataset through the default Hadoop
+  * configuration, which resolves `file:` and any classpath-configured
+  * scheme. */
 object LayoutUtil {
 
   private lazy val conf = new Configuration()
 
-  /** Root under which ALL persisted layout artifacts live — the
-    * bucketed warehouses (Bucketed.ensure), the ZOrder copies, the
-    * IVF/PQ index roots, the stream-ingest staging. One knob
+  /** Root under which every artifact graft builds lives: the bucketed
+    * warehouses, ZOrder copies, IVF/PQ indexes, stream-ingest staging,
+    * fixtures and the source round-trip files. One knob
     * (`spark.graft.layout.root`, default /tmp) relocates the whole
     * store to HDFS/an object store; every consumer resolves its
     * FileSystem from the resulting path's scheme via [[LayoutFs]]. */
-  def artifactRoot(s: org.apache.spark.sql.SparkSession): String =
+  def artifactRoot(s: SparkSession): String =
     s.conf.get("spark.graft.layout.root", "/tmp")
+
+  /** Name of the completion stamp [[buildOnce]] writes into each part. */
+  val SigFile = "_graft_sig"
+
+  /** Build an artifact of one or more part directories exactly once per
+    * `key`. It is complete only when every part holds a [[SigFile]]
+    * stamp equal to `key`; the stamps are written after `build` returns,
+    * so a crash or a throw mid-build leaves no complete artifact.
+    * Otherwise every part is deleted, `build` writes them, the stamps go
+    * down, and each part's served listing is evicted (a rebuild at an
+    * existing path must not serve a pre-rebuild listing). */
+  def buildOnce(s: SparkSession, key: String, parts: Seq[String])(build: => Unit): Unit = {
+    val c = s.sparkContext.hadoopConfiguration
+    val stamps = parts.map(new Path(_, SigFile))
+    if (!stamps.forall(p => LayoutFs.exists(p, c) && LayoutFs.readString(p, c) == key)) {
+      parts.foreach(p => LayoutFs.deleteDir(new Path(p), c))
+      build
+      stamps.foreach(LayoutFs.writeString(_, key, c))
+      parts.foreach(evictServed)
+    }
+  }
 
   /** Collision-safe cache id for a layout key: MD5 as lowercase hex (a
     * 32-bit String.hashCode collision would silently serve a wrong
@@ -125,7 +146,7 @@ object LayoutUtil {
       new java.util.WeakHashMap[org.apache.spark.SparkContext,
         java.util.concurrent.ConcurrentHashMap[String, V]]())
 
-    private def inMemoryCatalog(s: org.apache.spark.sql.SparkSession): Boolean =
+    private def inMemoryCatalog(s: SparkSession): Boolean =
       s.sparkContext.getConf
         .get("spark.sql.catalogImplementation", "in-memory") == "in-memory"
 
@@ -137,7 +158,7 @@ object LayoutUtil {
       * `putIfAbsent`): inside `computeIfAbsent` a slow catalog call would
       * block every other key of its hash bin. Two racing misses may both
       * load; the first stored value wins and both return it. */
-    def getOrCompute(s: org.apache.spark.sql.SparkSession, key: String)(f: => V): V =
+    def getOrCompute(s: SparkSession, key: String)(f: => V): V =
       if (!inMemoryCatalog(s)) f
       else {
         val m = byContext.computeIfAbsent(s.sparkContext,
@@ -155,13 +176,13 @@ object LayoutUtil {
         }
       }
 
-    def forget(s: org.apache.spark.sql.SparkSession, key: String): Unit = {
+    def forget(s: SparkSession, key: String): Unit = {
       forgets.incrementAndGet()
       val m = byContext.get(s.sparkContext)
       if (m != null) { m.remove(key); () }
     }
 
-    def contains(s: org.apache.spark.sql.SparkSession, key: String): Boolean = {
+    def contains(s: SparkSession, key: String): Boolean = {
       val m = byContext.get(s.sparkContext)
       m != null && m.containsKey(key)
     }
@@ -186,7 +207,7 @@ object LayoutUtil {
     * under memory pressure BEFORE an OOM (a cleared entry just
     * re-lists), which also unpins the session key. */
   private val served = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+    new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, java.lang.ref.SoftReference[DataFrame]]]())
 
   /** Bumped by every [[evictServed]]; [[servedRelation]] re-checks it
@@ -220,7 +241,7 @@ object LayoutUtil {
     * whose files change in place — a stream-appended index root, a
     * rebuilt half-finished artifact — must be [[evictServed]] first or
     * consumers keep the stale listing. */
-  def servedRelation(s: org.apache.spark.sql.SparkSession,
+  def servedRelation(s: SparkSession,
       path: String): DataFrame = {
     val bySession = served.synchronized {
       var m = served.get(s)

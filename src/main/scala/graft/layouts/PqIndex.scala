@@ -42,10 +42,9 @@ import org.apache.spark.sql.types._
   * representatives with their member lists; top-k over reps covers the
   * true top-k (the vecGroups proof in LlmOps).
   *
-  * Build caching follows the hardened ZOrder convention: MD5 cache tag
-  * and ALL artifacts' _SUCCESS markers gate the rebuild (a crash between
-  * writes can never serve a half-built index — a cached pre-r16 layout
-  * lacks the floats/manifest markers and rebuilds whole). */
+  * Build caching is [[LayoutUtil.buildOnce]] over all five artifacts
+  * under an MD5 cache tag: a crash between writes leaves no stamp, so a
+  * half-built index is rebuilt whole, never served. */
 object PqIndex {
 
   /** The index's five persisted artifacts: `codes` (hot tier — m-byte
@@ -88,9 +87,7 @@ object PqIndex {
       books = s"$root/graft_pq_books_$id",
       floats = s"$root/graft_pq_floats_$id",
       manifest = s"$root/graft_pq_manifest_$id")
-    val complete = a.all.forall(p => LayoutFs.existsAt(s"$p/_SUCCESS"))
-    if (!complete) {
-      a.all.foreach(LayoutFs.deleteDirAt)
+    LayoutUtil.buildOnce(s, id, a.all) {
       // the group artifact materializes once: encode's argmin projection
       // must not fuse into the aggregate's output method (the Janino
       // 64 KB fusion note on llm_embed_pq)
@@ -144,9 +141,6 @@ object PqIndex {
         // (the Ivf.train persist lifecycle — without this, callers outside
         // the bench leak the blocks for the rest of the session)
       } finally grouped.unpersist(blocking = false)
-      // a rebuild at an existing path (crashed half-build) must not be
-      // served from a pre-rebuild cached listing
-      a.all.foreach(LayoutUtil.evictServed)
     }
     a
   }

@@ -27,11 +27,6 @@ import org.apache.spark.sql.types.LongType
   */
 object ZOrder {
 
-  /** One shared Hadoop configuration for the marker and sidecar probes
-    * (construction parses the default XML resources — not something to
-    * repeat twice per ensure call). */
-  private lazy val hconf = new org.apache.hadoop.conf.Configuration()
-
   /** Morton interleave of two non-negative keys, 31 bits per dimension
     * (fits a signed 64-bit result; replica-offset ids up to 2³¹ keep
     * their full ordering). Static bit expansion — stays inside
@@ -54,19 +49,17 @@ object ZOrder {
     * at build time ([[stats]]) — the lakehouse-metadata convention: a box
     * query derives its literal bounds from table statistics, not from a
     * full min/max scan of the data (measured: the bounds scan, not the
-    * pruned box read, dominated the row's cost at sf3/sf6). The rebuild
-    * guard requires BOTH the parquet _SUCCESS marker and the sidecar: the
-    * sidecar is written after the parquet commit, so a crash between the
-    * two must not leave a half-built layout that passes the guard. */
+    * pruned box read, dominated the row's cost at sf3/sf6). The sidecar
+    * is part of the build, so [[LayoutUtil.buildOnce]]'s stamp covers it:
+    * a crash between the parquet commit and the sidecar leaves no stamp
+    * and the next call rebuilds. */
   def ensure(s: SparkSession, dir: String, name: String, src: DataFrame,
              srcTable: String, xCol: String, yCol: String,
              rangePartitions: Int = 4, targetFiles: Int = 64): String = {
-    val conf = hconf
     val tag = LayoutUtil.cacheId(
       s"$dir|$name|${LayoutUtil.dataSig(s"$dir/$srcTable.parquet")}")
     val path = s"${LayoutUtil.artifactRoot(s)}/graft_zorder_${name}_$tag"
-    if (!LayoutFs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"), conf)
-        || !LayoutFs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_minmax"), conf)) {
+    LayoutUtil.buildOnce(s, tag, Seq(path)) {
       // File count is the pruning granularity AND the metadata bill: a
       // fixed records-per-file cap explodes into thousands of files on a
       // big table (measured at sf3: listing+footers of 9000 files cost
@@ -86,17 +79,18 @@ object ZOrder {
         org.apache.spark.sql.functions.min(col(yCol)), org.apache.spark.sql.functions.max(col(yCol)))
         .collect().head
       LayoutFs.writeString(new org.apache.hadoop.fs.Path(s"$path/_graft_minmax"),
-        s"${b.getLong(0)} ${b.getLong(1)} ${b.getLong(2)} ${b.getLong(3)}", conf)
+        s"${b.getLong(0)} ${b.getLong(1)} ${b.getLong(2)} ${b.getLong(3)}",
+        s.sparkContext.hadoopConfiguration)
     }
     path
   }
 
   /** (xMin, xMax, yMin, yMax) of a layout built by [[ensure]] — four model
     * parameters read from the build-time sidecar, no data scan. */
-  def stats(path: String): (Long, Long, Long, Long) = {
+  def stats(s: SparkSession, path: String): (Long, Long, Long, Long) = {
     val Array(a, b, c, d) = LayoutFs.readString(
       new org.apache.hadoop.fs.Path(s"$path/_graft_minmax"),
-      hconf).trim.split(" ").map(_.toLong)
+      s.sparkContext.hadoopConfiguration).trim.split(" ").map(_.toLong)
     (a, b, c, d)
   }
 }

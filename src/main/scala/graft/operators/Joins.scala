@@ -363,7 +363,7 @@ object Joins extends QueryGroup {
     * against the DuckDB oracle, which recomputes over the FULL table:
     * a lost, duplicated, or mis-bucketed delta row fails the hash gate.
     * The exactly-once stamp makes repeated calls (warmup + timed bench
-    * runs, repeated verify passes, fresh JVMs over the same /tmp
+    * runs, repeated verify passes, fresh JVMs over the same persisted
     * warehouse) idempotent. Multi-file buckets keep the bucket
     * CLUSTERING — consumers stay zero-exchange — and cede only the
     * reported per-bucket sort order until compaction

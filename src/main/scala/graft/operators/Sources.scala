@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * column-pointer fixed-width INPUT, macro-loop partitioned output,
   * PROC CONTENTS / DICTIONARY.COLUMNS introspection.
   *
-  * Round-trip queries write derived files under /tmp/graft_io/<op>/ (never
+  * Round-trip queries write derived files under <layout root>/graft_io/<op>/ (never
   * into the read-only testdata) and read them back through the real Spark
   * source; the oracle then checks the round-tripped values against the
   * original table, which is exactly what PROC EXPORT+IMPORT preserves.
@@ -27,7 +27,8 @@ import org.apache.spark.sql.types._
   */
 object Sources extends QueryGroup {
 
-  private def io(op: String) = s"/tmp/graft_io/$op"
+  private def io(s: SparkSession, op: String) =
+    s"${graft.layouts.LayoutUtil.artifactRoot(s)}/graft_io/$op"
 
   /** op 1 — LIBNAME + SET: full table scan, all columns. */
   private val scanParquet = GraftQuery(
@@ -43,7 +44,7 @@ object Sources extends QueryGroup {
   private val sourceCsvTyped = GraftQuery(
     "source_csv_typed",
     (s, dir) => {
-      val path = io("source_csv_typed")
+      val path = io(s, "source_csv_typed")
       Tables.orders(s, dir)
         .orderBy(col("o_orderkey").asc_nulls_first).limit(50)
         .select(
@@ -71,7 +72,7 @@ object Sources extends QueryGroup {
   private val sinkCsvRoundtrip = GraftQuery(
     "sink_csv_roundtrip",
     (s, dir) => {
-      val path = io("sink_csv_roundtrip")
+      val path = io(s, "sink_csv_roundtrip")
       Tables.nation(s, dir)
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
       val schema = StructType(Seq(
@@ -88,7 +89,7 @@ object Sources extends QueryGroup {
   private val sourceJsonl = GraftQuery(
     "source_jsonl",
     (s, dir) => {
-      val path = io("source_jsonl")
+      val path = io(s, "source_jsonl")
       val src = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"), col("props"))
       // parallel multi-part write (a coalesce(1) here serializes the whole
@@ -110,7 +111,7 @@ object Sources extends QueryGroup {
   private val sourceFixedWidth = GraftQuery(
     "source_fixed_width",
     (s, dir) => {
-      val path = io("source_fixed_width")
+      val path = io(s, "source_fixed_width")
       Tables.nation(s, dir)
         .select(concat(rpad(col("n_name"), 20, " "),
           lpad(col("n_nationkey").cast(StringType), 4, "0")).as("value"))
@@ -129,7 +130,7 @@ object Sources extends QueryGroup {
   private val sinkPartitionedParquet = GraftQuery(
     "sink_partitioned_parquet",
     (s, dir) => {
-      val path = io("sink_partitioned_parquet")
+      val path = io(s, "sink_partitioned_parquet")
       Tables.customer(s, dir)
         .write.mode("overwrite").partitionBy("c_mktsegment").parquet(path)
       s.read.parquet(path)
@@ -192,7 +193,7 @@ object Sources extends QueryGroup {
       // LITERALS — a filter on non-literal bounds cannot be pushed into
       // parquet min/max pruning, and re-deriving them with a min/max scan
       // per query cost more than the pruned box read itself.
-      val (pmin, pmax, smin, smax) = graft.layouts.ZOrder.stats(path)
+      val (pmin, pmax, smin, smax) = graft.layouts.ZOrder.stats(s, path)
       val pl = pmin + (pmax - pmin) / 2; val ph = pl + (pmax - pmin) / 10
       val sl = smin + (smax - smin) / 2; val sh = sl + (smax - smin) / 5
       s.read.parquet(path)

@@ -34,8 +34,9 @@ import org.apache.spark.sql.streaming.Trigger
   * CHECKPOINT is wiped first — its lineage may describe a previous
   * layout incarnation, and the content-addressed tags make the full
   * reprocess idempotent. The source dump is staged exactly once
-  * (guarded by its _SUCCESS marker): re-staging would mint fresh UUID
-  * part names and break file identity under a live checkpoint. */
+  * ([[LayoutUtil.buildOnce]]): re-staging would mint fresh UUID part
+  * names and break file identity under a live checkpoint, so a restage
+  * also drops the layout. */
 object StreamIngest {
 
   private def tagOf(fileName: String): String =
@@ -52,14 +53,6 @@ object StreamIngest {
     val events = Tables.events(s, dir)
     val isDelta = pmod(xxhash64(col("event_id")), lit(4)) === 0
 
-    val t = Bucketed.ensure(s, dir, Seq(
-      // spec name carries the TAG-SCHEME version: a scheme change must
-      // rotate the layout (old stamps would otherwise mask or double new
-      // appends), exactly like the src/ckpt signature suffix below
-      Bucketed.Spec("events_si2", events.filter(!isDelta), "user_id",
-        srcTables = Seq("events"), sortCols = Seq("user_id", "ts", "event_id"))),
-      buckets = Bucketed.defaultBuckets(dir, "events")).head
-
     // source dump + checkpoint keyed by the raw table's content
     // signature: regenerated testdata rotates them with the layout
     val sig = LayoutUtil.cacheId(
@@ -67,10 +60,22 @@ object StreamIngest {
     val root = s"${LayoutUtil.artifactRoot(s)}/graft_stream_ingest_$sig"
     val srcDir = s"$root/src"
 
-    // stage the "arriving crawl files" EXACTLY once (3 parquet files)
-    if (!LayoutFs.exists(new Path(s"$srcDir/_SUCCESS"), conf))
-      events.filter(isDelta).repartition(3)
-        .write.mode("overwrite").parquet(srcDir)
+    // stage the "arriving crawl files" EXACTLY once (3 parquet files). A
+    // fresh dump mints fresh file names, so appends a layout holds from
+    // an earlier dump pair with no staged file: drop it with the dump.
+    LayoutUtil.buildOnce(s, sig, Seq(srcDir)) {
+      Bucketed.invalidate(s, "events_si2")
+      events.filter(isDelta).repartition(3).write.parquet(srcDir)
+    }
+
+    val t = Bucketed.ensure(s, dir, Seq(
+      // spec name carries the TAG-SCHEME version: a scheme change must
+      // rotate the layout (old stamps would otherwise mask or double new
+      // appends), exactly like the src/ckpt signature suffix above
+      Bucketed.Spec("events_si2", events.filter(!isDelta), "user_id",
+        srcTables = Seq("events"), sortCols = Seq("user_id", "ts", "event_id"))),
+      buckets = Bucketed.defaultBuckets(dir, "events")).head
+
     val srcFiles = LayoutFs.listNames(new Path(srcDir), conf)
       .filter(_.endsWith(".parquet")).sorted
 

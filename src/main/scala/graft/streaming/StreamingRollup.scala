@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.etl.Rollup
+import graft.layouts.LayoutFs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming maintenance of a mergeable rollup (etl.Rollup) — the
@@ -20,14 +22,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * |groups| rollup rows (never historical raw data — the etl.Rollup
   * argument); state is one small parquet dir per retained version, and
   * [[mergeInto]] prunes versions older than the replay horizon
-  * (batchId − 1) after a successful write.
+  * (batchId − 1) after a successful write. Listing and pruning go
+  * through [[LayoutFs]] with the session's Hadoop configuration, so
+  * `stateDir` may live on any Hadoop filesystem.
   */
 object StreamingRollup {
 
-  private def versions(stateDir: String): Seq[Long] =
-    Option(new java.io.File(stateDir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v") && new java.io.File(f, "_SUCCESS").exists)
-      .map(_.getName.drop(1).toLong).toSeq.sorted
+  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    LayoutFs.list(new Path(stateDir), conf).map(_.getPath)
+      .filter(p => p.getName.startsWith("v") && LayoutFs.exists(new Path(p, "_SUCCESS"), conf))
+      .map(_.getName.drop(1).toLong).sorted
+  }
 
   /** The `foreachBatch` sink: merge this batch into the latest rollup
     * version BELOW this batch id (so a replayed batch re-derives its own
@@ -36,18 +42,18 @@ object StreamingRollup {
                (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val part = Rollup.partial(batch, keys, measures)
-    val merged = versions(stateDir).filter(_ < batchId).lastOption match {
+    val merged = versions(spark, stateDir).filter(_ < batchId).lastOption match {
       case Some(v) =>
         Rollup.merge(Seq(spark.read.parquet(s"$stateDir/v$v"), part), keys, measures)
       case None => part
     }
     merged.coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    versions(stateDir).filter(_ < batchId - 1).foreach { v =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$stateDir/v$v"))
+    versions(spark, stateDir).filter(_ < batchId - 1).foreach { v =>
+      LayoutFs.deleteDir(new Path(s"$stateDir/v$v"), spark.sparkContext.hadoopConfiguration)
     }
   }
 
   /** The rollup as of the latest committed version. */
   def current(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/v${versions(stateDir).last}")
+    spark.read.parquet(s"$stateDir/v${versions(spark, stateDir).last}")
 }

@@ -17,7 +17,7 @@ import graft.{GraftSession, SparkEntry}
 object RegistryBench {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf3")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -30,4 +30,12 @@ object Bridge {
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** The error an ANSI `Cast` raises when a value does not fit
+    * DECIMAL(precision, scale) (`SparkArithmeticException` is
+    * private[spark]): how `graft.MoneyUnscaled` raises it for NaN and ±Inf. */
+  def decimalOutOfRange(value: String, precision: Int, scale: Int): ArithmeticException =
+    new org.apache.spark.SparkArithmeticException("NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION",
+      Map("value" -> value, "precision" -> precision.toString, "scale" -> scale.toString,
+        "config" -> "\"spark.sql.ansi.enabled\""), Array.empty[org.apache.spark.QueryContext])
 }

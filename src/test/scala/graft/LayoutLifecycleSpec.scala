@@ -365,6 +365,72 @@ class LayoutLifecycleSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("every artifact graft writes lives under spark.graft.layout.root, and " +
+      "buildOnce rebuilds exactly when a part's stamp is missing or differs") {
+    import graft.layouts.LayoutUtil
+    val customRoot = Files.createTempDirectory("graft_store_root").toString
+    // a data dir of its own, so its fixture names are unique to this case
+    val data = Files.createTempDirectory("graft_store_data")
+    Seq("documents", "lineitem", "embeddings", "nation").foreach { t =>
+      org.apache.commons.io.FileUtils.copyToDirectory(new java.io.File(s"$dir/$t.parquet"), data.toFile)
+    }
+    val d = data.toString
+    def tmpEntry(name: String) = new java.io.File("/tmp", name)
+    val ioName = "graft_io/sink_csv_roundtrip"
+    val ioBefore = tmpEntry(ioName).lastModified() // 0 when absent
+    spark.conf.set("spark.graft.layout.root", customRoot)
+    try {
+      val (idx, cents) = operators.LlmOps.persistedIvfIndex(spark, d)
+      val built = Seq(Fixtures.neardupCorpus(spark, d),
+        operators.Sources.lineitemZPath(spark, d), idx, cents)
+      SparkEntry.queries("sink_csv_roundtrip")(spark, d).collect()
+      (built :+ s"$customRoot/$ioName").foreach { p =>
+        assert(p.startsWith(customRoot + "/") && new java.io.File(p).isDirectory,
+          s"$p is not a directory under $customRoot")
+      }
+      built.foreach { p =>
+        val name = new java.io.File(p).getName
+        assert(!tmpEntry(name).exists, s"$name was also written under /tmp")
+        assert(new java.io.File(p, LayoutUtil.SigFile).isFile, s"$p has no stamp")
+      }
+      assert(tmpEntry(ioName).lastModified() == ioBefore, s"$ioName was written under /tmp")
+
+      // a complete artifact is not rebuilt
+      val marks = built.map(p => new java.io.File(p, "_SUCCESS").lastModified())
+      Fixtures.neardupCorpus(spark, d)
+      operators.Sources.lineitemZPath(spark, d)
+      operators.LlmOps.persistedIvfIndex(spark, d)
+      assert(built.map(p => new java.io.File(p, "_SUCCESS").lastModified()) == marks)
+
+      // the rule itself: stamps go down only after build returns
+      val parts = Seq(s"$customRoot/bo_a", s"$customRoot/bo_b")
+      def stamped(p: String) = new java.io.File(p, LayoutUtil.SigFile).exists
+      var builds = 0
+      def build(): Unit = { builds += 1; parts.foreach(p => spark.range(3).write.parquet(p)) }
+      intercept[IllegalStateException] {
+        LayoutUtil.buildOnce(spark, "k1", parts) {
+          spark.range(3).write.parquet(parts.head)
+          throw new IllegalStateException("crash after the first part")
+        }
+      }
+      assert(new java.io.File(parts.head, "_SUCCESS").exists && !parts.exists(stamped))
+      LayoutUtil.buildOnce(spark, "k1", parts)(build()) // the torn part is deleted first
+      assert(builds == 1 && parts.forall(stamped))
+      val mark = new java.io.File(parts.head, "_SUCCESS").lastModified()
+      LayoutUtil.buildOnce(spark, "k1", parts)(build())
+      assert(builds == 1 && new java.io.File(parts.head, "_SUCCESS").lastModified() == mark)
+      LayoutUtil.buildOnce(spark, "k2", parts)(build())
+      assert(builds == 2, "a changed key did not rebuild")
+      new java.io.File(parts.last, LayoutUtil.SigFile).delete()
+      LayoutUtil.buildOnce(spark, "k2", parts)(build())
+      assert(builds == 3, "a part without its stamp did not rebuild")
+    } finally {
+      spark.conf.unset("spark.graft.layout.root")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(customRoot))
+      org.apache.commons.io.FileUtils.deleteQuietly(data.toFile)
+    }
+  }
+
   test("spec names ending in the reserved __v<N> compact suffix are refused") {
     val orders = Tables.orders(spark, dir)
     val boom = intercept[IllegalArgumentException] {
