@@ -62,7 +62,6 @@ object GraftExtensions {
     ("hash_embed", 2, e => HashEmbed(e(0), e(1))),
     ("cdc_chunks", 1, e => CdcChunks(e(0))),
     ("band_buckets", 4, e => BandBuckets(e(0), e(1), e(2), e(3))),
-    ("nearest_centroid", 3, e => NearestCentroid(e(0), e(1), e(2))),
     ("nearest_centroids", 4, e => NearestCentroids(e(0), e(1), e(2), e(3))),
     ("block_jaccard_edges", 2, e => BlockJaccardEdges(e(0), e(1))),
     ("adc_dot", 3, e => AdcDot(e(0), e(1), e(2))),

@@ -1,8 +1,7 @@
 package graft.etl
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, NearestCentroids}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -19,85 +18,37 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object Ivf {
 
-  /** Past this k the literal-argmax expression stops being the right
-    * shape (codegen unit size, task-binary bloat) and [[assign]] switches
-    * to the broadcast-join form. */
+  /** Past this k the literal-matrix expression stops being the right
+    * shape (codegen unit size, task-binary bloat) and [[assignTop]]
+    * switches to the broadcast-aggregate form [[assignTopAgg]]. */
   private[graft] val LiteralArgmaxMaxK = 4096
 
-  /** Nearest-centroid assignment (ties broken by cent_id): max rounded
-    * cosine first, then smallest cent_id — one total order, two physical
-    * forms switched on k:
-    *
-    *  - k ≤ 4096 — MAP-SIDE ONLY: centroids are k×dims model parameters,
-    *    so they ride into the row expression as ONE flat-matrix literal
-    *    and the argmax is the native `nearest_centroid` expression
-    *    (functions.NearestCentroid — the per-centroid
-    *    struct(round(cosine_fast), −cid)/array_max composition this
-    *    replaces fell off a codegen/JIT cliff between k = 16 and k = 50:
-    *    0.39 s → 25.5 s for the same 122 k-vector scan). Zero shuffle,
-    *    zero broadcast-join: assignment is a pure scan, and the earlier
-    *    crossJoin+window shape (k·N rows through a per-vector window)
-    *    stays out of every Lloyd iteration and index build.
-    *  - k > 4096 — BROADCAST JOIN ([[assignJoin]]): past the cap the
-    *    per-task literal matrix stops being the right shape, so the
-    *    centroids ship once as a broadcast relation instead. One shuffle
-    *    of N id+v rows (the map-side partial argmax collapses the
-    *    k-fan-out before it), the price of unbounded k.
-    *
-    * Both branches produce identical assignments (the same rounded-cosine
-    * total order — VectorSpec pins the equivalence and exercises the join
-    * branch at k > 4096). */
-  def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    GraftFunctions.register(vecs.sparkSession)
-    val cl = cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-    if (cl.length <= LiteralArgmaxMaxK) {
-      val flat = cl.flatMap(_._2).toSeq
-      val cids = cl.map(_._1).toSeq
-      vecs.select(col("vec_id"),
-        call_function("nearest_centroid", col("v"), typedlit(flat), typedlit(cids))
-          .as("cent_id"),
-        col("v"))
-    } else {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      assignJoin(vecs, cl.toSeq.toDF("cent_id", "cv"))
-    }
-  }
+  /** Nearest-centroid assignment (max rounded cosine, ties → lowest
+    * cent_id): [[assignTop]] at m = 1, its one cell as `cent_id`. Output
+    * `(vec_id, cent_id, v)`. Map-side only up to k = 4096 — assignment
+    * is a pure scan, and the earlier crossJoin+window shape (k·N rows
+    * through a per-vector window) stays out of every Lloyd iteration and
+    * index build. `cells` is never empty, so the coalesce never fires:
+    * it makes `cent_id` non-nullable, and a join on a nullable `cent_id`
+    * would make the optimizer infer an `isnotnull` filter that runs the
+    * kernel a second time per row. */
+  def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
+    assignTop(vecs, cents, 1)
+      .select(col("vec_id"), coalesce(col("cells").getItem(0), lit(0L)).as("cent_id"), col("v"))
 
-  /** The k > 4096 assignment form: centroids as a BROADCAST relation, the
-    * per-vector argmax as a max-of-struct aggregation. The crossJoin fans
-    * each vector out to k scored rows, but the partial (map-side)
-    * aggregation collapses them back to one row per vec_id before the
-    * exchange — the only shuffle is N singleton groups. `first(v)` inside
-    * the group is deterministic: every fanned-out row of a vec_id carries
-    * the SAME v (vec_id is the vecs key), so any representative is the
-    * value. Package-visible so VectorSpec can pin branch equivalence at
-    * small k. */
-  private[graft] def assignJoin(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    GraftFunctions.register(vecs.sparkSession)
-    vecs.select(col("vec_id"), col("v"))
-      .crossJoin(broadcast(cents))
-      .groupBy(col("vec_id"))
-      .agg(
-        max(struct(
-          round(call_function("cosine_fast", col("v"), col("cv")), 6).as("c"),
-          (-col("cent_id")).as("negid"))).as("best"),
-        first(col("v")).as("v"))
-      .select(col("vec_id"), (-col("best.negid")).as("cent_id"), col("v"))
-  }
-
-  /** TOP-M cell assignment (multi-assignment / "spilling"): each vector
-    * lands in its `m` nearest cells under the same rounded-cosine total
-    * order as [[assign]] (row 1 of the result per vec_id IS the assign
-    * answer). The near-dup fallback's recall armor: a tight pair split
+  /** TOP-M cell assignment — the vector layer's one rounded-cosine
+    * centroid ranking: each vector's `m` nearest cells by (rounded
+    * cosine desc, cent_id asc). [[assign]] is m = 1; the kNN/ANN query
+    * probes are m = 4 over the query rows; m > 1 over the corpus is the
+    * near-dup fallback's recall armor ("spilling"): a tight pair split
     * by a single nearest-centroid boundary still shares a cell unless
     * BOTH rankings diverge in their top m — for cosine ≥ 0.9 pairs the
     * two ranking profiles differ by at most the pair's angular gap, so
     * disjoint top-2 sets need a three-way near-tie resolved oppositely
     * (measured on the sf6s spread corpus: 114 of 1200 planted pairs
-    * split at m = 1, zero at m = 2).
+    * split at m = 1, zero at m = 2). An `m` above k yields all k cells.
     *
-    * Two physical forms, switched on k like [[assign]]:
+    * Two physical forms, switched on k:
     *
     *  - k ≤ 4096 — MAP-SIDE ONLY: the native `nearest_centroids`
     *    expression (functions.NearestCentroids) runs the k×dims top-m
@@ -105,15 +56,16 @@ object Ivf {
     *    literal. Zero shuffle. The aggregate form below at the SAME k
     *    measured 168 s for 121 k vectors × k = 349 (N×k struct rows
     *    through collect_list) where this is a pure scan.
-    *  - k > 4096 — [[assignTopAgg]]: centroids broadcast, k-fan-out
-    *    collapsed by a map-side partial collect_list; sort_array gives
-    *    the deterministic total order (no window, no per-key sort
-    *    shuffle).
+    *  - k > 4096 — [[assignTopAgg]]: past the cap the per-task literal
+    *    matrix stops being the right shape, so the centroids ship once
+    *    as a broadcast relation and the k-fan-out collapses in a
+    *    map-side partial collect_list; sort_array gives the
+    *    deterministic total order (no window, no per-key sort shuffle).
     *
-    * Both return ONE row per vec_id with `cells: array<bigint>`
-    * (nearest first — row 1 ≡ [[assign]], VectorSpec-pinned) so callers
-    * can attach per-vector derived columns (e.g. band buckets) ONCE
-    * before fanning out the ×m cell rows. */
+    * Both return ONE row per vec_id with `cells: array<bigint>` (nearest
+    * first — VectorSpec pins the two forms equal, at m = 1 and m = 3)
+    * so callers can attach per-vector derived columns (e.g. band
+    * buckets) ONCE before fanning out the ×m cell rows. */
   def assignTop(vecs: DataFrame, cents: DataFrame, m: Int): DataFrame = {
     GraftFunctions.register(vecs.sparkSession)
     val cl = cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
@@ -121,8 +73,8 @@ object Ivf {
       val flat = cl.flatMap(_._2).toSeq
       val cids = cl.map(_._1).toSeq
       vecs.select(col("vec_id"), col("v"),
-        call_function("nearest_centroids",
-          col("v"), typedlit(flat), typedlit(cids), lit(m)).as("cells"))
+        call_function("nearest_centroids", col("v"), typedlit(flat), typedlit(cids),
+          lit(math.min(m, cl.length))).as("cells"))
     } else {
       val spark = vecs.sparkSession
       import spark.implicits._
@@ -131,15 +83,18 @@ object Ivf {
   }
 
   /** The k > 4096 top-m assignment form (and the equivalence reference
-    * VectorSpec pins the native kernel against). Ordering is the SAME
-    * struct shape [[assignJoin]] maximizes — (rounded cosine, −cent_id)
-    * sorted DESCENDING — rather than a negated-cosine ascending sort:
-    * negation flips where NaN lands (Spark orders NaN above every
+    * VectorSpec pins the native kernel against). The crossJoin fans each
+    * vector out to k scored rows, but the partial (map-side) aggregation
+    * collapses them back to one row per vec_id before the exchange — the
+    * only shuffle is N singleton groups. `first(v)` inside the group is
+    * deterministic: every fanned-out row of a vec_id carries the SAME v
+    * (vec_id is the vecs key). Ordering is the struct (rounded cosine,
+    * −cent_id) sorted DESCENDING rather than a negated-cosine ascending
+    * sort: negation flips where NaN lands (Spark orders NaN above every
     * double, so −NaN ascending would rank a NaN cosine WORST while the
-    * native kernel and [[assign]]/[[assignJoin]] rank it best). With the
-    * descending sort a zero-norm vector or dead centroid (cosine NaN)
-    * places identically in all three physical forms; VectorSpec pins the
-    * equivalence on a zero-norm fixture. */
+    * native kernel ranks it best). With the descending sort a zero-norm
+    * vector or dead centroid (cosine NaN) places identically in both
+    * forms; VectorSpec pins the equivalence on a zero-norm fixture. */
   private[graft] def assignTopAgg(vecs: DataFrame, cents: DataFrame, m: Int): DataFrame = {
     GraftFunctions.register(vecs.sparkSession)
     vecs.select(col("vec_id"), col("v"))
@@ -167,8 +122,8 @@ object Ivf {
     * train/assign term at N^(4/3) — sub-dominant to the linear scan
     * costs at every measured scale, while cluster count still grows with
     * the corpus as the paper's configs do. Floor 16 keeps small-corpus
-    * geometry; the 4096 cap now only marks where [[assign]] switches to
-    * its broadcast-join branch (N^(1/3) reaches it at ~7e10 vectors). */
+    * geometry; the 4096 cap now only marks where [[assignTop]] switches
+    * to its aggregate fallback (N^(1/3) reaches it at ~7e10 vectors). */
   def adaptiveK(n: Long): Int =
     math.min(4096, math.max(16, math.ceil(math.cbrt(n.toDouble)).toInt))
 
@@ -227,7 +182,7 @@ object Ivf {
       // and Lloyd runs driver-side — one job instead of one
       // two-shuffle job PER ITERATION. Centroids are bit-identical by
       // construction: assignment goes through the SAME compiled kernel
-      // (functions.NearestCentroid.nearestId) and the per-dimension
+      // (functions.NearestCentroids.topIds) and the per-dimension
       // means through Spark's own Decimal(28,14) cast + exact decimal
       // sums (order-free) — VectorSpec pins local == distributed on a
       // real corpus. Any null/ragged vector row falls back to the
@@ -295,9 +250,9 @@ object Ivf {
 
   /** The driver-local Lloyd loop over a collected (vec_id, v) matrix —
     * the distributed iteration's arithmetic, step for step: init = the k
-    * lowest vec_ids; assignment = the nearest_centroid kernel itself
-    * (same object code — graft.functions.NearestCentroid.nearestId over
-    * the cent_id-ascending flat matrix); means = Spark Decimal(28,14)
+    * lowest vec_ids; assignment = the nearest_centroids kernel itself at
+    * m = 1 (same object code — graft.functions.NearestCentroids.topIds
+    * over the cent_id-ascending flat matrix); means = Spark Decimal(28,14)
     * cast of each element (HALF_UP, the Cast rule), EXACT decimal sums
     * (addition of equal-scale decimals is associative, so driver order
     * cannot matter), cast to double, divided by the cell count — and
@@ -318,12 +273,12 @@ object Ivf {
       val order = cents.sortBy(_._1)
       val cids = order.map(_._1)
       val flat = order.flatMap(_._2)
-      val nb = graft.functions.NearestCentroid.normSqrts(flat, cids.length)
+      val nb = NearestCentroids.normSqrts(flat, cids.length)
       val dims = flat.length / cids.length
       val sums = scala.collection.mutable.LinkedHashMap
         .empty[Long, (Array[java.math.BigDecimal], Array[Long])]
       rows.foreach { case (_, v) =>
-        val cid = graft.functions.NearestCentroid.nearestId(v, flat, cids, nb)
+        val cid = NearestCentroids.topIds(v, flat, cids, nb, 1)(0)
         val (acc, cnt) = sums.getOrElseUpdate(cid,
           (Array.fill(dims)(java.math.BigDecimal.ZERO), Array(0L)))
         cnt(0) += 1

@@ -46,13 +46,13 @@ object Pq {
     * model as two flat literals. This is the ONLY formulation that
     * reaches PQ's design point — the m×k struct composition below
     * OOMs Janino from ~12k (subspace, codeword) pairs (768 dims,
-    * m=48, k=256 — measured r14); it is kept for [[nearestCode]]'s
-    * single-subspace use and as PqSpec's independent parity witness. */
+    * m=48, k=256 — measured r14); it is kept as PqSpec's independent
+    * parity witness. */
   private[graft] def encodeCol(books: Seq[Codebook]): Column = {
     val k = books.head.size
     require(books.forall(_.size == k), "pq_encode: ragged codebooks")
     // the native node returns the POSITIONAL index in cid-sorted order as
-    // the code, while scoredStruct/nearestCode return the stored cid —
+    // the code, while scoredStruct returns the stored cid —
     // equivalent ONLY when cids are exactly 0..k-1 (true for train()'s
     // books). Pin the assumption so a non-contiguous codebook fails loudly
     // instead of silently diverging between the two paths (r14 ADVICE).
@@ -78,10 +78,6 @@ object Pq {
         dot.as("dot"),
         lit(2.0 * halfcc).as("cc"))
     }: _*))
-
-  /** Nearest code (L2, ties → lowest code id) for a subvector attribute. */
-  def nearestCode(sv: Column, book: Codebook): Column =
-    scoredStruct(sv, book).getField("cid")
 
   /** Train the m codebooks over a (vec_id, v: array<double>) relation.
     * dims must divide evenly into m subspaces. Training is EAGER (each

@@ -23,8 +23,9 @@ import org.apache.spark.sql.DataFrame
   * Reliable checkpoint files are removed only when their DataFrame is
   * garbage-collected AND the session sets
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, as
-  * `GraftSession.builder` does; a session built any other way must set
-  * it too, or every stage of every run stays in the checkpoint dir.
+  * `GraftSession.builder` does; without it every stage of every run
+  * stays in the checkpoint dir, so [[stage]] refuses a checkpoint dir
+  * on a session that lacks the flag.
   *
   * NEGATIVE RESULT (r18, recorded so it is not retried): a size-ESTIMATE
   * gate (`optimizedPlan.stats.sizeInBytes` under a threshold →
@@ -38,13 +39,21 @@ import org.apache.spark.sql.DataFrame
   * separate MBs from TBs; the configured-dir signal does. */
 object StageCheckpoint {
 
+  private val CleanCheckpoints = "spark.cleaner.referenceTracking.cleanCheckpoints"
+
   /** Materialize `df` as a consumed-many-times stage under the policy
     * above. `eager = false` defers materialization to the first action
     * that reads it (examples.StageRunner's stages: one action over the
     * last stage fills every checkpoint in lineage order). */
-  def stage(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
+  def stage(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    if (sc.getCheckpointDir.isDefined) {
+      if (!sc.getConf.getBoolean(CleanCheckpoints, defaultValue = false))
+        throw new IllegalStateException(s"a checkpoint dir is set but $CleanCheckpoints " +
+          "is not true: reliable stage checkpoints would never be removed")
+      df.checkpoint(eager)
+    } else df.localCheckpoint(eager)
+  }
 
   /** Chain form: `df.stageCheckpoint()` mirrors `df.localCheckpoint()`
     * at the call sites. */

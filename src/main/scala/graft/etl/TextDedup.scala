@@ -58,8 +58,8 @@ object TextDedup {
       .select(col("rep_id").as("id"), col("shingles"))
       .stageCheckpoint()
     val banded = sh
-      // single-pass native signature (see MinHashSignature scaladoc: the
-      // higher-order TextOps.minhashSignature re-hashes per seed, 64x cost)
+      // single-pass native signature (see MinHashSignature scaladoc: a
+      // higher-order per-seed composition re-hashes per seed, 64x cost)
       .withColumn("sig", expr(s"minhash_sig(shingles, $nHashes)"))
       .select(col("id"), posexplode(TextOps.lshBands(col("sig"), nBands, rowsPerBand)))
       .toDF("id", "band_idx", "band_hash")

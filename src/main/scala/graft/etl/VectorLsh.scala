@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.functions.GraftFunctions
 import graft.etl.StageCheckpoint.StageCheckpointOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Random-hyperplane LSH for embedding vectors (the second ANN scale path
@@ -74,27 +74,18 @@ object VectorLsh {
   def hyperplanes(nBits: Int, dims: Int): Seq[Seq[Double]] =
     (0 until nBits).map(j => (0 until dims).map(i => component(j, i)))
 
-  /** One hyperplane as a SINGLE array literal: `array(x1 D, x2 D, …)`
-    * expands to 64 scalar literal nodes PER PLANE in generated code —
-    * 32 planes of those blew the whole-stage codegen unit past 8 s of
-    * compile time; a typedlit collapses each plane to one reference. */
-  private def planeLit(h: Seq[Double]): Column = typedlit(h)
-
-  /** sign(dot) ≡ sign(cosine) (norms positive), and the norm-free dot_fast
-    * kernel does 1/3 the flops — at adaptive band geometry (hundreds of
-    * projections per vector) that is the dominant map-side cost. Zero
-    * vectors land in bit 0 either way (dot = 0; cosine = NaN, NaN > 0 is
-    * false), so buckets are bit-identical to the cosine formulation. */
-  private def signBit(v: Column, h: Seq[Double], weight: Int): Column =
-    when(call_function("dot_fast", v, planeLit(h)) > 0, lit(weight)).otherwise(lit(0))
-
-  /** Adds an integer `bucket` column from the sign pattern of `v`. */
+  /** Adds an integer `bucket` column from the sign pattern of `v`: the
+    * native `band_buckets` kernel with one band of `nBits` planes (bit j
+    * = dot(v, h_j) > 0; null and length-mismatched vectors bucket to 0).
+    * NativeExprSpec pins it bit-identical to the per-bit
+    * `when(dot_fast(v, h_j) > 0, 1 << j)` sum. The one-band array is
+    * never empty, so the coalesce never fires: it makes `bucket`
+    * non-nullable, and a join on a nullable bucket would make the
+    * optimizer infer an `isnotnull` filter that runs the kernel twice. */
   def withBucket(vecs: DataFrame, nBits: Int, dims: Int): DataFrame = {
     GraftFunctions.register(vecs.sparkSession)
-    val planes = hyperplanes(nBits, dims)
-    val bits: Seq[Column] =
-      planes.zipWithIndex.map { case (h, j) => signBit(col("v"), h, 1 << j) }
-    vecs.withColumn("bucket", bits.reduce(_ + _))
+    vecs.withColumn("bucket", coalesce(call_function("band_buckets", col("v"),
+      typedlit(hyperplanes(nBits, dims).flatten), lit(1), lit(nBits)).getItem(0), lit(0)))
   }
 
   /** Candidates within Hamming distance `maxHamming` of the query bucket. */

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** Codegen'd ADC (asymmetric distance computation) lookup-sum for PQ
   * codes: `adc_dot(codes, table, k)` = Σ_j table[j·k + codes[j]] over
   * the m = table.length / k subspaces — the inner loop of every
-  * PQ-coded ANN probe (LlmOps.adcCosCol), where `table` is the
+  * PQ-coded ANN probe (Pq.adcCosCol), where `table` is the
   * driver-precomputed flattened m×k array of ⟨query_j, centroid_jc⟩
   * dots and `codes` a row's PQ code array.
   *

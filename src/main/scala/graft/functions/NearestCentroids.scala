@@ -6,28 +6,41 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
-/** TOP-M nearest centroid ids by rounded cosine — the multi-probe twin
-  * of [[NearestCentroid]] (same flat-matrix literal, same total order:
-  * rounded cosine desc, cent_id asc; row 1 of the result IS the
-  * nearest_centroid answer). Exists because the aggregate formulation of
-  * top-m assignment (crossJoin fan-out + collect_list + sort_array)
-  * allocates N×k struct rows through an object-heavy aggregation —
-  * measured 168 s for the k = √N cell fallback at 121 k vectors where
-  * the per-row primitive loop does the same k×dims flops in seconds.
-  * Map-side only, zero shuffle: multi-probe assignment stays a pure
-  * scan at any corpus size (within the literal-matrix cap — past it use
-  * Ivf.assignTopAgg, the aggregate fallback).
+/** TOP-M nearest centroid ids by rounded cosine — the one centroid
+  * ranking of the vector layer: IVF assignment (m = 1), multi-cell
+  * spilling, query probe selection and the driver-local Lloyd loop all
+  * run [[NearestCentroids.topIds]] (SURVEY §4.2's "custom expression
+  * only if built-ins too slow" — profiling at sf6d said yes: the
+  * literal-argmax formulation — k separate
+  * `struct(round(cosine_fast(v, typedlit)), −cid)` expressions under one
+  * `array_max` — falls off a codegen/JIT cliff between k = 16 and k = 50,
+  * 0.39 s → 25.5 s for the same 122 k-vector scan, and the aggregate
+  * top-m formulation (crossJoin fan-out + collect_list + sort_array)
+  * measured 168 s for the k = √N cell fallback at 121 k vectors). The
+  * flat centroid matrix rides in as one literal and the k×dims loop runs
+  * over primitive arrays: map-side only, zero shuffle, so assignment
+  * stays a pure scan at any corpus size (within the literal-matrix cap —
+  * past it use Ivf.assignTopAgg, the aggregate fallback).
   *
-  * Rounding, nan-safe ordering, and the null contract match
-  * [[NearestCentroid]] exactly: a null / length-mismatched /
-  * null-element vector makes every per-centroid cosine null, and
-  * all-null ties resolve down the cent_id order — here the m lowest
-  * cent_ids. VectorSpec pins top-1 ≡ assign and the full order against
-  * the aggregate form.
+  * Bit-identical to the composition it replaces: sequential-sum dot and
+  * norms in element order with cos = dot/(√na·√nb) (√na is row-constant
+  * and √nb centroid-constant, so factoring them preserves the exact
+  * product CosineSimilarity computes), Spark's Round semantics at scale
+  * 6 ([[NearestCentroids.round6]]), and the (rounded cosine desc,
+  * cent_id asc) total order with Spark's nan-safe double ordering (NaN
+  * above all values). The null contract mirrors the struct form: a null
+  * / length-mismatched / null-element vector makes every per-centroid
+  * cosine null, and all-null ties resolve down the cent_id order — here
+  * the m lowest cent_ids. NativeExprSpec pins top-1 against the struct
+  * composition; VectorSpec pins the full order against the aggregate
+  * form.
   *
   * Arguments: (v array<double>, cvsFlat array<double> — k×dims
   * row-major, ascending cent_id —, cids array<bigint> ascending,
-  * m int). cvsFlat/cids/m must be foldable constants; 1 ≤ m ≤ k. */
+  * m int). cvsFlat/cids/m must be foldable constants; 1 ≤ m ≤ k.
+  *
+  * CodegenFallback: the per-row loop is plain compiled JVM code already;
+  * fusing it into generated Java would save only the virtual call. */
 case class NearestCentroids(vec: Expression, cvsExpr: Expression,
     cidsExpr: Expression, mExpr: Expression)
     extends Expression with CodegenFallback {
@@ -36,6 +49,9 @@ case class NearestCentroids(vec: Expression, cvsExpr: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
+  /** Model-size bound: k×dims doubles ride the plan as one literal; 1 << 20
+    * (8 MB) is far above the literal-path cap (Ivf.LiteralArgmaxMaxK × 64)
+    * but fails analysis on a typo'd matrix instead of OOMing the driver. */
   private val MaxFlat = 1 << 20
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -65,24 +81,9 @@ case class NearestCentroids(vec: Expression, cvsExpr: Expression,
   private lazy val cids: Array[Long] = cidsExpr.eval().asInstanceOf[ArrayData].toLongArray()
   private lazy val m: Int = mExpr.eval().asInstanceOf[Int]
   private lazy val dims: Int = cvs.length / cids.length
-  private lazy val nbSqrt: Array[Double] = Array.tabulate(cids.length) { j =>
-    var nb = 0.0
-    var i = 0
-    while (i < dims) { val y = cvs(j * dims + i); nb += y * y; i += 1 }
-    math.sqrt(nb)
-  }
+  private lazy val nbSqrt: Array[Double] = NearestCentroids.normSqrts(cvs, cids.length)
   private lazy val lowestCids: GenericArrayData =
     new GenericArrayData(cids.take(m).map(x => x: Any))
-
-  private def round6(d: Double): Double = NearestCentroids.round6(d)
-
-  private def gt(x: Double, y: Double): Boolean = {
-    val xn = java.lang.Double.isNaN(x); val yn = java.lang.Double.isNaN(y)
-    if ((xn && yn) || x == y) false
-    else if (xn) true
-    else if (yn) false
-    else x > y
-  }
 
   override def eval(input: InternalRow): Any = {
     val vAny = vec.eval(input)
@@ -91,9 +92,51 @@ case class NearestCentroids(vec: Expression, cvsExpr: Expression,
     if (vData.numElements() != dims) return lowestCids
     var i = 0
     while (i < dims) { if (vData.isNullAt(i)) return lowestCids; i += 1 }
-    val v = vData.toDoubleArray()
+    new GenericArrayData(
+      NearestCentroids.topIds(vData.toDoubleArray(), cvs, cids, nbSqrt, m).map(x => x: Any))
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): NearestCentroids =
+    copy(vec = newChildren(0), cvsExpr = newChildren(1),
+      cidsExpr = newChildren(2), mExpr = newChildren(3))
+}
+
+object NearestCentroids {
+
+  /** √norm per centroid of a flat row-major k×dims matrix, accumulated
+    * in element order — the exact factor CosineSimilarity's per-pair
+    * norm loop produces. */
+  def normSqrts(cvs: Array[Double], k: Int): Array[Double] = {
+    val dims = cvs.length / k
+    Array.tabulate(k) { j =>
+      var nb = 0.0
+      var i = 0
+      while (i < dims) { val y = cvs(j * dims + i); nb += y * y; i += 1 }
+      math.sqrt(nb)
+    }
+  }
+
+  /** Spark's nan-safe double ordering: NaN == NaN, NaN above all else. */
+  private def gt(x: Double, y: Double): Boolean = {
+    val xn = java.lang.Double.isNaN(x); val yn = java.lang.Double.isNaN(y)
+    if ((xn && yn) || x == y) false
+    else if (xn) true
+    else if (yn) false
+    else x > y
+  }
+
+  /** The per-row top-m kernel [[NearestCentroids.eval]] runs — public so
+    * the driver-local Lloyd loop (Ivf.train on a collected training set)
+    * assigns through the IDENTICAL compiled code instead of a
+    * reimplementation that could drift by an ulp. `v` must already be
+    * null-free and of matrix width (eval's null contract stays at the
+    * expression boundary); `nbSqrt` is [[normSqrts]] of `cvs`. */
+  def topIds(v: Array[Double], cvs: Array[Double], cids: Array[Long],
+      nbSqrt: Array[Double], m: Int): Array[Long] = {
+    val dims = cvs.length / cids.length
     var na = 0.0
-    i = 0
+    var i = 0
     while (i < dims) { val x = v(i); na += x * x; i += 1 }
     val naSqrt = math.sqrt(na)
     // insertion into the running top-m: centroids arrive in ascending
@@ -121,16 +164,8 @@ case class NearestCentroids(vec: Expression, cvsExpr: Expression,
       }
       j += 1
     }
-    new GenericArrayData(topId.map(x => x: Any))
+    topId
   }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): NearestCentroids =
-    copy(vec = newChildren(0), cvsExpr = newChildren(1),
-      cidsExpr = newChildren(2), mExpr = newChildren(3))
-}
-
-object NearestCentroids {
 
   /** Spark Round(d, 6) — BigDecimal.valueOf(d).setScale(6, HALF_UP) —
     * with a provably-equivalent fast path. The BigDecimal pipeline
@@ -150,8 +185,8 @@ object NearestCentroids {
     * disagree — the exact BigDecimal path runs. Cosines land in the
     * window with probability ~2e-4, so the amortized cost is the two
     * flops. NativeExprSpec-pinned against Spark's Round on boundary
-    * values; the NearestCentroid JVM-argmax spec (which rounds via
-    * BigDecimal) pins the composition. */
+    * values; the nearest_centroids struct-composition spec (which rounds
+    * via Spark Round) pins the composition. */
   /** Test hook: NativeExprSpec pins the fast path against Spark Round. */
   def round6Public(d: Double): Double = round6(d)
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * (v·v̂ = Σⱼ x·cⱼ, ‖v̂‖² = Σⱼ cⱼ·cⱼ) that `Pq.encodeWithStats` needs,
   * computed in a single primitive-array loop.
   *
-  * Why an expression (the [[NearestCentroid]] escalation, hit again at
+  * Why an expression (the [[NearestCentroids]] escalation, hit again at
   * PQ's own design point — r14): the previous formulation materialized
   * one `struct(lit − dot_fast(sv, typedlit), cid, dot, cc)` per
   * (subspace, codeword) under `array_min` — m×k expression nodes each

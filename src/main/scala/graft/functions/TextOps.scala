@@ -98,13 +98,6 @@ object TextOps {
       i => concat_ws(" ", slice(w, i, lit(k))))
   }
 
-  /** MinHash signature (nHashes seeded xxhash64 minima over the shingle
-    * set). Returns array<bigint> of length nHashes. */
-  def minhashSignature(shingles: Column, nHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(nHashes - 1)),
-      seed => array_min(transform(shingles, s => xxhash64(s, seed))))
-
   /** LSH band keys: hash each of nBands contiguous rows-per-band slices of
     * the signature. Docs sharing ANY band key are candidate pairs. */
   def lshBands(sig: Column, nBands: Int, rowsPerBand: Int): Column =

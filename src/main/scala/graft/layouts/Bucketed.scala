@@ -153,22 +153,34 @@ object Bucketed {
 
   /** Lifecycle: forget every persisted layout whose table name starts
     * with `namePrefix` — drops the catalog entries AND deletes the
-    * backing directories (markers, stamps, and compacted versions
+    * backing directories (markers, stamps, leases and compacted versions
     * included — a versioned dir name starts with its table name), so the
     * next ensure() rebuilds from source. The complement of the durability
     * contract: now that completed layouts survive JVM restarts, an owner
     * that WANTS a rebuild (ingest test fixtures, a corrupted append, the
     * mixed-stamp remedy) needs an explicit invalidation, not catalog
-    * amnesia. */
+    * amnesia.
+    *
+    * A database-qualified prefix (`graftbuckets_<tag>.<prefix>`, as
+    * [[ensure]] returns it) scopes the drop to that one database and its
+    * warehouse dir — the same layout name over another data dir lives
+    * under another tag and survives. An unqualified prefix matches in
+    * every graft database under the root (test clean-up). */
   def invalidate(s: SparkSession, namePrefix: String): Unit = {
     val c = hconf(s)
-    validatedLocations.keySet.removeIf(k =>
-      k.substring(k.indexOf('.') + 1).startsWith(namePrefix))
+    val (inDb, prefix) = namePrefix.split('.') match {
+      case Array(db, p) => ((d: String) => d == db, p)
+      case _ => ((d: String) => d.startsWith("graftbuckets_"), namePrefix)
+    }
+    validatedLocations.keySet.removeIf { k =>
+      val dot = k.indexOf('.')
+      inDb(k.substring(0, dot)) && k.substring(dot + 1).startsWith(prefix)
+    }
     s.catalog.listDatabases().collect()
-      .filter(_.name.startsWith("graftbuckets_"))
+      .filter(db => inDb(db.name))
       .foreach { db =>
         s.catalog.listTables(db.name).collect()
-          .filter(_.name.startsWith(namePrefix))
+          .filter(_.name.startsWith(prefix))
           .foreach { t =>
             val qname = s"${db.name}.${t.name}"
             s.sql(s"DROP TABLE IF EXISTS $qname")
@@ -179,10 +191,11 @@ object Bucketed {
       }
     val root = new Path(LayoutUtil.artifactRoot(s))
     LayoutFs.list(root, c)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graft_bucket_wh_"))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graft_bucket_wh_") &&
+        inDb("graftbuckets_" + st.getPath.getName.stripPrefix("graft_bucket_wh_")))
       .flatMap(st => LayoutFs.list(st.getPath, c))
-      .filter(st => st.getPath.getName.startsWith(namePrefix) ||
-        st.getPath.getName.startsWith(LeasePrefix + namePrefix))
+      .filter(st => st.getPath.getName.startsWith(prefix) ||
+        st.getPath.getName.startsWith(LeasePrefix + prefix))
       .foreach(st =>
         if (st.isDirectory) LayoutFs.deleteDir(st.getPath, c)
         else LayoutFs.delete(st.getPath, c))
@@ -928,19 +941,12 @@ object Bucketed {
     * this, so maintained files can never diverge from the layout they
     * extend, whatever count/sort the original ensure() used. */
   private[graft] def bucketSpecOf(s: SparkSession, qname: String): (Int, String, Seq[String]) = {
-    val desc = s.sql(s"DESC FORMATTED $qname").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def specCols(field: String): Seq[String] =
-      desc.getOrElse(field, "[]").stripPrefix("[").stripSuffix("]")
-        .split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
-        .filter(_.nonEmpty).toSeq
-    val buckets = desc("Num Buckets").trim.toInt
-    val key = specCols("Bucket Columns").head
-    val sortCols = specCols("Sort Columns") match {
-      case Seq() => Seq(key)
-      case cs => cs
-    }
-    (buckets, key, sortCols)
+    val spec = s.sessionState.catalog.getTableMetadata(
+      s.sessionState.sqlParser.parseTableIdentifier(qname)).bucketSpec.getOrElse(
+        throw new IllegalStateException(s"$qname is not a bucketed table"))
+    val key = spec.bucketColumnNames.head
+    (spec.numBuckets, key,
+      if (spec.sortColumnNames.isEmpty) Seq(key) else spec.sortColumnNames)
   }
 
   /** Refuse a delta whose (name, type) schema diverges from the layout
@@ -1388,11 +1394,8 @@ object Bucketed {
         if (healed.contains(true)) body else throw e
     }
 
-  /** Ensure a bucketed layout for `specs` derived from `dir` exists, return
-    * the fully qualified table names in input order. Idempotent and cheap
-    * after the first call (a catalog existence check per table). */
-  def ensure(s: SparkSession, dir: String, specs: Seq[Spec], buckets: Int = 8): Seq[String] = {
-    val c = hconf(s)
+  /** The content tag of `specs`' database and warehouse dir for `dir`. */
+  private def tagOf(dir: String, specs: Seq[Spec], buckets: Int): String = {
     // per-data-file signature (LayoutUtil.dataSig): the source paths are
     // parquet DIRECTORIES, whose own length/mtime need not change when a
     // part file is rewritten in place
@@ -1405,7 +1408,23 @@ object Bucketed {
       s"${sp.name}:${sp.key}:${sp.effectiveSortCols.mkString("+")}:" +
         sp.src.schema.map(f => f.name + ":" + f.dataType.sql).mkString(","))
       .mkString(";")
-    val tag = LayoutUtil.cacheId(s"$dir|$sig|$buckets|$specSig")
+    LayoutUtil.cacheId(s"$dir|$sig|$buckets|$specSig")
+  }
+
+  /** The qualified names [[ensure]] returns for these arguments, without
+    * building anything — what an owner passes to [[invalidate]] before
+    * its first ensure() call. */
+  def qualifiedNames(dir: String, specs: Seq[Spec], buckets: Int): Seq[String] = {
+    val tag = tagOf(dir, specs, buckets)
+    specs.map(sp => s"graftbuckets_$tag.${sp.name}")
+  }
+
+  /** Ensure a bucketed layout for `specs` derived from `dir` exists, return
+    * the fully qualified table names in input order. Idempotent and cheap
+    * after the first call (a catalog existence check per table). */
+  def ensure(s: SparkSession, dir: String, specs: Seq[Spec], buckets: Int = 8): Seq[String] = {
+    val c = hconf(s)
+    val tag = tagOf(dir, specs, buckets)
     val db = s"graftbuckets_$tag"
     val loc = s"${LayoutUtil.artifactRoot(s)}/graft_bucket_wh_$tag"
     val locPath = new Path(loc)

@@ -575,21 +575,22 @@ object Joins extends QueryGroup {
     * The orderkey-keyed delta split means a delta order arrives WITH its
     * delta lineitems, the realistic ingest shape. */
   def bucketedFactsIncremental(s: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    def build(): Seq[String] = {
-      val orders = Tables.orders(s, dir)
-      val lineitem = Tables.lineitem(s, dir)
-      val oDelta = pmod(xxhash64(col("o_orderkey")), lit(8)) === 0
-      val lDelta = pmod(xxhash64(col("l_orderkey")), lit(8)) === 0
-      val ts = graft.layouts.Bucketed.ensure(s, dir, Seq(
-        graft.layouts.Bucketed.Spec("orders_bi", orders.filter(!oDelta), "o_orderkey",
-          srcTables = Seq("orders")),
-        graft.layouts.Bucketed.Spec("lineitem_bi", lineitem.filter(!lDelta), "l_orderkey",
-          srcTables = Seq("lineitem"))),
-        buckets = graft.layouts.Bucketed.defaultBuckets(dir))
+    val orders = Tables.orders(s, dir)
+    val lineitem = Tables.lineitem(s, dir)
+    val oDelta = pmod(xxhash64(col("o_orderkey")), lit(8)) === 0
+    val lDelta = pmod(xxhash64(col("l_orderkey")), lit(8)) === 0
+    def layouts(): Seq[String] = graft.layouts.Bucketed.ensure(s, dir, Seq(
+      graft.layouts.Bucketed.Spec("orders_bi", orders.filter(!oDelta), "o_orderkey",
+        srcTables = Seq("orders")),
+      graft.layouts.Bucketed.Spec("lineitem_bi", lineitem.filter(!lDelta), "l_orderkey",
+        srcTables = Seq("lineitem"))),
+      buckets = graft.layouts.Bucketed.defaultBuckets(dir))
+    def appendDelta(ts: Seq[String]): Seq[String] = {
       graft.layouts.Bucketed.appendOnce(s, "delta-1of8", Seq(
         ts(0) -> orders.filter(oDelta), ts(1) -> lineitem.filter(lDelta)))
       ts
     }
+    val ts = layouts()
     // mixed-stamp self-heal, valid ONLY because this twin is
     // derive-from-source: base and delta are pure functions of the raw
     // tables, so the corruption remedy the refusal prescribes
@@ -597,11 +598,10 @@ object Joins extends QueryGroup {
     // arises from layouts stamped by a pre-r11 build (head-member-only
     // stamps, which the family rule reads as divergence). Real ingest,
     // whose deltas are NOT re-derivable, must surface the error instead.
-    try build() catch {
+    try appendDelta(ts) catch {
       case e: IllegalStateException if e.getMessage.contains("diverged") =>
-        graft.layouts.Bucketed.invalidate(s, "orders_bi")
-        graft.layouts.Bucketed.invalidate(s, "lineitem_bi")
-        build()
+        ts.foreach(graft.layouts.Bucketed.invalidate(s, _))
+        appendDelta(layouts())
     }
   }
 

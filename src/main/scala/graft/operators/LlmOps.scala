@@ -661,17 +661,15 @@ object LlmOps extends QueryGroup {
   }
 
   /** Each distinct query vector's top-4 centroids: `(q_id, cent_id, qv)`
-    * rows from the query groups and a `(cent_id, cv)` centroid table. */
-  private def knnProbes(qGrouped: DataFrame, cents: DataFrame): DataFrame = {
-    val q = qGrouped.select(col("rep_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-    q.crossJoin(broadcast(cents))
-      .withColumn("c", cosR("qv", "cv"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 4)
-      .select(col("q_id"), col("cent_id"), col("qv"))
-  }
+    * rows from the query groups and a `(cent_id, cv)` centroid table.
+    * `cells` is never empty, so `explode_outer` yields the rows `explode`
+    * would; an inner explode of the alias makes the optimizer infer a
+    * `size(cells) > 0` filter below the projection, which runs the
+    * kernel a second time per query. */
+  private def knnProbes(qGrouped: DataFrame, cents: DataFrame): DataFrame =
+    graft.etl.Ivf.assignTop(qGrouped.select(col("rep_id").as("vec_id"), col("v")), cents, 4)
+      .select(col("vec_id").as("q_id"), explode_outer(col("cells")).as("cent_id"),
+        col("v").as("qv"))
 
   /** Member fan-out of the IVF kNN rows: `candExp` holds each distinct
     * query's candidates expanded to member ids `(q_id, vec_id, cos_sim)`;
@@ -955,13 +953,11 @@ object LlmOps extends QueryGroup {
       WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.9
       ORDER BY vec_a ASC NULLS FIRST, vec_b ASC NULLS FIRST"""))
 
-  /** The single-query ANN rows' top-4 probe cells: `(cent_id, c)` for a
-    * `(cent_id, cv)` centroid table and a one-row `qv` query. */
+  /** The single-query ANN rows' top-4 probe cell ids for a `(cent_id,
+    * cv)` centroid table and a one-row `(vec_id, v)` query
+    * (`explode_outer`: see [[knnProbes]]). */
   private def annProbes(cents: DataFrame, q: DataFrame): DataFrame =
-    cents.crossJoin(broadcast(q))
-      .select(col("cent_id"), cosR("cv", "qv").as("c"))
-      .orderBy(col("c").desc_nulls_last, col("cent_id").asc_nulls_first)
-      .limit(4)
+    graft.etl.Ivf.assignTop(q, cents, 4).select(explode_outer(col("cells")).as("cent_id"))
 
   /** The persisted ANN rows' last stage: exact top-5 reps of `cands`
     * `(vec_id, v, members)` against the one-row `qv` query, expanded to
@@ -1039,8 +1035,9 @@ object LlmOps extends QueryGroup {
       val reps = grouped.select(col("rep_id").as("vec_id"), col("v"))
       val cents = graft.etl.Ivf.train(reps, k = 16, iters = 2)
       val assigned = graft.etl.Ivf.assign(reps, cents)
-      val q = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val probes = annProbes(cents, q).select("cent_id")
+      val qRow = vecs.filter(col("vec_id") === 0)
+      val q = qRow.select(col("v").as("qv"))
+      val probes = annProbes(cents, qRow)
       val repTop = assigned
         .join(broadcast(probes), "cent_id")
         .crossJoin(broadcast(q))
@@ -1130,11 +1127,12 @@ object LlmOps extends QueryGroup {
     (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val (idxPath, centsPath) = persistedIvfIndex(s, dir)
-      val q = docVec(s, dir).filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val qRow = docVec(s, dir).filter(col("vec_id") === 0)
+      val q = qRow.select(col("v").as("qv"))
       // probe selection: centroids are k×dims model params (the Ivf.assign
-      // pattern) — a 16-row job picks the top-4 probe ids, which enter the
+      // pattern) — the top-4 probe ids are picked map-side and enter the
       // scan as LITERALS so Catalyst prunes partitions statically
-      val probeIds = annProbes(graft.layouts.IvfIndex.serve(s, centsPath), q)
+      val probeIds = annProbes(graft.layouts.IvfIndex.serve(s, centsPath), qRow)
         .collect().map(_.getLong(0)).toSeq
       val pruned = graft.layouts.IvfIndex.serve(s, idxPath)
         .filter(col("cent_id").isin(probeIds: _*))
@@ -3072,20 +3070,6 @@ object LlmOps extends QueryGroup {
     cents.map { case (cid, cv) => (jvmCos(q, cv), cid) }
       .sortBy { case (c, cid) => (-c, cid) }.take(n).map(_._2)
 
-  /** The round-6 ADC cosine column over (codes, recon_norm2) attributes —
-    * implementation moved to [[graft.etl.Pq.adcCosCol]] in r16 (housed
-    * with the quantizer so the etl-layer gradedness preflight and the
-    * layouts-layer index build can share it without a layouts→operators
-    * dependency); this forwarder keeps the operator-surface call sites
-    * (probe tools, parity specs) stable. */
-  private[graft] def adcCosCol(books: Seq[graft.etl.Pq.Codebook], q: Seq[Double]): Column =
-    graft.etl.Pq.adcCosCol(books, q)
-
-  /** Forwarder — see [[graft.etl.Pq.adcTableRow]]. */
-  private[graft] def adcTableRow(book: graft.etl.Pq.Codebook,
-      qj: Seq[Double]): Seq[Double] =
-    graft.etl.Pq.adcTableRow(book, qj)
-
   /** The trained quantizer models the inline ANN rows share: PQ codebooks
     * (m=8, k=16, 4 Lloyd rounds) and IVF coarse centroids (k=16, 2
     * rounds) over the dedup-first representatives of `dir`'s embeddings. */
@@ -3173,7 +3157,7 @@ object LlmOps extends QueryGroup {
   private def adcTop10(coded: DataFrame, books: Seq[graft.etl.Pq.Codebook],
       q: Seq[Double]): DataFrame =
     coded
-      .withColumn("adc_cos", adcCosCol(books, q))
+      .withColumn("adc_cos", graft.etl.Pq.adcCosCol(books, q))
       .select(col("vec_id"), col("adc_cos"))
       .orderBy(col("adc_cos").desc, col("vec_id").asc)
       .limit(10)
@@ -3369,7 +3353,7 @@ object LlmOps extends QueryGroup {
       // lists, the candidate set a serving node holds in memory)
       val short = graft.layouts.PqIndex.serve(s, art.codes)
         .filter(col("cent_id").isin(probes: _*))
-        .withColumn("adc_cos", adcCosCol(books, q))
+        .withColumn("adc_cos", graft.etl.Pq.adcCosCol(books, q))
         .orderBy(col("adc_cos").desc, col("vec_id").asc)
         .limit(50)
         .select(col("vec_id"), col("members"))

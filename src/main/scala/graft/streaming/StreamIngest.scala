@@ -60,21 +60,23 @@ object StreamIngest {
     val root = s"${LayoutUtil.artifactRoot(s)}/graft_stream_ingest_$sig"
     val srcDir = s"$root/src"
 
+    // spec name carries the TAG-SCHEME version: a scheme change must
+    // rotate the layout (old stamps would otherwise mask or double new
+    // appends), exactly like the src/ckpt signature suffix above
+    val spec = Seq(Bucketed.Spec("events_si2", events.filter(!isDelta), "user_id",
+      srcTables = Seq("events"), sortCols = Seq("user_id", "ts", "event_id")))
+    val buckets = Bucketed.defaultBuckets(dir, "events")
+
     // stage the "arriving crawl files" EXACTLY once (3 parquet files). A
-    // fresh dump mints fresh file names, so appends a layout holds from
-    // an earlier dump pair with no staged file: drop it with the dump.
+    // fresh dump mints fresh file names, so appends this dir's layout
+    // holds from an earlier dump pair with no staged file: drop it with
+    // the dump.
     LayoutUtil.buildOnce(s, sig, Seq(srcDir)) {
-      Bucketed.invalidate(s, "events_si2")
+      Bucketed.qualifiedNames(dir, spec, buckets).foreach(Bucketed.invalidate(s, _))
       events.filter(isDelta).repartition(3).write.parquet(srcDir)
     }
 
-    val t = Bucketed.ensure(s, dir, Seq(
-      // spec name carries the TAG-SCHEME version: a scheme change must
-      // rotate the layout (old stamps would otherwise mask or double new
-      // appends), exactly like the src/ckpt signature suffix above
-      Bucketed.Spec("events_si2", events.filter(!isDelta), "user_id",
-        srcTables = Seq("events"), sortCols = Seq("user_id", "ts", "event_id"))),
-      buckets = Bucketed.defaultBuckets(dir, "events")).head
+    val t = Bucketed.ensure(s, dir, spec, buckets).head
 
     val srcFiles = LayoutFs.listNames(new Path(srcDir), conf)
       .filter(_.endsWith(".parquet")).sorted

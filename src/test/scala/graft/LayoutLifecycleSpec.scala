@@ -365,6 +365,33 @@ class LayoutLifecycleSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("invalidate by qualified name drops only that data dir's layout: the " +
+      "same layout name over another data dir keeps its table, marker and " +
+      "warehouse dir") {
+    val copies = Seq("a", "b").map { c =>
+      val d = Files.createTempDirectory(s"graft_scope_$c")
+      org.apache.commons.io.FileUtils.copyToDirectory(
+        new java.io.File(s"$dir/orders.parquet"), d.toFile)
+      d.toString
+    }
+    try {
+      val Seq(ta, tb) = copies.map { d =>
+        Bucketed.ensure(spark, d, Seq(Bucketed.Spec("scope_lspec", Tables.orders(spark, d),
+          "o_orderkey", srcTables = Seq("orders"))), buckets = 4).head
+      }
+      assert(ta != tb)
+      val (da, db) = (localDir(ta), localDir(tb))
+      Bucketed.invalidate(spark, ta)
+      assert(!spark.catalog.tableExists(ta) && !da.exists, s"$ta was not dropped")
+      assert(spark.catalog.tableExists(tb), s"$tb was dropped with $ta")
+      assert(new java.io.File(db, "_GRAFT_COMPLETE").isFile, s"$tb lost its marker")
+      assert(spark.table(tb).count() == Tables.orders(spark, dir).count())
+    } finally {
+      Bucketed.invalidate(spark, "scope_lspec")
+      copies.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    }
+  }
+
   test("every artifact graft writes lives under spark.graft.layout.root, and " +
       "buildOnce rebuilds exactly when a part's stamp is missing or differs") {
     import graft.layouts.LayoutUtil

@@ -277,8 +277,8 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
         lit(-cid).as("negid"))
     }
     val both = vecs
-      .withColumn("fast", call_function("nearest_centroid", col("v"),
-        typedlit(tied.flatMap(_._2)), typedlit(tied.map(_._1))))
+      .withColumn("fast", call_function("nearest_centroids", col("v"),
+        typedlit(tied.flatMap(_._2)), typedlit(tied.map(_._1)), lit(1)).getItem(0))
       .withColumn("slow", -array_max(array(composed: _*)).getField("negid"))
       .select("fast", "slow").collect()
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
@@ -363,7 +363,7 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
     val q = vecs.filter(col("vec_id") === 3).head.getSeq[Double](1)
     val sub = models.dims / models.books.size
     val tables = models.books.zipWithIndex.map { case (book, j) =>
-      graft.operators.LlmOps.adcTableRow(book, q.slice(j * sub, (j + 1) * sub))
+      graft.etl.Pq.adcTableRow(book, q.slice(j * sub, (j + 1) * sub))
     }
     // the r6–r12 composition, verbatim: m chained element_at over the
     // per-subspace typedlit tables, left-fold sum

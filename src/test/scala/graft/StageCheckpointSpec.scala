@@ -31,11 +31,11 @@ class StageCheckpointSpec extends AnyFunSuite with SparkTestBase {
     out.unpersist(blocking = false)
   }
 
-  test("with a checkpoint dir: reliable checkpoint (survives executor " +
-      "loss) — the 100 TB production path; same values") {
-    // a private local[1] session in its own JVM: the checkpoint dir is
-    // per SparkContext, one context runs per JVM, and SparkContext has no
-    // way to unset it — the shared session never sees a dir this way
+  /** Runs [[StageCheckpointSpec.main]] in a private local[1] JVM: the
+    * checkpoint dir is per SparkContext, one context runs per JVM, and
+    * SparkContext has no way to unset it — the shared session never sees
+    * a dir this way. Asserts the child printed `ok`. */
+  private def childRun(cleanCheckpoints: Boolean, ok: String): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
     try {
       val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
@@ -43,35 +43,54 @@ class StageCheckpointSpec extends AnyFunSuite with SparkTestBase {
         .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
       val cmd = Seq(javaBin.toString, "-Xmx1g") ++ jvmArgs ++ Seq(
         "-cp", System.getProperty("java.class.path"),
-        "graft.StageCheckpointSpec", dir.toString, sf)
+        "graft.StageCheckpointSpec", dir.toString, sf, cleanCheckpoints.toString)
       val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
       val log = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      assert(p.waitFor() == 0 && log.contains(StageCheckpointSpec.Ok),
-        s"reliable-checkpoint JVM failed:\n${log.takeRight(4000)}")
+      assert(p.waitFor() == 0 && log.contains(ok),
+        s"checkpoint JVM failed:\n${log.takeRight(4000)}")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
+  }
+
+  test("with a checkpoint dir: reliable checkpoint (survives executor " +
+      "loss) — the 100 TB production path; same values") {
+    childRun(cleanCheckpoints = true, StageCheckpointSpec.Ok)
+  }
+
+  test("a checkpoint dir on a session without cleanCheckpoints: stage " +
+      "raises instead of leaving every stage's files behind") {
+    childRun(cleanCheckpoints = false, StageCheckpointSpec.Refused)
   }
 }
 
 object StageCheckpointSpec {
   val Ok = "reliable checkpoint: ok"
+  val Refused = "checkpoint dir without cleanCheckpoints: refused"
 
   def stageInput(s: org.apache.spark.sql.SparkSession, sf: String) =
     Tables.documents(s, sf).groupBy(col("lang")).agg(count(lit(1)).as("n"))
 
-  /** The reliable-checkpoint case, run in a fresh JVM by the suite:
-    * `args(0)` is the checkpoint dir, `args(1)` the data dir. Prints
-    * [[Ok]] once every check passes; a failed check throws (non-zero
-    * exit). */
+  /** The checkpoint-dir cases, run in a fresh JVM by the suite:
+    * `args(0)` is the checkpoint dir, `args(1)` the data dir, `args(2)`
+    * the session's `cleanCheckpoints` flag. Prints [[Ok]] (flag set) or
+    * [[Refused]] (flag unset) once every check passes; a failed check
+    * throws (non-zero exit). */
   def main(args: Array[String]): Unit = {
     import org.scalatest.Assertions._
-    val Array(ckptDir, sf) = args
-    val spark = GraftSession.builder(1, sf).getOrCreate()
+    val Array(ckptDir, sf, clean) = args
+    val spark = GraftSession.builder(1, sf)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", clean).getOrCreate()
     try {
       spark.sparkContext.setLogLevel("WARN")
       spark.sparkContext.setCheckpointDir(ckptDir)
       val in = stageInput(spark, sf)
+      if (clean != "true") {
+        val e = intercept[IllegalStateException](StageCheckpoint.stage(in))
+        assert(e.getMessage.contains("cleanCheckpoints"), e.getMessage)
+        println(Refused)
+        return
+      }
       val out = StageCheckpoint.stage(in)
       assert(out.queryExecution.logical.getClass.getSimpleName == "LogicalRDD")
       assert(out.storageLevel == StorageLevel.NONE)

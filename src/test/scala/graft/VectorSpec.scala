@@ -323,8 +323,8 @@ class VectorSpec extends AnyFunSuite with SparkTestBase {
     val cents = graft.etl.Ivf.train(reps, k = 8, iters = 2)
     val viaLit = graft.etl.Ivf.assign(reps, cents)
       .select("vec_id", "cent_id").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val viaJoin = graft.etl.Ivf.assignJoin(reps, cents)
-      .select("vec_id", "cent_id").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val viaJoin = graft.etl.Ivf.assignTopAgg(reps, cents, 1)
+      .select("vec_id", "cells").collect().map(r => (r.getLong(0), r.getSeq[Long](1).head)).toMap
     assert(viaLit == viaJoin, "literal and join assignment branches disagree")
     // assignTop: cells[0] IS the assign answer (same rounded-cosine +
     // lowest-cent_id total order), cells are distinct per vector, and
@@ -387,7 +387,8 @@ class VectorSpec extends AnyFunSuite with SparkTestBase {
       df.select("vec_id", "cent_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
     val viaLit = asMap(graft.etl.Ivf.assign(vecs, cents))
-    val viaJoin = asMap(graft.etl.Ivf.assignJoin(vecs, cents))
+    val viaJoin = graft.etl.Ivf.assignTopAgg(vecs, cents, 1).select("vec_id", "cells")
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).head)).toMap
     assert(viaLit == viaJoin, "assign branches disagree on NaN cosines")
     // dead centroid wins everywhere (NaN above all), zero-norm vector
     // ties everywhere → lowest cent_id... but cent 7 is itself NaN → 7
@@ -409,7 +410,7 @@ class VectorSpec extends AnyFunSuite with SparkTestBase {
   test("Ivf.train strategies: driver-local Lloyd ≡ distributed Lloyd, " +
       "centroid for centroid, on a real corpus") {
     // r17: small unsampled training sets collect once and iterate on the
-    // driver (same nearest_centroid kernel, Spark-Decimal means). The cut
+    // driver (same nearest_centroids kernel, Spark-Decimal means). The cut
     // must be invisible in the model: compare against the distributed
     // loop on the real embeddings — genuine doubles, not round literals.
     import org.apache.spark.sql.functions._
